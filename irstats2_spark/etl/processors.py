@@ -110,7 +110,10 @@ def search_terms(
         & F.col("referring_entity_id").isNotNull()
         & (F.col("referring_entity_id") != "")
     ).withColumn("__ref", percent_decode(F.col("referring_entity_id")))
-    words = extract_search_terms(src, "__ref", base_url=base_url, stopwords=stopwords)
+    # silver arrives hash-partitioned by repeat_filter: no partition probe
+    words = extract_search_terms(
+        src, "__ref", base_url=base_url, stopwords=stopwords, parallelize=False
+    )
     return _fact(words, F.col("referent_id"), F.col("word"))
 
 

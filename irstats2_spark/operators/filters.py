@@ -44,8 +44,6 @@ MINIMAL_ROBOT_UA_PATTERNS = [
     "semrushbot", "ahrefsbot", "mj12bot", "dotbot", "petalbot", "bot/",
     "robot", "nutch", "heritrix",
 ]
-# retained name: pre-round-2 alias for the fallback list
-DEFAULT_ROBOT_UA_PATTERNS = MINIMAL_ROBOT_UA_PATTERNS
 
 
 @functools.lru_cache(maxsize=None)
@@ -174,7 +172,6 @@ def repeat_filter(
     epoch_col: str = "epoch",
     key_cols: tuple[str, str, str] = ("referent_id", "referent_docid", "requester_id"),
     timeout: int = 3600,
-    hybrid: bool = True,
 ) -> DataFrame:
     """P9 exact semantics: per-key sequential fold.
 
@@ -189,9 +186,6 @@ def repeat_filter(
     a partition, keys are high-cardinality (they embed the client IP), and
     Python sees each row exactly once: this is the same shuffle count as
     the lag()-window approximation, with exact reference semantics.
-
-    ``hybrid`` is retained for API compatibility and ignored (the
-    single-pass plan beats the old light/heavy split in all regimes).
     """
     epid, docid, ip = key_cols
     keyed = df.withColumn("__rk", repeat_key(F.col(epid), F.col(docid), F.col(ip)))

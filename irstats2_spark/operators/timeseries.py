@@ -1,10 +1,11 @@
-"""Time-series post-processing operators (SURVEY.md §2.5).
+"""Time-series operators over day-grain aggregates (SURVEY.md §2.5), as
+DataFrame ops for callers that keep a series in Spark: T2 calendar
+densify and A6+A7 cumulative / running average.
 
-The reference does these in Perl over the collected result set
-(View/Google/Graph.pm, Utils.pm:135-215); here they are DataFrame ops that
-run AFTER aggregation to day/month grain, so window inputs are |days| rows,
-never |events| — at 100 TB the series is still only a few thousand rows and
-a single-partition window over it is intentional and cheap.
+The report views do not use them: plans/views collects the day-grain
+grouped sum once and shapes the series on the driver, as the reference
+does in Perl (View/Google/Graph.pm, Utils.pm:135-215). The window here
+runs over |days| rows in one partition, never |events|.
 """
 
 from __future__ import annotations
@@ -41,28 +42,6 @@ def densify_days(
     return joined.withColumn(value_col, F.coalesce(F.col(value_col), F.lit(0)))
 
 
-def densify_months(
-    spark: SparkSession,
-    monthly: DataFrame,
-    month_col: str,
-    value_col: str,
-    start: str,
-    end: str,
-) -> DataFrame:
-    """T2 at month resolution: calendar of month-start dates."""
-    months = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.trunc(F.lit(start).cast("date"), "month"),
-                F.trunc(F.lit(end).cast("date"), "month"),
-                F.expr("interval 1 month"),
-            )
-        ).alias(month_col)
-    )
-    joined = months.join(monthly, on=month_col, how="left")
-    return joined.withColumn(value_col, F.coalesce(F.col(value_col), F.lit(0)))
-
-
 def with_cumulative_and_average(
     df: DataFrame, date_col: str, value_col: str
 ) -> DataFrame:
@@ -75,29 +54,3 @@ def with_cumulative_and_average(
     return df.withColumn("cumulative", cum).withColumn(
         "running_avg", (cum / F.row_number().over(wn)).cast("long")
     )
-
-
-def trim_leading_zeros(df: DataFrame, date_col: str, value_col: str) -> DataFrame:
-    """T4 (View/Google/Spark.pm:50-53): drop rows before the first nonzero
-    value — a running max over a seen-nonzero flag.
-    """
-    w = Window.orderBy(date_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flag = F.max(F.when(F.col(value_col) > 0, 1).otherwise(0)).over(w)
-    return (
-        df.withColumn("__seen", flag)
-        .filter(F.col("__seen") == 1)
-        .drop("__seen")
-    )
-
-
-def truncate_to_resolution(col, resolution: str):
-    """T1 (Graph.pm:44-69): truncate a date column to day|month|year and
-    format the reference's series label.
-    """
-    if resolution == "day":
-        return F.date_format(col, "yyyy-MM-dd")
-    if resolution == "month":
-        return F.date_format(F.date_trunc("month", col), "yyyy-MM")
-    if resolution == "year":
-        return F.date_format(F.date_trunc("year", col), "yyyy")
-    raise ValueError(f"unknown date_resolution: {resolution}")

@@ -11,7 +11,9 @@ Reproduces Handler.pm's three extract paths as declarative plans:
 Plus the documented optimizations:
 - cache-table rewrite (Data.pm:128-139): undated lifetime queries
   retargeted to the cache_* facts;
-- pre-live-date clamp (Handler.pm:233-263) for single-eprint queries;
+- pre-live-date clamp (Handler.pm:233-263) for single-eprint queries,
+  compiled as a broadcast semi-join to the eprint's live date, so that
+  compiling a Context never runs a Spark job;
 - archive-only semi-join (Handler.pm:356-361);
 - ORDER BY + LIMIT compiled together => TakeOrderedAndProject.
 
@@ -62,31 +64,6 @@ def _apply_dates(df: DataFrame, from_i: int | None, to_i: int | None) -> DataFra
     return df
 
 
-def _live_date_clamp(
-    store: StatsStore, eprintid: int, from_i: int | None, today=None
-) -> int | None:
-    """P4 (Handler.pm:233-263): raise `from` to the eprint's go-live date;
-    an eprint with no live date yet yields an empty window (from=tomorrow).
-
-    Driver-side single-row lookup against the (small) eprints dim — one
-    broadcastable probe per query, never per row.
-    """
-    import datetime as dt
-
-    if store.eprints is None:
-        return from_i
-    row = (
-        store.eprints.filter(F.col("eprintid") == eprintid)
-        .select(F.date_format("datestamp", "yyyyMMdd").cast("int").alias("live"))
-        .head()
-    )
-    today = today or dt.date.today()
-    tomorrow = int((today + dt.timedelta(days=1)).strftime("%Y%m%d"))
-    if row is None or row.live is None:
-        return tomorrow
-    return max(from_i or 0, row.live) or None
-
-
 def compile_context(
     store: StatsStore,
     ctx: Context,
@@ -120,8 +97,17 @@ def compile_context(
 
     if is_eprint_path and ctx.set_value is not None:
         epid = int(ctx.set_value)
-        from_i = _live_date_clamp(store, epid, from_i, today=today)
         fact = fact.filter(F.col("eprintid") == epid)
+        if store.eprints is not None:
+            # P4 (Handler.pm:233-263): keep only days from the eprint's
+            # go-live date on; no live date (or no eprints row) matches
+            # nothing, an empty window
+            live = store.eprints.filter(F.col("eprintid") == epid).select(
+                F.date_format("datestamp", "yyyyMMdd").cast("int").alias("live")
+            )
+            fact = fact.join(
+                F.broadcast(live), F.col("datestamp") >= F.col("live"), "left_semi"
+            )
 
     fact = _apply_dates(fact, from_i, to_i)
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
 from irstats2_spark.plans.context import Context, QueryOptions
+from irstats2_spark.sources.export import records
 
 # Context.pm:14-25 — the request fields that flow into the Context;
 # everything else in the query string is a view option.
@@ -143,6 +144,14 @@ _EXPORT_MIMETYPES = {
 }
 
 
+def _export(fmt: str, columns: list[str], rows: list[tuple]) -> tuple[int, str, str]:
+    """A result as a CSV / JSON / XML export response."""
+    from irstats2_spark.sources import export
+
+    body = getattr(export, f"to_{fmt.lower()}")(columns, rows)
+    return 200, _EXPORT_MIMETYPES[fmt], body
+
+
 def _render_view(
     spark: SparkSession,
     store: StatsStore,
@@ -150,15 +159,16 @@ def _render_view(
     view: str,
     opts: dict[str, str],
     today: dt.date | None,
-) -> DataFrame:
+) -> tuple[list[str], list[tuple]]:
     """View dispatch (get:53-58 instantiates Stats::View::<view>);
-    routing mirrors plans/report.run_report's per-plugin arms."""
-    from irstats2_spark.plans.views import graph_series, sparkline_series
+    routing mirrors plans/report.run_report's per-plugin arms. Returns
+    the view's ``(columns, rows)``: every view is one compiled grouped
+    sum, collected once, here or in its plans/views row builder."""
+    from irstats2_spark.plans.views import graph_rows, sparkline_rows, top_table
 
     view = view.split("::")[-1]  # 'Google::Graph' -> 'Graph'
     if view == "Graph":
-        return graph_series(
-            spark,
+        return graph_rows(
             store,
             ctx,
             resolution=opts.get("date_resolution", "day"),
@@ -167,25 +177,19 @@ def _render_view(
             today=today,
         )
     if view == "Spark":
-        return sparkline_series(spark, store, ctx, today=today)
+        return sparkline_rows(store, ctx, today=today)
     if view == "Counter":
-        return sum_all(compile_context(store, ctx, today=today))
-    if view == "GeoChart":
-        return compile_context(
-            store, replace(ctx, grouping="value"), today=today
+        df = sum_all(compile_context(store, ctx, today=today))
+    elif view == "GeoChart":
+        df = compile_context(store, replace(ctx, grouping="value"), today=today)
+    elif view in ("Table", "PieChart"):
+        df = top_table(
+            store, ctx, opts.get("top", "eprint"), opts.get("limit", "10"),
+            today=today,
         )
-    if view in ("Table", "PieChart"):
-        limit = opts.get("limit", "10")
-        qopts = QueryOptions(limit=None if limit == "all" else int(limit))
-        top = opts.get("top", "eprint")
-        if top == "eprint":
-            ctx = replace(ctx, grouping="eprint")
-        elif top == ctx.datatype:
-            ctx = replace(ctx, grouping="value")
-        else:
-            ctx = replace(ctx, grouping=top)
-        return compile_context(store, ctx, qopts, today=today)
-    raise KeyError(view)
+    else:
+        raise KeyError(view)
+    return df.columns, df.collect()
 
 
 def handle_get(
@@ -204,43 +208,40 @@ def handle_get(
     ``plans.report.ResultCache`` to enable the get:76-99 behavior."""
     import json as _json
 
-    from irstats2_spark.sources.export import to_csv, to_json, to_xml
-
     params = dict(params or {})
     ctx, opts = context_from_request(uri, params)
     view = opts.get("view")
     if view is None:
         return 400, "text/html", "<p>IRStats2: missing parameters in request.</p>"
+    export = opts.get("export")
+    # cache key = md5 of the canonical sorted request params (get:80,
+    # Utils.pm:676-692) — ResultCache implements it
+    key_params = {**params, "__uri": uri}
+    cached = (
+        cache is not None
+        and ctx.cache
+        and export is None
+        and view.split("::")[-1] in CACHE_ENABLED_VIEWS
+    )
+    if cached:
+        hit = cache.get(key_params)
+        if hit is not None:
+            return 200, "application/json", _json.dumps(hit)
     try:
-        df = _render_view(spark, store, ctx, view, opts, today)
+        columns, rows = _render_view(spark, store, ctx, view, opts, today)
     except KeyError:
         safe = re.sub(r"[<>&]", "", view)
         return 400, "text/html", f"<p>IRStats2: unknown view <strong>{safe}</strong></p>"
 
-    export = opts.get("export")
     if export is not None:
-        fmt = export.upper()
-        if fmt == "CSV":
-            return 200, _EXPORT_MIMETYPES[fmt], to_csv(df)
-        if fmt == "JSON":
-            return 200, _EXPORT_MIMETYPES[fmt], to_json(df)
-        if fmt == "XML":
-            return 200, _EXPORT_MIMETYPES[fmt], to_xml(df)
-        return 400, "text/html", "<p>IRStats2: unknown export format</p>"
+        if export.upper() not in _EXPORT_MIMETYPES:
+            return 400, "text/html", "<p>IRStats2: unknown export format</p>"
+        return _export(export.upper(), columns, rows)
 
-    base_view = view.split("::")[-1]
-    if cache is not None and ctx.cache and base_view in CACHE_ENABLED_VIEWS:
-        # cache key = md5 of the canonical sorted request params
-        # (get:80, Utils.pm:676-692) — ResultCache implements it
-        key_params = {**{k: v for k, v in params.items()}, "__uri": uri}
-        hit = cache.get(key_params)
-        if hit is not None:
-            return 200, "application/json", _json.dumps(hit)
-        rows = [r.asDict(recursive=True) for r in df.collect()]
-        cache.put(key_params, rows)
-        return 200, "application/json", _json.dumps(rows)
-    body = _json.dumps([r.asDict(recursive=True) for r in df.collect()])
-    return 200, "application/json", body
+    body_rows = records(columns, rows)
+    if cached:
+        cache.put(key_params, body_rows)
+    return 200, "application/json", _json.dumps(body_rows)
 
 
 # browse:60-66 — view-path id -> set name; 'year' routes to a date range
@@ -276,7 +277,7 @@ def handle_browse(
         if viewid == "institution":
             key = key.replace("_", " ")
         ctx = Context(datatype="downloads", set_name=setid, set_value=key)
-    df = _render_view(
+    columns, rows = _render_view(
         spark,
         store,
         ctx.sanitized(),
@@ -284,8 +285,7 @@ def handle_browse(
         {"date_resolution": "month", "graph_type": "column"},
         today,
     )
-    body = _json.dumps([r.asDict(recursive=True) for r in df.collect()])
-    return 200, "application/json", body
+    return 200, "application/json", _json.dumps(records(columns, rows))
 
 
 def handle_fp_stats(
@@ -342,8 +342,6 @@ def handle_export(
     exactly ONE of set_name/set_value is present, both are dropped),
     ``format`` required, full compiled selection exported in the
     format's content type."""
-    from irstats2_spark.sources.export import to_csv, to_json, to_xml
-
     params = dict(params or {})
     fields = parse_stats_uri(uri)
     for k, v in params.items():
@@ -374,8 +372,7 @@ def handle_export(
     df = compile_context(
         store, ctx, QueryOptions(fields=("datestamp",)), today=today
     )
-    body = {"CSV": to_csv, "JSON": to_json, "XML": to_xml}[fmt](df)
-    return 200, _EXPORT_MIMETYPES[fmt], body
+    return _export(fmt, df.columns, df.collect())
 
 
 def handle_set_finder(

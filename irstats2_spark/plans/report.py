@@ -28,31 +28,29 @@ from dataclasses import replace
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
-from irstats2_spark.plans.context import Context, QueryOptions
-from irstats2_spark.plans.registry import Registry, ReportItem
-from irstats2_spark.plans.views import graph_series, key_figures
+from irstats2_spark.plans.context import Context
+from irstats2_spark.plans.registry import Registry
+from irstats2_spark.plans.views import graph_series, key_figures, top_table
 
 
-def _run_table(
-    store: StatsStore, ctx: Context, item: ReportItem
-) -> DataFrame:
-    """Table.pm:37-89 routing: `top` selects the grouping axis."""
-    top = item.options.get("top", "eprint")
-    limit = item.options.get("limit", 10)
-    opts = QueryOptions(
-        limit=None if limit == "all" else int(limit),
-        data_min=item.options.get("data_min"),
-    )
-    if top == "eprint":
-        ctx = replace(ctx, grouping="eprint")
-    elif top == item.datatype:
-        ctx = replace(ctx, grouping="value")
-    else:  # a set name: top authors/divisions/... (grouping join)
-        ctx = replace(ctx, grouping=top)
-    return compile_context(store, ctx, opts)
+def _visible_items(rdef, base: Context, privileges):
+    """(key, item) for each item of a report the context may see:
+    per-item gating (Report.pm:112-117, z_irstats2.pl:431-434)."""
+    for i, item in enumerate(rdef.items):
+        if item.priv is not None and item.priv not in privileges:
+            continue
+        if item.appears is not None and base.set_name not in item.appears:
+            continue
+        yield f"{i}_{item.plugin.lower()}_{item.datatype}", item
+
+
+def _key_figures(store: StatsStore, registry: Registry, today) -> dict[str, int]:
+    metrics = {m.name: m.context for m in registry.metrics.values()
+               if m.context.datatype in store.facts}
+    return key_figures(store, metrics, today=today)
 
 
 def run_report(
@@ -71,23 +69,15 @@ def run_report(
     rdef = registry.reports[report]
     base = base_context or Context()
     out: dict[str, object] = {}
-    for i, item in enumerate(rdef.items):
-        # per-item gating (Report.pm:112-117, z_irstats2.pl:431-434)
-        if item.priv is not None and item.priv not in privileges:
-            continue
-        if item.appears is not None and base.set_name not in item.appears:
-            continue
+    for key, item in _visible_items(rdef, base, privileges):
         ctx = replace(
             base,
             datatype=item.datatype,
             datafilter=item.datafilter,
             grouping=item.grouping or base.grouping,
         )
-        key = f"{i}_{item.plugin.lower()}_{item.datatype}"
         if item.plugin == "KeyFigures":
-            metrics = {m.name: m.context for m in registry.metrics.values()
-                       if m.context.datatype in store.facts}
-            out[key] = key_figures(store, metrics, today=today)
+            out[key] = _key_figures(store, registry, today)
         elif item.plugin == "Graph":
             out[key] = graph_series(
                 spark,
@@ -101,8 +91,14 @@ def run_report(
         elif item.plugin == "Counter":
             out[key] = sum_all(compile_context(store, ctx, today=today))
         elif item.plugin in ("Table", "PieChart"):
-            # PieChart.pm:32-85 routes `top` exactly like Table.pm:57-85
-            out[key] = _run_table(store, ctx, item)
+            out[key] = top_table(
+                store,
+                ctx,
+                item.options.get("top", "eprint"),
+                item.options.get("limit", 10),
+                item.options.get("data_min"),
+                today=today,
+            )
         elif item.plugin == "GeoChart":
             # GeoChart.pm:16-21: select fields=['value'] — group the fact
             # by its value column (country codes)
@@ -113,7 +109,7 @@ def run_report(
             # Grid.pm: layout container — run the nested items
             from irstats2_spark.plans.registry import ReportDef
 
-            sub = ReportDef(name=f"{rdef.name}.grid{i}",
+            sub = ReportDef(name=f"{rdef.name}.{key}",
                             items=tuple(item.options.get("items", ())))
             registry.reports[sub.name] = sub
             out[key] = run_report(
@@ -165,15 +161,6 @@ class ResultCache:
                 n += 1
         return n
 
-    def fetch_or_compute(self, params: dict, compute) -> list[dict]:
-        hit = self.get(params)
-        if hit is not None:
-            return hit
-        df = compute()
-        rows = [r.asDict() for r in df.collect()]
-        self.put(params, rows)
-        return rows
-
 
 def prewarm_report(
     spark: SparkSession,
@@ -183,14 +170,28 @@ def prewarm_report(
     report: str = "main",
     today: dt.date | None = None,
 ) -> int:
-    """Post-ETL pre-warm of a report's panels (process_stats:151-159)."""
-    results = run_report(spark, store, registry, report, today=today)
+    """Post-ETL pre-warm of a report's panels (process_stats:151-159).
+
+    Each panel is requested through ``plans.http.handle_get`` with the
+    parameters its page sends, so the cached entry sits under the very
+    key a user's request looks up. KeyFigures, which the page computes
+    while rendering rather than through /cgi/stats/get, is cached under
+    ``{report, item}``. Returns the number of panels warmed."""
+    from irstats2_spark.plans.http import handle_get
+
     n = 0
-    for key, res in results.items():
-        params = {"report": report, "item": key}
-        if isinstance(res, DataFrame):
-            cache.fetch_or_compute(params, lambda r=res: r)
-        else:  # key-figures dict
-            cache.put(params, [res])
+    for key, item in _visible_items(registry.reports[report], Context(), frozenset()):
+        if item.plugin == "ReportHeader":
+            continue
+        if item.plugin == "KeyFigures":
+            cache.put(
+                {"report": report, "item": key},
+                [_key_figures(store, registry, today)],
+            )
+        else:
+            params = {"view": item.plugin, "datatype": item.datatype, **item.options}
+            handle_get(
+                spark, store, "/cgi/stats/report", params, cache=cache, today=today
+            )
         n += 1
     return n

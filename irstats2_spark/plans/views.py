@@ -1,10 +1,13 @@
-"""View-layer post-processing (SURVEY §2.5, §3.1 step 7): the reference's
-Google::Graph / Spark(line) / Compare / Table / KeyFigures views as
-DataFrame transformations over compiled Context results.
+"""View layer (SURVEY §2.5, §3.1 step 7): the reference's Google::Graph /
+Spark(line) / Compare / Table / KeyFigures views over compiled Contexts.
 
-All of these operate on day-grain aggregates (|days| rows), so the
-single-partition ordered windows are intentional — the expensive work
-happened in the Context compilation underneath.
+The reference runs one SQL fetch per view and shapes the series in Perl
+(Utils.pm:135-215, Graph.pm:94-187, Spark.pm:50-53). The time-series
+views here do the same: ``graph_rows`` / ``sparkline_rows`` compile the
+day-grain grouped sum, collect its at most |days| rows once, then
+zero-fill, bucket, accumulate and trim them in plain Python on the
+driver. ``graph_series`` / ``sparkline_series`` wrap those rows in a
+DataFrame for the catalog and ``run_report``.
 """
 
 from __future__ import annotations
@@ -16,44 +19,77 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irstats2_spark.functions.dates import get_dates
-from irstats2_spark.operators.timeseries import (
-    trim_leading_zeros,
-    with_cumulative_and_average,
-)
 from irstats2_spark.plans.builder import StatsStore, compile_context
 from irstats2_spark.plans.context import Context, QueryOptions
 
+_SERIES_TYPES = {
+    "datestamp": "int",
+    "count": "bigint",
+    "cumulative": "bigint",
+    "running_avg": "bigint",
+}
 
-def _densify_int_dates(
-    spark: SparkSession,
-    daily: DataFrame,
-    from_i: int,
-    to_i: int,
+
+def graph_rows(
+    store: StatsStore,
+    ctx: Context,
     resolution: str = "day",
-) -> DataFrame:
-    """T2 over int YYYYMMDD keys: left-merge onto the complete calendar
-    (Utils.pm:135-215), zero-filling gaps. Returns (datestamp, count)."""
-    keys = get_dates(from_i, to_i, resolution)
-    calendar = spark.createDataFrame([(k,) for k in keys], "datestamp int")
-    return (
-        calendar.join(daily, "datestamp", "left")
-        .withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
-        .select("datestamp", "count")
-    )
+    cumulative: bool = False,
+    show_average: bool = False,
+    today: dt.date | None = None,
+) -> tuple[list[str], list[tuple]]:
+    """View::Google::Graph (Graph.pm:44-192) as ``(columns, rows)``,
+    oldest first: every day of the window zero-filled (T2), bucketed to
+    YYYYMM / YYYY keys by integer division (T1, the reference's string
+    prefix bucketing), with optional cumulative and integer running
+    average ``cumsum // i`` columns (A6+A7).
+
+    An open window ('_ALL_') snaps to the first and last day with data."""
+    from_i, to_i = ctx.resolved_dates(today=today)
+    daily: dict[int, int] = {}
+    for r in compile_context(
+        store, ctx, QueryOptions(fields=("datestamp",)), today=today
+    ).collect():
+        # a set or grouping context also groups by its key: fold it away
+        daily[r["datestamp"]] = daily.get(r["datestamp"], 0) + (r["count"] or 0)
+    columns = ["datestamp", "count"]
+    if cumulative:
+        columns.append("cumulative")
+    if show_average:
+        columns.append("running_avg")
+    if from_i is None or to_i is None:
+        if not daily:
+            return columns, []
+        from_i = from_i or min(daily)
+        to_i = to_i or max(daily)
+    div = 1 if resolution == "day" else 100 if resolution == "month" else 10000
+    buckets: dict[int, int] = {}
+    for d in get_dates(from_i, to_i):
+        buckets[d // div] = buckets.get(d // div, 0) + daily.get(d, 0)
+    rows, total = [], 0
+    for i, (key, n) in enumerate(buckets.items(), 1):
+        total += n
+        full = {"datestamp": key, "count": n, "cumulative": total, "running_avg": total // i}
+        rows.append(tuple(full[c] for c in columns))
+    return columns, rows
 
 
-def _bucket_resolution(df: DataFrame, resolution: str) -> DataFrame:
-    """T1: bucket int-date rows to month (YYYYMM) or year (YYYY) keys by
-    integer division — the reference's string-prefix bucketing
-    (Graph.pm:105-150) on int dates."""
-    if resolution == "day":
-        return df
-    div = 100 if resolution == "month" else 10000
-    return (
-        df.withColumn("datestamp", (F.col("datestamp") / div).cast("int"))
-        .groupBy("datestamp")
-        .agg(F.sum("count").alias("count"))
-    )
+def sparkline_rows(
+    store: StatsStore,
+    ctx: Context,
+    today: dt.date | None = None,
+) -> tuple[list[str], list[tuple]]:
+    """View::Google::Spark (Spark.pm:16-83): the last 6 months day by
+    day, leading zero days trimmed (T4), newest first."""
+    ctx6 = replace(ctx, range="6m", from_date=None, to_date=None)
+    columns, rows = graph_rows(store, ctx6, today=today)
+    first = next((i for i, r in enumerate(rows) if r[1] > 0), len(rows))
+    return columns, rows[first:][::-1]
+
+
+def _frame(spark: SparkSession, columns: list[str], rows: list[tuple]) -> DataFrame:
+    schema = ", ".join(f"{c} {_SERIES_TYPES[c]}" for c in columns)
+    return spark.createDataFrame(rows, schema)
 
 
 def graph_series(
@@ -65,34 +101,11 @@ def graph_series(
     show_average: bool = False,
     today: dt.date | None = None,
 ) -> DataFrame:
-    """View::Google::Graph (Graph.pm:44-192): densified time series with
-    optional cumulative / running-average columns.
-
-    For '_ALL_' the window snaps to the dataset bounds (min/max scan,
-    A9 done in one pass instead of the reference's six queries)."""
-    from_i, to_i = ctx.resolved_dates(today=today)
-    daily = compile_context(
-        store, ctx, QueryOptions(fields=("datestamp",)), today=today
+    """``graph_rows`` as a DataFrame."""
+    return _frame(
+        spark,
+        *graph_rows(store, ctx, resolution, cumulative, show_average, today),
     )
-    if from_i is None or to_i is None:
-        bounds = daily.agg(
-            F.min("datestamp").alias("lo"), F.max("datestamp").alias("hi")
-        ).head()
-        if bounds.lo is None:
-            return daily.select("datestamp", "count")
-        from_i = from_i or bounds.lo
-        to_i = to_i or bounds.hi
-    dense = _densify_int_dates(spark, daily, from_i, to_i, "day")
-    out = _bucket_resolution(dense, resolution)
-    if cumulative or show_average:
-        out = with_cumulative_and_average(out, "datestamp", "count")
-        keep = ["datestamp", "count"]
-        if cumulative:
-            keep.append("cumulative")
-        if show_average:
-            keep.append("running_avg")
-        out = out.select(*keep)
-    return out
 
 
 def sparkline_series(
@@ -101,12 +114,32 @@ def sparkline_series(
     ctx: Context,
     today: dt.date | None = None,
 ) -> DataFrame:
-    """View::Google::Spark (Spark.pm:16-83): last-6-months daily series,
-    leading all-zero rows trimmed, ordered DESC."""
-    ctx6 = replace(ctx, range="6m", from_date=None, to_date=None)
-    series = graph_series(spark, store, ctx6, "day", today=today)
-    trimmed = trim_leading_zeros(series, "datestamp", "count")
-    return trimmed.orderBy(F.col("datestamp").desc())
+    """``sparkline_rows`` as a DataFrame."""
+    return _frame(spark, *sparkline_rows(store, ctx, today))
+
+
+def top_table(
+    store: StatsStore,
+    ctx: Context,
+    top: str = "eprint",
+    limit: int | str = 10,
+    data_min: int | None = None,
+    today: dt.date | None = None,
+) -> DataFrame:
+    """View::Table / PieChart (Table.pm:37-89, PieChart.pm:32-85): ``top``
+    selects the grouping axis — 'eprint' groups by eprintid, the
+    context's datatype groups by the fact value column, a set name is a
+    grouping join (top authors/divisions/...)."""
+    if top == "eprint":
+        ctx = replace(ctx, grouping="eprint")
+    elif top == ctx.datatype:
+        ctx = replace(ctx, grouping="value")
+    else:
+        ctx = replace(ctx, grouping=top)
+    opts = QueryOptions(
+        limit=None if limit == "all" else int(limit), data_min=data_min
+    )
+    return compile_context(store, ctx, opts, today=today)
 
 
 def compare_years(

@@ -2,10 +2,10 @@
 results, matching the reference's formats
 (plugins/EPrints/Plugin/Stats/Export/{CSV,JSON,XML}.pm).
 
-These are presentation-layer: they format an already-aggregated (small)
-result DataFrame on the driver. The heavy lifting stayed distributed; by
-the time a result reaches an exporter it is Context-compiled output
-(top-N / series), thousands of rows at most.
+These are presentation-layer: they format an already collected result,
+``(columns, rows)`` with one tuple per row, on the driver. By the time a
+result reaches an exporter it is Context-compiled output (top-N /
+series), thousands of rows at most.
 """
 
 from __future__ import annotations
@@ -13,22 +13,19 @@ from __future__ import annotations
 import json
 from xml.sax.saxutils import escape
 
-from pyspark.sql import DataFrame
+
+def records(columns: list[str], rows: list[tuple]) -> list[dict]:
+    """Rows as ``{column: value}`` dicts, the JSON shape of a result."""
+    return [dict(zip(columns, r)) for r in rows]
 
 
-def _rows(df: DataFrame) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]
-
-
-def to_csv(df: DataFrame, excel_proof: bool = True) -> str:
+def to_csv(columns: list[str], rows: list[tuple], excel_proof: bool = True) -> str:
     """Export/CSV.pm:13-73: quoted fields, control chars stripped; numbers
     wrapped as ="123" so Excel keeps long ids verbatim."""
-    cols = df.columns
-    out = [",".join(cols)]
-    for r in _rows(df):
+    out = [",".join(columns)]
+    for r in rows:
         cells = []
-        for c in cols:
-            v = r[c]
+        for v in r:
             if v is None:
                 cells.append("")
             elif isinstance(v, (int, float)) and excel_proof:
@@ -41,7 +38,8 @@ def to_csv(df: DataFrame, excel_proof: bool = True) -> str:
 
 
 def to_json(
-    df: DataFrame,
+    columns: list[str],
+    rows: list[tuple],
     origin: dict | None = None,
     set_info: dict | None = None,
     timescale: str | None = None,
@@ -52,17 +50,17 @@ def to_json(
         "origin": origin or {},
         "set": set_info or {},
         "timescale": timescale or "",
-        "records": _rows(df),
+        "records": records(columns, rows),
     }
     return json.dumps(doc, default=str)
 
 
-def to_xml(df: DataFrame) -> str:
+def to_xml(columns: list[str], rows: list[tuple]) -> str:
     """Export/XML.pm:12-109: <statistics><records><record><k>v</k>..."""
     parts = ["<?xml version='1.0' encoding='UTF-8'?>", "<statistics><records>"]
-    for r in _rows(df):
+    for r in rows:
         parts.append("<record>")
-        for k, v in r.items():
+        for k, v in zip(columns, r):
             parts.append(f"<{k}>{escape('' if v is None else str(v))}</{k}>")
         parts.append("</record>")
     parts.append("</records></statistics>")

@@ -8,10 +8,11 @@ Spark-native equivalents:
 - S5 append: `write.partitionBy('datestamp')` — daily-partitioned parquet;
   the date predicate of every Context query (P3) becomes pure partition
   pruning, and at 100 TB a day's partition is the replay/compaction unit.
-- S6 delete-from-date: dynamic partition overwrite
-  (spark.sql.sources.partitionOverwriteMode=dynamic) rewrites exactly the
-  partitions present in the repair batch — the parquet analog of Delta's
-  replaceWhere.
+- S6 delete-from-date: dynamic partition overwrite, set on the replay
+  writer only (``partitionOverwriteMode=dynamic``, never session-wide, so
+  a full ``write_fact`` overwrite still replaces the whole table),
+  rewrites exactly the partitions present in the repair batch — the
+  parquet analog of Delta's replaceWhere.
 - value truncation to 191 chars before write (Handler.pm:682-690), kept
   for behavioral parity with the reference's index-length limit.
 """
@@ -135,13 +136,13 @@ def replay_from_date(
     partition overwrite; partitions absent from the update batch but
     >= from_date are removed explicitly first, mirroring the DELETE)."""
     path = os.path.join(root, f"fact_{datatype}")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     updates = _truncate_value(
         fact_updates.filter(F.col("datestamp") >= from_date)
     )
     (
         updates.repartition("datestamp")
         .write.partitionBy("datestamp")
+        .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .parquet(path)
     )

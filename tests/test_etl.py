@@ -204,6 +204,27 @@ def test_context_grouping_self_rejected(store):
         )
 
 
+def test_search_terms_builds_without_spark_jobs(spark, log_dir):
+    """The search_terms processor is lazy: building it over silver (hash-
+    partitioned by the repeat filter) must not probe the partitioning."""
+    import uuid
+
+    from irstats2_spark import parallel
+    from irstats2_spark.etl import processors as P
+
+    silver = build_silver_events(read_access_logs(spark, log_dir + "/*"))
+    parallel._PARTS_MEMO.clear()  # a memoized probe would hide the job
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        P.search_terms(silver)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_context_single_eprint_live_clamp(store):
     # eprint live date is 2023-12-01, events are 2024-01 => unaffected
     df = compile_context(

@@ -22,16 +22,17 @@ def _fact(spark, rows):
 
 def test_export_formats(spark):
     df = _fact(spark, [(1, 20240101, "downloads", 5), (2, 20240102, "x,y\"z", 7)])
-    csv = to_csv(df)
+    columns, rows = df.columns, df.collect()
+    csv = to_csv(columns, rows)
     assert csv.splitlines()[0] == "eprintid,datestamp,value,count"
     assert '="5"' in csv  # Excel-proofed number
     assert '"x,yz"' in csv  # quotes stripped inside values, comma kept
 
-    doc = json.loads(to_json(df, origin={"datatype": "downloads"}))
+    doc = json.loads(to_json(columns, rows, origin={"datatype": "downloads"}))
     assert doc["origin"]["datatype"] == "downloads"
     assert len(doc["records"]) == 2
 
-    xml = to_xml(df)
+    xml = to_xml(columns, rows)
     assert xml.startswith("<?xml")
     assert "<eprintid>1</eprintid>" in xml
     assert "x,y&quot;z" not in xml  # escaped, not raw
@@ -71,6 +72,28 @@ def test_write_and_replay(spark, tmp_path):
     assert rows[(1, 20240101)] == 5
     assert rows[(1, 20240102)] == 4
     assert rows[(2, 20240103)] == 1
+
+
+def test_full_overwrite_after_replay_drops_stale_days(spark, tmp_path):
+    """A replay overwrites its day partitions dynamically on its own
+    writer; it leaves the session setting alone, so a later full
+    write_fact overwrite still replaces the whole table."""
+    root = str(tmp_path)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    write_fact(
+        _fact(spark, [(1, 20240101, "downloads", 5), (1, 20240102, "downloads", 3),
+                      (2, 20240103, "downloads", 9)]),
+        root, "downloads",
+    )
+    replay_from_date(
+        spark, _fact(spark, [(2, 20240103, "downloads", 4)]), root, "downloads", 20240103
+    )
+    assert spark.conf.get(key) == before
+    write_fact(_fact(spark, [(1, 20240101, "downloads", 7)]), root, "downloads")
+    rows = [(r.eprintid, r.datestamp, r["count"])
+            for r in read_fact(spark, root, "downloads").collect()]
+    assert rows == [(1, 20240101, 7)]
 
 
 def test_read_parquet_if_exists_missing_empty_and_corrupt(spark, tmp_path):

@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from irstats2_spark.plans.builder import StatsStore
 from irstats2_spark.plans.context import Context
@@ -190,18 +189,9 @@ def test_result_cache_roundtrip_and_prewarm(spark, report_store, tmp_path):
 
     cache = ResultCache(str(tmp_path / "cache"))
     params = {"datatype": "downloads", "range": "_ALL_"}
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return report_store.facts["downloads"].groupBy().agg(
-            F.sum("count").alias("count")
-        )
-
-    first = cache.fetch_or_compute(params, compute)
-    second = cache.fetch_or_compute(params, compute)
-    assert first == second == [{"count": 21}]
-    assert len(calls) == 1  # second call served from cache
+    assert cache.get(params) is None
+    cache.put(params, [{"count": 21}])
+    assert cache.get(params) == [{"count": 21}]
     # different params => different key
     assert cache.get({"datatype": "views"}) is None
 
@@ -436,3 +426,198 @@ def test_http_handle_export_and_set_finder(spark, store):
         spark, store, "/cgi/stats/report", {"set_name": "eprintid", "q": "1"}
     )
     assert (status, json.loads(body)) == (200, [])
+
+
+# ---------------------------------------------------------------------------
+# View behaviour pins: eprint live dates, buckets, accumulation, trim/order
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def live_store(spark):
+    """Eprint 1 goes live on 2024-01-03; eprint 2 has no live date yet;
+    eprint 3 has no eprints row at all. All three have downloads on days
+    before 2024-01-03."""
+    fact = spark.createDataFrame(
+        [
+            (1, 20240101, "downloads", 4),
+            (1, 20240102, "downloads", 6),
+            (1, 20240103, "downloads", 5),
+            (1, 20240105, "downloads", 2),
+            (2, 20240102, "downloads", 9),
+            (3, 20240102, "downloads", 8),
+        ],
+        "eprintid int, datestamp int, value string, count long",
+    )
+    eprints = spark.createDataFrame(
+        [
+            (1, "archive", dt.datetime(2024, 1, 3, 10, 30)),
+            (2, "archive", None),
+        ],
+        "eprintid int, eprint_status string, datestamp timestamp",
+    )
+    return StatsStore(facts={"downloads": fact}, eprints=eprints)
+
+
+def _graph_get(spark, store, uri, **params):
+    import json
+
+    from irstats2_spark.plans.http import handle_get
+
+    status, _, body = handle_get(
+        spark, store, uri, {"view": "Graph", **params}, today=TODAY
+    )
+    return status, json.loads(body)
+
+
+def test_eprint_graph_zeroes_days_before_live_date(spark, live_store):
+    status, rows = _graph_get(
+        spark, live_store, "/cgi/stats/report/eprint/1",
+        **{"from": "20240101", "to": "20240105"},
+    )
+    assert status == 200
+    assert [(r["datestamp"], r["count"]) for r in rows] == [
+        (20240101, 0), (20240102, 0), (20240103, 5), (20240104, 0), (20240105, 2),
+    ]
+
+
+@pytest.mark.parametrize("epid", ["2", "3"])  # NULL live date; no eprints row
+def test_eprint_graph_without_live_date_is_all_zero(spark, live_store, epid):
+    status, rows = _graph_get(
+        spark, live_store, f"/cgi/stats/report/eprint/{epid}",
+        **{"from": "20240101", "to": "20240103"},
+    )
+    assert status == 200
+    assert [(r["datestamp"], r["count"]) for r in rows] == [
+        (20240101, 0), (20240102, 0), (20240103, 0),
+    ]
+
+
+def test_graph_month_and_year_buckets_across_year_boundary(spark, store):
+    _, rows = _graph_get(
+        spark, store, "/cgi/stats/report",
+        **{"from": "20231201", "to": "20240229", "date_resolution": "month"},
+    )
+    assert [(r["datestamp"], r["count"]) for r in rows] == [
+        (202312, 0), (202401, 15), (202402, 7),
+    ]
+    _, rows = _graph_get(
+        spark, store, "/cgi/stats/report",
+        **{"from": "20230101", "to": "20241231", "date_resolution": "year"},
+    )
+    assert [(r["datestamp"], r["count"]) for r in rows] == [(2023, 3), (2024, 22)]
+
+
+def test_graph_cumulative_and_average_over_leading_zero_days(spark, store):
+    _, rows = _graph_get(
+        spark, store, "/cgi/stats/report",
+        **{"from": "20231230", "to": "20240103", "cumulative": "true",
+           "show_average": "true"},
+    )
+    assert [r["datestamp"] for r in rows] == [
+        20231230, 20231231, 20240101, 20240102, 20240103,
+    ]
+    assert [r["count"] for r in rows] == [0, 0, 10, 0, 5]
+    assert [r["cumulative"] for r in rows] == [0, 0, 10, 10, 15]
+    # int(cumulative / i), i counting from the first day of the window
+    assert [r["running_avg"] for r in rows] == [0, 0, 3, 2, 3]
+
+
+def test_graph_all_time_on_empty_fact_is_empty(spark):
+    fact = spark.createDataFrame(
+        [], "eprintid int, datestamp int, value string, count long"
+    )
+    empty = StatsStore(facts={"downloads": fact})
+    status, rows = _graph_get(spark, empty, "/cgi/stats/report", range="_ALL_")
+    assert (status, rows) == (200, [])
+    assert graph_series(
+        spark, empty, Context(datatype="downloads", range="_ALL_"), today=TODAY
+    ).collect() == []
+
+
+def test_spark_view_trims_leading_zeros_newest_first(spark, store):
+    import json
+
+    from irstats2_spark.plans.http import handle_get
+
+    status, _, body = handle_get(
+        spark, store, "/cgi/stats/report", {"view": "Spark"},
+        today=dt.date(2024, 3, 1),
+    )
+    assert status == 200
+    got = [(r["datestamp"], r["count"]) for r in json.loads(body)]
+    days = [dt.date(2024, 2, 29) - dt.timedelta(days=i) for i in range(60)]
+    want = {20240101: 10, 20240103: 5, 20240215: 7}
+    stamps = [int(d.strftime("%Y%m%d")) for d in days]
+    assert got == [(s, want.get(s, 0)) for s in stamps]
+    # a window with no data at all trims to nothing
+    _, _, body = handle_get(
+        spark, store, "/cgi/stats/report", {"view": "Spark"},
+        today=dt.date(2022, 1, 1),
+    )
+    assert json.loads(body) == []
+
+
+def _jobs_in_group(spark, run) -> int:
+    """Spark jobs started by ``run()``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_view_path_runs_no_spark_job_outside_its_collect(spark, live_store):
+    """Building an eprint context starts no Spark job; a Graph request
+    starts no more jobs than one collect of its compiled context."""
+    from irstats2_spark.plans.builder import compile_context
+    from irstats2_spark.plans.context import QueryOptions
+
+    ctx = Context(datatype="downloads", set_name="eprint", set_value="1",
+                  from_date="20240101", to_date="20240105")
+    opts = QueryOptions(fields=("datestamp",))
+    built = []
+    assert _jobs_in_group(
+        spark, lambda: built.append(compile_context(live_store, ctx, opts, today=TODAY))
+    ) == 0
+    one_collect = _jobs_in_group(spark, lambda: built[0].collect())
+    request = _jobs_in_group(
+        spark,
+        lambda: _graph_get(spark, live_store, "/cgi/stats/report/eprint/1",
+                           **{"from": "20240101", "to": "20240105"}),
+    )
+    assert 0 < request <= one_collect
+
+
+def test_prewarm_serves_the_main_report_graph_request(spark, report_store, tmp_path):
+    """The nightly prewarm caches under the same key a real request
+    looks up: the main month-Graph panel is a cache hit whose body
+    equals a freshly computed one."""
+    import json
+
+    from irstats2_spark.plans.http import handle_get
+    from irstats2_spark.plans.registry import default_registry
+    from irstats2_spark.plans.report import ResultCache, prewarm_report
+
+    cache = ResultCache(str(tmp_path / "cache"))
+    assert prewarm_report(
+        spark, report_store, default_registry(), cache, "main", today=TODAY
+    ) == 5
+    params = {"view": "Graph", "datatype": "downloads",
+              "date_resolution": "month", "graph_type": "column"}
+    _, _, fresh = handle_get(
+        spark, report_store, "/cgi/stats/report", params, today=TODAY
+    )
+    hit = cache.get({**params, "__uri": "/cgi/stats/report"})
+    assert hit is not None and hit == json.loads(fresh)
+    _, _, served = handle_get(
+        spark, report_store, "/cgi/stats/report", params, cache=cache, today=TODAY
+    )
+    assert served == fresh
