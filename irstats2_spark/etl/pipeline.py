@@ -20,8 +20,6 @@ from irstats2_spark.sources.access_log import with_event_columns
 
 def build_silver_events(
     events: DataFrame,
-    apply_robots: bool = True,
-    apply_repeat: bool = True,
     repeat_timeout: int = 3600,
     robots_kwargs: dict | None = None,
 ) -> DataFrame:
@@ -29,11 +27,8 @@ def build_silver_events(
     schema). Returns the silver DataFrame with derived columns."""
     ev = events if "epoch" in events.columns else with_event_columns(events)
     ev = ev.filter(ev.datestamp.isNotNull())  # P10 null-year guard
-    if apply_robots:
-        ev = robots_filter(ev, **(robots_kwargs or {}))
-    if apply_repeat:
-        ev = repeat_filter(ev, timeout=repeat_timeout)
-    return ev
+    ev = robots_filter(ev, **(robots_kwargs or {}))
+    return repeat_filter(ev, timeout=repeat_timeout)
 
 
 def build_store(
@@ -45,7 +40,6 @@ def build_store(
     geoip_ranges: DataFrame | None = None,
     host: str | None = None,
     base_url: str | None = None,
-    with_lifetime_caches: bool = True,
     with_dimensions: bool = True,
 ) -> StatsStore:
     """Run every applicable processor and assemble the StatsStore.
@@ -73,9 +67,8 @@ def build_store(
             facts["doc_format"] = P.doc_format(eprints, documents)
     if history is not None:
         facts["history"] = P.history_actions(history)
-    if with_lifetime_caches:
-        facts["cache_downloads"] = P.lifetime_cache(facts["downloads"], "downloads")
-        facts["cache_views"] = P.lifetime_cache(facts["views"], "views")
+    facts["cache_downloads"] = P.lifetime_cache(facts["downloads"], "downloads")
+    facts["cache_views"] = P.lifetime_cache(facts["views"], "views")
 
     dims = {"sets": None, "groupings": None, "rendered": None}
     if with_dimensions and eprints is not None:

@@ -93,29 +93,15 @@ def robots_filter(
     ip_prefixes: list[str] | None = None,
     ua_file: str | None = None,
     ip_file: str | None = None,
-    distinct_prefilter: bool = False,
 ) -> DataFrame:
     """P8: return only non-robot rows.
 
-    Two physical strategies with identical output:
-
-    - default: one compiled rlike alternation per row — zero shuffle,
-      fuses into the scan. Per-row cost is O(|patterns|) regex work,
-      which the full ~826-fragment default list makes the dominant CPU
-      of an ETL pass.
-    - ``distinct_prefilter=True``: classify the DISTINCT UA and IP value
-      sets (map-side partial agg makes those shuffles tiny — real
-      traffic has ~10^4-10^6 distinct UAs/IPs against 10^9+ rows), then
-      drop robot rows with two broadcast anti-joins. The regex runs once
-      per distinct value instead of once per row — the same
-      dedup-before-regex shape as functions.text.search_term_counts.
-
-    Measured on this engine the compiled alternation costs ~0.3us/row,
-    so the per-row form stays the default at every scale where the regex
-    is not the measured bottleneck; reach for the prefilter when the
-    pattern list grows past the shipped ~826 fragments or per-row regex
-    time shows up in the stage profile (both strategies are
-    output-identical, parity-tested)."""
+    One compiled rlike alternation per row: zero shuffle, fuses into the
+    scan. Per-row cost is O(|patterns|) regex work; with the full
+    ~826-fragment default list it measured ~300us/row (1.68 s for 5.5k
+    warm rows on 4 cores), the dominant CPU of an ETL pass. Classifying
+    the DISTINCT UAs and IPs with broadcast anti-joins measured 2.3x
+    slower at that scale and was removed."""
     ua_patterns = list(ua_patterns if ua_patterns is not None else default_ua_patterns())
     ip_prefixes = list(ip_prefixes if ip_prefixes is not None else default_ip_prefixes())
     if ua_file and os.path.exists(ua_file):
@@ -125,25 +111,6 @@ def robots_filter(
 
     ua_re = "|".join(ua_patterns) if ua_patterns else None
     ip_re = _ip_prefix_regex(ip_prefixes)
-
-    if distinct_prefilter:
-        # NULL values never classify as robot (isNotNull in the per-row
-        # form); an equality anti-join never matches NULL either, so the
-        # two strategies keep exactly the same rows.
-        orig_cols = df.columns  # USING-joins move the key column first
-        if ua_re:
-            robot_uas = (
-                df.select(ua_col).distinct()
-                .filter(F.lower(F.col(ua_col)).rlike(ua_re))
-            )
-            df = df.join(F.broadcast(robot_uas), ua_col, "left_anti")
-        if ip_re:
-            robot_ips = (
-                df.select(ip_col).distinct()
-                .filter(F.col(ip_col).rlike(ip_re))
-            )
-            df = df.join(F.broadcast(robot_ips), ip_col, "left_anti")
-        return df.select(*orig_cols)
 
     keep = F.lit(True)
     if ua_re:
@@ -184,8 +151,7 @@ def repeat_filter(
     anchor state is carried across Arrow batches inside a partition, so a
     key's run never needs to fit in one batch. Per-key state never leaves
     a partition, keys are high-cardinality (they embed the client IP), and
-    Python sees each row exactly once: this is the same shuffle count as
-    the lag()-window approximation, with exact reference semantics.
+    Python sees each row exactly once.
     """
     epid, docid, ip = key_cols
     keyed = df.withColumn("__rk", repeat_key(F.col(epid), F.col(docid), F.col(ip)))
@@ -223,31 +189,6 @@ def repeat_filter(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields[:-1]
     )
     return arranged.mapInPandas(scan, schema=kept_schema)
-
-
-def repeat_filter_window_approx(
-    df: DataFrame,
-    epoch_col: str = "epoch",
-    key_cols: tuple[str, str, str] = ("referent_id", "referent_docid", "requester_id"),
-    timeout: int = 3600,
-) -> DataFrame:
-    """Documented approximation: keep rows whose gap from the PREVIOUS
-    event (kept or not) exceeds timeout. Cheaper (pure window, no Python)
-    but refreshes the anchor on dropped events — counts can be lower than
-    the exact operator on long click-bursts. Streaming equivalent:
-    dropDuplicatesWithinWatermark on the key.
-    """
-    from pyspark.sql import Window
-
-    epid, docid, ip = key_cols
-    keyed = df.withColumn("__rk", repeat_key(F.col(epid), F.col(docid), F.col(ip)))
-    w = Window.partitionBy("__rk").orderBy(epoch_col)
-    prev = F.lag(F.col(epoch_col)).over(w)
-    return (
-        keyed.withColumn("__gap", F.col(epoch_col) - prev)
-        .filter(F.col("__gap").isNull() | (F.col("__gap") > timeout))
-        .drop("__rk", "__gap")
-    )
 
 
 def find_robots_ip_duplicates(

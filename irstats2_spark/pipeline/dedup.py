@@ -424,7 +424,7 @@ def minhash_row_cols(sh, n_hashes: int = 8) -> list:
     This is what makes MinHash streamable: a Structured Streaming query
     can't run the groupBy form without watermarked stateful aggregation,
     but these columns fuse into the stateless projection of each
-    micro-batch (streaming.ingest.neardup_doc_stream). An empty shingle
+    micro-batch (streams.neardup_doc_stream). An empty shingle
     array (doc too short) yields NULL signature slots — such docs can't
     near-dup and band-join nothing."""
     # closure factory, not default args: F.transform counts a lambda's

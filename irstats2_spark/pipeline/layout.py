@@ -18,7 +18,10 @@ These operators make that layout decision measurable INSIDE the engine:
   on it;
 - ``zorder_prune_gain`` quantifies the payoff: files scanned for a 2-D
   predicate under the naive insertion-order layout vs the Z-ordered
-  layout, over identical file counts.
+  layout, over identical file counts;
+- ``write_corpus_snapshot_bucketed`` and ``write_corpus_shards`` are the
+  corpus writers: a dedup snapshot bucketed by content hash, and
+  deterministic shards with their manifest.
 
 No reference analog (IRStats2 stores facts in unclustered MySQL tables;
 the closest relative is its datestamp partitioning, Data.pm's per-day
@@ -32,6 +35,8 @@ any engine.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -306,3 +311,82 @@ def zonemap_merge(*stats: DataFrame) -> DataFrame:
         F.min("vmin").alias("vmin"),
         F.max("vmax").alias("vmax"),
     )
+
+
+def write_corpus_snapshot_bucketed(
+    docs: DataFrame,
+    root: str,
+    table: str = "corpus_snapshot_bucketed",
+    buckets: int = 16,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> str:
+    """Scale path for the dedup snapshot: persist (doc_id, text_hash)
+    BUCKETED BY text_hash — the join key of every incremental-dedup pass
+    (`dedup.exact_dedup_incremental`, `streams.dedup_doc_stream`,
+    `curate.snapshot_diff`).
+
+    Incremental dedup at 100 TB is dominated by re-shuffling the
+    accumulated snapshot on every nightly run: the snapshot is
+    corpus-sized while the new batch is day-sized. Bucketing pre-hashes
+    the key at write time, so a batch bucketed the same way joins
+    bucket-to-bucket with ZERO exchange on the snapshot side (the
+    day-batch can be repartitioned to match for pennies). Only the
+    (id, hash) projection is stored — snapshot probes never need
+    document bodies, and at corpus scale storing text twice would
+    double the footprint for nothing."""
+    path = os.path.join(root, table)
+    (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.md5(F.col(text_col)).alias("text_hash"),
+        )
+        .write.bucketBy(buckets, "text_hash")
+        .sortBy("text_hash")
+        .option("path", path)
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(table)
+    )
+    return table
+
+
+def write_corpus_shards(
+    docs: DataFrame,
+    root: str,
+    n_shards: int = 8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Publish a corpus as deterministic shards + a manifest — the
+    physical write behind ``curate.shard_manifest``'s dataset card:
+    rows are assigned their manifest shard (hash_bucket of the id, the
+    same 'shard:' salt), repartitioned so each shard is one task's
+    output, written parquet partitioned by ``shard``, and the manifest
+    (computed from the SAME tagged rows) is written beside them at
+    ``<root>/manifest``. Returns the manifest DataFrame.
+
+    A consumer verifies a download by recomputing ``shard_manifest``
+    over the shard files and diffing checksums — any lost, duplicated,
+    or bit-flipped document surfaces as its shard's digest mismatch.
+
+    Scale shape: one repartition on the shard key sized so a shard is
+    a task-friendly file set (pick n_shards ∝ corpus/target shard
+    size); sortWithinPartitions(doc_id) makes file contents
+    byte-reproducible across reruns, not just set-equal."""
+    from irstats2_spark.pipeline.curate import shard_manifest
+    from irstats2_spark.pipeline.sampling import hash_bucket
+
+    tagged = docs.withColumn(
+        "shard", hash_bucket(F.col(id_col), n_shards, "shard:").cast("int")
+    )
+    (
+        tagged.repartition(n_shards, "shard")
+        .sortWithinPartitions(id_col)
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(os.path.join(root, "shards"))
+    )
+    manifest = shard_manifest(docs, n_shards, text_col, id_col)
+    manifest.write.mode("overwrite").parquet(os.path.join(root, "manifest"))
+    return manifest

@@ -44,7 +44,7 @@ step 1 is a ``max_span``× token blow-up feeding the global sort — at
 the default span 32 that is ~32 bytes/token × 32 rows ≈ 1 KB of shuffle
 per corpus token, the honest price of exact arbitrary-length matching.
 Sample-first (mine repeats on a documented sample, then probe the full
-corpus with ``streaming.ingest.substring_match_stream`` or a hash join
+corpus with ``pipeline.streams.substring_match_stream`` or a hash join
 on the mined fingerprints) is the production-scale default; full-corpus
 mining is for audits at the scale you can afford the sort. Measured at
 sf0.1 (local[32], 5k docs, ~1.7M positions, span 9): full mine ≈ 8 s
@@ -1017,7 +1017,7 @@ def write_gram_snapshot(
     """Persist the accumulated corpus's DISTINCT ``min_len``-gram md5
     set — the membership store ``remove_repeated_spans_incremental``
     cleans nightly batches against (and the static side
-    ``streaming.ingest.remove_spans_stream`` folds to a broadcast key
+    ``pipeline.streams.remove_spans_stream`` folds to a broadcast key
     row and probes at ingest — same full-md5 keys on every path). One distinct per snapshot rebuild; append each cleaned
     batch's grams and re-distinct, or just rebuild from the growing
     corpus. The build length is stamped on ``h``'s field metadata

@@ -1117,7 +1117,7 @@ def remove_listed_chunks(
 
     Scale shape: with the set baked in as a literal array the rewrite is
     a ZERO-SHUFFLE per-row map — no explode, no rebuild groupBy — which
-    is also why it streams stateless (``streaming.clean_chunks_stream``).
+    is also why it streams stateless (``streams.clean_chunks_stream``).
     The membership probe is O(|set|) per chunk, the right trade for a
     boilerplate-grade set (hundreds–thousands of hashes, the same
     smallness contract that lets the batch form broadcast); for a set

@@ -105,17 +105,18 @@ def parse_stats_uri(uri: str) -> dict[str, str]:
     return out
 
 
-def context_from_request(
-    uri: str, params: dict[str, str]
-) -> tuple[Context, dict[str, str]]:
-    """cgi/stats/get:105-128 + Context.pm:44-129: path fields first,
-    query-string fields override, context params character-stripped,
-    non-context params whitelisted (invalid ones silently dropped)."""
+def _request_fields(uri: str, params: dict[str, str]) -> dict[str, str]:
+    """Context fields from the URI path, overridden by non-empty query
+    params (cgi/stats/get:105-128)."""
     fields = parse_stats_uri(uri)
     for k, v in params.items():
         if k in CONTEXT_FIELDS and v not in (None, ""):
             fields[k] = str(v)
-    ctx = Context(
+    return fields
+
+
+def _context(fields: dict[str, str]) -> Context:
+    return Context(
         datatype=fields.get("datatype", "downloads"),
         set_name=fields.get("set_name"),
         set_value=fields.get("set_value"),
@@ -127,6 +128,15 @@ def context_from_request(
         irs2report=fields.get("irs2report"),
         cache=fields.get("cache", "1") not in ("0", "false"),
     ).sanitized()
+
+
+def context_from_request(
+    uri: str, params: dict[str, str]
+) -> tuple[Context, dict[str, str]]:
+    """cgi/stats/get:105-128 + Context.pm:44-129: path fields first,
+    query-string fields override, context params character-stripped,
+    non-context params whitelisted (invalid ones silently dropped)."""
+    ctx = _context(_request_fields(uri, params))
     nonctx = {
         k: str(v)
         for k, v in params.items()
@@ -343,10 +353,7 @@ def handle_export(
     ``format`` required, full compiled selection exported in the
     format's content type."""
     params = dict(params or {})
-    fields = parse_stats_uri(uri)
-    for k, v in params.items():
-        if k in CONTEXT_FIELDS and v not in (None, ""):
-            fields[k] = str(v)
+    fields = _request_fields(uri, params)
     if (fields.get("set_name") is None) != (fields.get("set_value") is None):
         fields.pop("set_name", None)
         fields.pop("set_value", None)
@@ -357,16 +364,7 @@ def handle_export(
     if fmt not in _EXPORT_MIMETYPES:
         safe = re.sub(r"[<>&]", "", fmt)
         return 400, "text/html", f"<p>IRStats2: unknown export <strong>{safe}</strong></p>"
-    ctx = Context(
-        datatype=fields.get("datatype", "downloads"),
-        set_name=fields.get("set_name"),
-        set_value=fields.get("set_value"),
-        grouping=fields.get("grouping"),
-        datafilter=fields.get("datafilter"),
-        range=fields.get("range"),
-        from_date=fields.get("from"),
-        to_date=fields.get("to"),
-    ).sanitized()
+    ctx = _context(fields)
     # the export plugins dump the context's data selection row-by-row
     # (Export/CSV.pm:15-47) — the per-datestamp series of the selection
     df = compile_context(

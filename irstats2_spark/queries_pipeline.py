@@ -5005,7 +5005,7 @@ def text_remove_frequent_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="incremental boilerplate removal: chunk set mined ONCE on the "
     "historical slice (doc_id < 300), incoming docs (>= 300) rewritten "
     "against it as a zero-shuffle per-row map — the mine-nightly/"
-    "clean-on-arrival loop; streaming twin in streaming.clean_chunks_stream",
+    "clean-on-arrival loop; streaming twin in pipeline.streams.clean_chunks_stream",
 )
 def text_remove_frequent_chunks_incremental(
     spark: SparkSession, sf_dir: str
@@ -5359,7 +5359,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side and joined against the winnowing snapshot of the "
     "historical slice (< 300), snapshot-side boilerplate fps capped at "
     "64 docs — completes the incremental tier for the winnowing family; "
-    "streaming twin in streaming.winnow_doc_stream",
+    "streaming twin in pipeline.streams.winnow_doc_stream",
 )
 def dedup_winnowing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from irstats2_spark.pipeline.dedup import winnow_incremental

@@ -131,10 +131,13 @@ def replay_from_date(
     datatype: str,
     from_date: int,
 ) -> str:
-    """S6 repair path: replace every partition >= from_date with the
-    replayed aggregates (delete-then-insert as one atomic-ish dynamic
-    partition overwrite; partitions absent from the update batch but
-    >= from_date are removed explicitly first, mirroring the DELETE)."""
+    """S6 repair path: overwrite the partitions >= from_date that the
+    update batch holds, by one dynamic partition overwrite. A partition
+    >= from_date that the batch lacks is left as it is, NOT deleted as
+    the reference's DELETE would; ``fact_updates`` must therefore carry
+    every partition >= from_date the caller wants to keep. The stream
+    sink does: it merges all existing partitions >= its batch's first
+    day into the batch before replaying."""
     path = os.path.join(root, f"fact_{datatype}")
     updates = _truncate_value(
         fact_updates.filter(F.col("datestamp") >= from_date)
@@ -180,84 +183,3 @@ def write_fact_bucketed(
         .saveAsTable(table)
     )
     return table
-
-
-def write_corpus_snapshot_bucketed(
-    docs: DataFrame,
-    root: str,
-    table: str = "corpus_snapshot_bucketed",
-    buckets: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """Scale path for the dedup snapshot: persist (doc_id, text_hash)
-    BUCKETED BY text_hash — the join key of every incremental-dedup pass
-    (`dedup.exact_dedup_incremental`, `streaming.dedup_doc_stream`,
-    `curate.snapshot_diff`).
-
-    Incremental dedup at 100 TB is dominated by re-shuffling the
-    accumulated snapshot on every nightly run: the snapshot is
-    corpus-sized while the new batch is day-sized. Bucketing pre-hashes
-    the key at write time, so a batch bucketed the same way joins
-    bucket-to-bucket with ZERO exchange on the snapshot side (the
-    day-batch can be repartitioned to match for pennies). Only the
-    (id, hash) projection is stored — snapshot probes never need
-    document bodies, and at corpus scale storing text twice would
-    double the footprint for nothing."""
-    path = os.path.join(root, table)
-    (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.md5(F.col(text_col)).alias("text_hash"),
-        )
-        .write.bucketBy(buckets, "text_hash")
-        .sortBy("text_hash")
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return table
-
-
-def write_corpus_shards(
-    docs: DataFrame,
-    root: str,
-    n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Publish a corpus as deterministic shards + a manifest — the
-    physical write behind ``curate.shard_manifest``'s dataset card:
-    rows are assigned their manifest shard (hash_bucket of the id, the
-    same 'shard:' salt), repartitioned so each shard is one task's
-    output, written parquet partitioned by ``shard``, and the manifest
-    (computed from the SAME tagged rows) is written beside them at
-    ``<root>/manifest``. Returns the manifest DataFrame.
-
-    A consumer verifies a download by recomputing ``shard_manifest``
-    over the shard files and diffing checksums — any lost, duplicated,
-    or bit-flipped document surfaces as its shard's digest mismatch.
-
-    Scale shape: one repartition on the shard key sized so a shard is
-    a task-friendly file set (pick n_shards ∝ corpus/target shard
-    size); sortWithinPartitions(doc_id) makes file contents
-    byte-reproducible across reruns, not just set-equal."""
-    import os
-
-    from irstats2_spark.pipeline.curate import shard_manifest
-    from irstats2_spark.pipeline.sampling import hash_bucket
-
-    tagged = docs.withColumn(
-        "shard", hash_bucket(F.col(id_col), n_shards, "shard:").cast("int")
-    )
-    (
-        tagged.repartition(n_shards, "shard")
-        .sortWithinPartitions(id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(os.path.join(root, "shards"))
-    )
-    manifest = shard_manifest(docs, n_shards, text_col, id_col)
-    manifest.write.mode("overwrite").parquet(os.path.join(root, "manifest"))
-    return manifest

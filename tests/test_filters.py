@@ -1,6 +1,6 @@
 """Tests for Robots (P8) and Repeat (P9) filters — including the
-first-anchor property that distinguishes the exact operator from the
-lag-window approximation (SURVEY §7.3)."""
+first-anchor property that a lag-window approximation would break
+(SURVEY §7.3)."""
 
 from __future__ import annotations
 
@@ -8,11 +8,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from irstats2_spark.operators.filters import (
-    repeat_filter,
-    repeat_filter_window_approx,
-    robots_filter,
-)
+from irstats2_spark.operators.filters import repeat_filter, robots_filter
 
 
 def _events(spark, rows):
@@ -41,16 +37,12 @@ def python_repeat_oracle(rows, timeout):
 
 def test_repeat_anchor_not_refreshed(spark):
     # e1 kept (anchor), e2 +3000s dropped, e3 +6000s: within timeout of e2
-    # but beyond e1's anchor => KEPT (anchor semantics), while the window
-    # approximation drops it (gap from e2 is 3000 <= 3600).
+    # but beyond e1's anchor => KEPT (anchor semantics); a lag-window
+    # approximation would drop it (gap from e2 is 3000 <= 3600).
     rows = [(0, 1, 10, "a"), (3000, 1, 10, "a"), (6000, 1, 10, "a")]
     df = _events(spark, rows)
     exact = sorted(r.epoch for r in repeat_filter(df, timeout=3600).collect())
     assert exact == [0.0, 6000.0]
-    approx = sorted(
-        r.epoch for r in repeat_filter_window_approx(df, timeout=3600).collect()
-    )
-    assert approx == [0.0]  # documented divergence
 
 
 def test_repeat_distinct_keys_independent(spark):
@@ -229,26 +221,3 @@ def test_robots_pattern_file_loading(spark, tmp_path):
         df, ua_file=str(ua_file), ip_file=str(ip_file)
     ).collect()
     assert sorted(r.requester_id for r in kept) == ["192.16.0.1", "8.8.8.8"]
-
-
-def test_robots_distinct_prefilter_parity(spark):
-    """The dedup-before-regex strategy must keep exactly the same rows
-    as the per-row rlike form, including NULL UA/IP rows."""
-    rows = [
-        ("Mozilla/5.0 (real browser)", "1.2.3.4"),
-        ("Googlebot/2.1 (+http://www.google.com/bot.html)", "5.6.7.8"),
-        ("aria2/1.36.0", "9.9.9.9"),
-        ("Mozilla/5.0 ok", "100.24.3.4"),  # robot IP prefix (full list)
-        (None, "2.3.4.5"),
-        ("Mozilla/5.0 ok", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "requester_user_agent string, requester_id string"
-    )
-    plain = robots_filter(df).collect()
-    pre = robots_filter(df, distinct_prefilter=True).collect()
-    key = lambda r: (r.requester_user_agent or "", r.requester_id or "")  # noqa: E731
-    assert sorted(map(tuple, plain), key=lambda t: (t[0] or "", t[1] or "")) == sorted(
-        map(tuple, pre), key=lambda t: (t[0] or "", t[1] or "")
-    )
-    assert len(pre) == 3  # real browser + both NULL rows

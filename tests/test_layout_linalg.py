@@ -405,7 +405,7 @@ def test_zonemap_stats_stream_matches_batch(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.layout import zonemap_stats
-    from irstats2_spark.streaming.ingest import zonemap_stats_stream
+    from irstats2_spark.pipeline.streams import zonemap_stats_stream
 
     rows = [{"doc_id": i, "n_chars": (i * 13) % 500} for i in range(400)]
     src = tmp_path / "docs"

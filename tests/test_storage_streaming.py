@@ -194,6 +194,84 @@ def test_streaming_ingest(spark, tmp_path):
     assert total2 == 35
 
 
+def _clean_day_lines() -> list[str]:
+    """One day of browser traffic: 10.0.0.x clients, no repeat key twice
+    within an hour, no duplicate lines, downloads and abstract views."""
+    lines = []
+    for i in range(30):
+        ts = dt.datetime(2024, 3, 5) + dt.timedelta(minutes=i * 17)
+        is_dl = i % 3 != 0
+        lines.append(
+            "\t".join(
+                [
+                    ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
+                    f"10.0.0.{i % 7}",
+                    "Mozilla/5.0 Chrome/1",
+                    "",
+                    "?fulltext=yes" if is_dl else "?abstract=yes",
+                    str(i % 4 + 1),
+                    str(100 + i) if is_dl else "",
+                ]
+            )
+        )
+    return lines
+
+
+_CELL = ("eprintid", "datestamp", "value", "count")
+
+
+def _batch_cells(spark, logs) -> dict:
+    from irstats2_spark.etl import processors as P
+    from irstats2_spark.etl.pipeline import build_silver_events
+    from irstats2_spark.sources.access_log import read_access_logs
+
+    silver = build_silver_events(read_access_logs(spark, str(logs / "*.log")))
+    return {
+        datatype: sorted(tuple(r) for r in fact.select(*_CELL).collect())
+        for datatype, fact in (("downloads", P.downloads(silver)), ("views", P.views(silver)))
+    }
+
+
+def _stream_cells(spark, logs, root) -> dict:
+    from irstats2_spark.streaming.ingest import read_access_stream, start_fact_stream
+
+    q = start_fact_stream(
+        read_access_stream(spark, str(logs)), str(root / "gold"), str(root / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return {
+        datatype: sorted(
+            tuple(r) for r in read_fact(spark, str(root / "gold"), datatype).select(*_CELL).collect()
+        )
+        for datatype in ("downloads", "views")
+    }
+
+
+def test_stream_and_batch_facts_agree_on_a_clean_day(spark, tmp_path):
+    """The chosen batch/stream difference: the fact stream applies line
+    dedup only, the nightly batch also the Robots and Repeat filters. On
+    a day those filters leave alone, both give the same cells; one robot
+    hit changes only the stream's counts."""
+    clean = tmp_path / "clean"
+    clean.mkdir()
+    (clean / "day.log").write_text("\n".join(_clean_day_lines()) + "\n")
+    batch = _batch_cells(spark, clean)
+    assert sum(c[-1] for c in batch["downloads"]) == 20
+    assert sum(c[-1] for c in batch["views"]) == 10
+    assert _stream_cells(spark, clean, tmp_path / "s_clean") == batch
+
+    robot = tmp_path / "robot"
+    robot.mkdir()
+    bot = "2024-03-05T12:00:00Z\t10.0.0.1\tGooglebot/2.1\t\t?fulltext=yes\t1\t100"
+    (robot / "day.log").write_text("\n".join(_clean_day_lines() + [bot]) + "\n")
+    assert _batch_cells(spark, robot) == batch
+    streamed = _stream_cells(spark, robot, tmp_path / "s_robot")
+    assert streamed["views"] == batch["views"]
+    assert sum(c[-1] for c in streamed["downloads"]) == 21
+    assert streamed["downloads"] != batch["downloads"]
+
+
 def test_streaming_repeat_key_dedup(spark, tmp_path):
     """dropDuplicatesWithinWatermark keyed like the Repeat filter: the
     stream keeps one event per key within the horizon (P9 streaming
@@ -243,7 +321,7 @@ def test_streaming_doc_dedup_against_snapshot_and_stream(spark, tmp_path):
     per within-stream duplicate hash, passes fresh docs through."""
     import json
 
-    from irstats2_spark.streaming.ingest import dedup_doc_stream
+    from irstats2_spark.pipeline.streams import dedup_doc_stream
 
     src = tmp_path / "docs"
     src.mkdir()
@@ -294,7 +372,7 @@ def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
         minhash_signatures,
         word_shingles,
     )
-    from irstats2_spark.streaming.ingest import neardup_doc_stream
+    from irstats2_spark.pipeline.streams import neardup_doc_stream
 
     base = "the quick brown fox jumps over the lazy dog near the river bank today"
     old_docs = spark.createDataFrame(
@@ -637,110 +715,6 @@ def test_streaming_repeat_event_ttl_bounded_state_under_available_now(
     assert n_ttl == 2  # idle A purged; B, C alive
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    _has_protobuf(),
-    reason="protobuf present: the guard is inert and the e2e below runs",
-)
-def test_streaming_repeat_tws_fails_fast_without_protobuf(spark):
-    """The EXPERIMENTAL flag (r7 verdict #4; namespaced r9 per r8
-    verdict #6): where protobuf is absent (so the e2e test below
-    skips), the tws path must refuse to build a query at all — no
-    silently-untested runtime surface — and point at the tested twin.
-    It now lives in streaming.experimental, OUT of the public ingest
-    surface, until its e2e can actually run."""
-    from irstats2_spark.streaming.experimental import repeat_filter_stream_tws
-
-    with pytest.raises(RuntimeError, match="repeat_filter_stream"):
-        repeat_filter_stream_tws(spark.range(1))
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python protocol needs google.protobuf, "
-    "absent from this container (and the environment forbids pip "
-    "install, so the r6 verdict's 'add protobuf to the dev env' is "
-    "blocked here — the skip auto-lifts the moment the dep lands); the "
-    "shared _repeat_fold stays covered via the applyInPandasWithState "
-    "test AND the call-time guard test above",
-)
-def test_streaming_repeat_tws_ttl_matches_classic(spark, tmp_path):
-    """transformWithStateInPandas variant: identical anchor semantics
-    across micro-batches on the RocksDB state store — batch 2's 00:55
-    event is dropped against batch 1's 00:00 anchor (the 00:30 drop did
-    not refresh it), 01:30 is kept. The TTL (= timeout) bounds state by
-    construction: expiring an anchor older than the timeout cannot
-    change any future decision."""
-    from irstats2_spark.streaming.experimental import repeat_filter_stream_tws
-    from irstats2_spark.streaming.ingest import read_access_stream
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-
-        def line(ts, ip="10.0.0.1"):
-            return "\t".join(
-                [ts, ip, "Mozilla/5.0 Chrome/1", "", "?fulltext=yes", "1", "100"]
-            )
-
-        logs = tmp_path / "cur"
-        logs.mkdir()
-        out_dir = tmp_path / "out"
-        ck = tmp_path / "ck"
-
-        def run_once():
-            stream = repeat_filter_stream_tws(
-                read_access_stream(spark, str(logs), dedup_lines=False),
-                timeout=3600,
-            )
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", str(out_dir))
-                .option("checkpointLocation", str(ck))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        (logs / "b1.log").write_text(
-            line("2024-01-01T00:00:00Z") + "\n"
-            + line("2024-01-01T00:30:00Z") + "\n"
-        )
-        run_once()
-        (logs / "b2.log").write_text(
-            line("2024-01-01T00:55:00Z") + "\n"
-            + line("2024-01-01T01:30:00Z") + "\n"
-        )
-        run_once()
-
-        got = sorted(
-            r.epoch for r in spark.read.parquet(str(out_dir)).collect()
-        )
-        base = 1704067200  # 2024-01-01T00:00:00Z
-        assert got == [base, base + 5400]
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_streaming_session_window(spark, tmp_path):
     import datetime as dt
 
@@ -837,7 +811,7 @@ def test_streaming_bloom_prefilter_matches_batch_probe(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.dedup import bloom_build, bloom_probe
-    from irstats2_spark.streaming.ingest import bloom_prefilter_stream
+    from irstats2_spark.pipeline.streams import bloom_prefilter_stream
 
     m_bits, k = 256, 3
     snap_texts = [f"snapshot doc {i}" for i in range(30)]
@@ -892,7 +866,7 @@ def test_streaming_decontamination_matches_batch_scores(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.contamination import contamination_scores
-    from irstats2_spark.streaming.ingest import decontaminate_stream
+    from irstats2_spark.pipeline.streams import decontaminate_stream
 
     bench = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",)], "text string"
@@ -1007,7 +981,7 @@ def test_bucketed_snapshot_dedup_join_without_snapshot_exchange(spark, tmp_path)
     the bucketed snapshot must plan NO exchange on the snapshot side —
     the corpus-sized table is pre-hashed at write time; only the
     day-sized batch shuffles to match."""
-    from irstats2_spark.sources.storage import write_corpus_snapshot_bucketed
+    from irstats2_spark.pipeline.layout import write_corpus_snapshot_bucketed
 
     snap = spark.createDataFrame(
         [(i, f"snapshot doc number {i}") for i in range(50)],
@@ -1055,7 +1029,7 @@ def test_streaming_lm_quality_matches_batch_scores(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.textstats import lm_nll_scores
-    from irstats2_spark.streaming.ingest import lm_quality_stream
+    from irstats2_spark.pipeline.streams import lm_quality_stream
 
     ref = spark.createDataFrame(
         [("the cat sat on the mat and the cat ran",)], "text string"
@@ -1116,7 +1090,7 @@ def test_streaming_corpus_ingest_accumulates_and_dedups(spark, tmp_path):
     short docs, and grow corpus + snapshot together."""
     import json
 
-    from irstats2_spark.streaming.ingest import start_corpus_stream
+    from irstats2_spark.pipeline.streams import start_corpus_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -1166,7 +1140,7 @@ def test_replicate_stream_matches_batch(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.sampling import replicate_by_rates
-    from irstats2_spark.streaming.ingest import replicate_stream
+    from irstats2_spark.pipeline.streams import replicate_stream
 
     rows = [
         {"doc_id": i, "ts": f"2024-01-01T00:00:{i:02d}Z",
@@ -1229,7 +1203,7 @@ def test_streaming_corpus_ingest_replay_is_idempotent(spark, tmp_path):
     import json
     import shutil
 
-    from irstats2_spark.streaming.ingest import start_corpus_stream
+    from irstats2_spark.pipeline.streams import start_corpus_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -1286,7 +1260,7 @@ def test_write_corpus_shards_roundtrip_verifies(spark, tmp_path):
     consumer's download-verification protocol), and every doc lands in
     its manifest shard."""
     from irstats2_spark.pipeline.curate import shard_manifest
-    from irstats2_spark.sources.storage import write_corpus_shards
+    from irstats2_spark.pipeline.layout import write_corpus_shards
 
     docs = spark.createDataFrame(
         [(i, f"document body number {i}") for i in range(60)],
@@ -1325,7 +1299,7 @@ def test_simhash_doc_stream_matches_batch_incremental(spark, tmp_path):
         simhash64,
         simhash_hamming_incremental,
     )
-    from irstats2_spark.streaming.ingest import simhash_doc_stream
+    from irstats2_spark.pipeline.streams import simhash_doc_stream
 
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away to the hills")
@@ -1394,7 +1368,7 @@ def test_clean_chunks_stream_matches_batch_rewrite(spark, tmp_path):
         remove_corpus_frequent_chunks,
         remove_listed_chunks,
     )
-    from irstats2_spark.streaming.ingest import clean_chunks_stream
+    from irstats2_spark.pipeline.streams import clean_chunks_stream
 
     boiler = " ".join(f"b{i}" for i in range(4))
     rows = [
@@ -1464,7 +1438,7 @@ def test_winnow_doc_stream_matches_batch_incremental(spark, tmp_path):
 
     from irstats2_spark.pipeline.dedup import winnow_incremental
     from irstats2_spark.pipeline.textstats import winnow_fingerprints
-    from irstats2_spark.streaming.ingest import winnow_doc_stream
+    from irstats2_spark.pipeline.streams import winnow_doc_stream
 
     run = "s1 s2 s3 s4 s5 s6 s7"
     old_rows = [
@@ -1526,7 +1500,7 @@ def test_quality_gate_stream_matches_batch(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.textstats import gopher_quality_gate
-    from irstats2_spark.streaming.ingest import quality_gate_stream
+    from irstats2_spark.pipeline.streams import quality_gate_stream
 
     rows = [
         {"doc_id": 1, "text": "the and of to in is a " * 10},  # passes floor
@@ -1567,7 +1541,7 @@ def test_edit_distance_doc_stream_matches_batch_incremental(spark, tmp_path):
 
     from irstats2_spark.pipeline.dedup import edit_distance_incremental
     from irstats2_spark.pipeline.textstats import winnow_fingerprints
-    from irstats2_spark.streaming.ingest import edit_distance_doc_stream
+    from irstats2_spark.pipeline.streams import edit_distance_doc_stream
 
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away to the hills")
@@ -1680,7 +1654,7 @@ def test_streaming_substring_match_probes_suffix_snapshot(spark, tmp_path):
     import json
 
     from irstats2_spark.pipeline.suffix import suffix_windows
-    from irstats2_spark.streaming.ingest import substring_match_stream
+    from irstats2_spark.pipeline.streams import substring_match_stream
 
     passage = "w1 w2 w3 w4 w5 w6 w7"  # 7 tokens; min_len=5 -> 3 windows
     old_docs = spark.createDataFrame(
@@ -1746,7 +1720,7 @@ def test_remove_spans_stream_matches_batch_incremental(spark, tmp_path):
         remove_repeated_spans_incremental,
         write_gram_snapshot,
     )
-    from irstats2_spark.streaming.ingest import remove_spans_stream
+    from irstats2_spark.pipeline.streams import remove_spans_stream
 
     passage = "p1 p2 p3 p4 p5 p6 p7"
     old_docs = spark.createDataFrame(
