@@ -20,7 +20,6 @@ from irstats2_spark.sources.access_log import with_event_columns
 
 def build_silver_events(
     events: DataFrame,
-    repeat_timeout: int = 3600,
     robots_kwargs: dict | None = None,
 ) -> DataFrame:
     """P8 + P9 + P10 over parsed access events (already ACCESS_EVENT
@@ -28,7 +27,7 @@ def build_silver_events(
     ev = events if "epoch" in events.columns else with_event_columns(events)
     ev = ev.filter(ev.datestamp.isNotNull())  # P10 null-year guard
     ev = robots_filter(ev, **(robots_kwargs or {}))
-    return repeat_filter(ev, timeout=repeat_timeout)
+    return repeat_filter(ev)
 
 
 def build_store(

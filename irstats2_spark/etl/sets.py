@@ -19,10 +19,11 @@ Set types (Sets.pm:362-457):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from irstats2_spark.functions.names import normalise_name_udf
@@ -62,42 +63,32 @@ def _maybe_anon(col, anon: bool):
     return F.md5(col) if anon else col
 
 
-def subject_closure(subjects: DataFrame, max_depth: int = 16) -> DataFrame:
+def subject_closure(subjects: DataFrame) -> DataFrame:
     """F9: ancestor closure `(subjectid, ancestor)` including self.
 
-    Iterative self-join to fixpoint with a depth bound — subject trees are
-    3-4 levels deep in practice (FIXTURES §4); the loop unions per-level
-    frontiers, all on a dimension-sized table (broadcastable, never the
-    fact side).
-    """
-    base = subjects.select(
-        F.col("subjectid").alias("subjectid"),
-        F.col("subjectid").alias("ancestor"),
+    The subject table is config-sized (a few levels, FIXTURES §4), so one
+    job collects its `(subjectid, parent)` edges and the driver walks each
+    subject's parents; the visited set ends a cyclic tree."""
+    parents: dict = {}
+    ids = []
+    for sid, parent in subjects.select("subjectid", "parent").collect():
+        ids.append(sid)
+        if sid is not None and parent is not None:
+            parents.setdefault(sid, []).append(parent)
+    rows = set()
+    for sid in ids:
+        seen, todo = {sid}, [sid]
+        while todo:
+            for parent in parents.get(todo.pop(), ()):
+                if parent not in seen:
+                    seen.add(parent)
+                    todo.append(parent)
+        rows.update((sid, anc) for anc in seen)
+    dtype = subjects.schema["subjectid"].dataType
+    schema = T.StructType(
+        [T.StructField("subjectid", dtype), T.StructField("ancestor", dtype)]
     )
-    parent_of = subjects.select(
-        F.col("subjectid").alias("child"), F.col("parent").alias("parent_anc")
-    ).filter(F.col("parent_anc").isNotNull())
-
-    closure = base
-    frontier = base.select("subjectid", F.col("ancestor").alias("cur"))
-    for depth in range(max_depth):
-        # fresh alias names per level avoid self-join expression-id clashes
-        f, p = f"f{depth}", f"p{depth}"
-        nxt = (
-            frontier.alias(f)
-            .join(parent_of.alias(p), F.col(f"{f}.cur") == F.col(f"{p}.child"), "inner")
-            .select(
-                F.col(f"{f}.subjectid").alias("subjectid"),
-                F.col(f"{p}.parent_anc").alias("cur"),
-            )
-        )
-        if nxt.isEmpty():
-            break
-        closure = closure.unionByName(
-            nxt.select("subjectid", F.col("cur").alias("ancestor"))
-        )
-        frontier = nxt
-    return closure.distinct()
+    return subjects.sparkSession.createDataFrame(list(rows), schema)
 
 
 def _extract_values(eprints: DataFrame, cfg: SetConfig, subjects: DataFrame | None):

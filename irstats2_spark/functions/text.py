@@ -43,19 +43,12 @@ def extract_search_terms(
     referrer_col: str = "referring_entity_id",
     base_url: str | None = None,
     stopwords: list[str] | None = None,
-    parallelize: bool = True,
 ) -> DataFrame:
     """Explode each qualifying referrer into normalized search words.
 
     Input: a DataFrame of download events (caller applies the is_download
-    restriction). Output: input columns + ``word``. Pass
-    ``parallelize=False`` when the input is already shuffle-distributed
-    (e.g. post-aggregation) to skip the narrow-input repartition guard.
+    restriction). Output: input columns + ``word``.
     """
-    from irstats2_spark.parallel import ensure_parallelism
-
-    if parallelize:
-        df = ensure_parallelism(df)
     # Project host/uri ONCE and reference them by name below. Inlining
     # url_hostname()/url_uri() at each of the ~7 use sites duplicates the
     # whole prepare+regex subtree combinatorially, and Catalyst pays for
@@ -133,7 +126,5 @@ def search_term_counts(
     ref_counts = (
         df.groupBy(F.col(referrer_col)).agg(F.count(F.lit(1)).alias("__n")).cache()
     )
-    words = extract_search_terms(
-        ref_counts, referrer_col, base_url, stopwords, parallelize=False
-    )
+    words = extract_search_terms(ref_counts, referrer_col, base_url, stopwords)
     return words.groupBy("word").agg(F.sum("__n").alias("count"))

@@ -84,7 +84,7 @@ def word_shingles(
     LSH, contamination — one extra corpus-wide exchange on
     (doc_id, shingle) for work the next groupBy's shuffle absorbs
     anyway.)"""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     exploder = F.explode_outer if keep_empty else F.explode
@@ -844,7 +844,7 @@ def simhash(
     the scan stage and costs exactly one pass over the text. (The
     previous formulation exploded words and shuffled twice: once for the
     (doc, word) distinct, once for the vote groupBy.)"""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     words = F.array_distinct(
@@ -903,7 +903,7 @@ def simhash64(
     import numpy as np
     import pandas as pd
 
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     src = docs.select(
@@ -1175,7 +1175,7 @@ def embedding_cosine_dups(
     import numpy as np
     import pandas as pd
 
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     spark = embeddings.sparkSession
     src = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -1418,7 +1418,7 @@ def exact_dedup_incremental(
 
     ``seen_hashes`` needs one column ``text_hash`` (md5 hex), e.g. the
     ``text_hash`` output of prior exact_dedup runs (persist it bucketed
-    by text_hash via sources.storage.write_fact_bucketed and the anti-
+    by text_hash via layout.write_corpus_snapshot_bucketed and the anti-
     join below plans exchange-free on the snapshot side). Returns the
     batch's fresh groups: (text_hash, keeper_id = min id within the
     batch, n_docs = batch occurrences) for hashes absent from the
@@ -2089,7 +2089,7 @@ def cosine_pairs_inverted(
     max_df^2 pairs, so AQE sees bounded keys), one (a, b) dot rollup,
     two id-keyed norm joins. Shuffles carry ids + small ints, never
     text."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
     from irstats2_spark.pipeline.textstats import tokens
 
     docs = ensure_parallelism(docs)

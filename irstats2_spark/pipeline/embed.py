@@ -71,7 +71,7 @@ def embed_text_stub(
     import numpy as np
     import pandas as pd
 
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     src = ensure_parallelism(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

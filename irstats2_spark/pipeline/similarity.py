@@ -251,7 +251,7 @@ def hyperplane_signatures(
     Computed as an Arrow-batched numpy GEMM (~5x the 16 interpreted
     higher-order folds of hyperplane_sig_expr, with bit-identical
     output); map-side only, no shuffle."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     src = ensure_parallelism(
         embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -326,7 +326,7 @@ def hyperplane_topk(
     def banded(df, idc, vecc, out_id):
         # one map-side GEMM pass emits the quantized vector AND its
         # signature — no join back, the corpus is never shuffled
-        from irstats2_spark.parallel import ensure_parallelism
+        from irstats2_spark.pipeline.parallel import ensure_parallelism
 
         src = ensure_parallelism(
             df.select(F.col(idc).alias("id"), F.col(vecc).alias("v"))
@@ -470,7 +470,7 @@ def ivf_assign_gemm(
     shuffled — map-side only, same plan shape as the fold."""
     import numpy as np
 
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     cpdf = centroids.select(
         F.col(c_id_col).alias("cid"), F.col(c_vec_col).alias("cv")

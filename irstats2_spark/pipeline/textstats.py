@@ -203,7 +203,7 @@ def repetition_features(
     (ensure_parallelism): this is exactly the CPU-bound map stage that a
     single under-split parquet file would otherwise serialize.
     """
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     # materialize the token array once: _dup_ngram_frac slices its input
@@ -1452,7 +1452,7 @@ def gopher_quality_gate(
     one materialized tokenization (zero shuffle, fuses into the scan) —
     the cheapest tier of the quality stack, meant to run before the
     classifier votes and LM scoring tiers."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     text = F.col(text_col)
@@ -1654,7 +1654,7 @@ def lang_confusion_audit(
     one core); the rollup is one groupBy over a key domain of
     |langs|^2 cells, and the within-label totals ride a broadcast of
     |langs| rows — nothing corpus-sized shuffles."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     detected = docs.select(
@@ -1742,7 +1742,7 @@ def token_entropy(
     file-partitioning so a single parquet file does not serialize the
     per-row O(types x tokens) work onto one core. Fine for documents,
     not for megabyte blobs."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
 
@@ -1809,7 +1809,7 @@ def tokenizer_fertility(
     stratum-keyed agg of integer partials."""
     from pyspark.sql import Window
 
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     ex = docs.select(
@@ -1940,7 +1940,7 @@ def burstiness_audit(
     integer moments (two keyed shuffles carrying small ints), then a
     TakeOrdered top-k cut (count DESC, token ASC) — no global sort;
     the N scalar joins in as a broadcast single-row aggregate."""
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
 
     docs = ensure_parallelism(docs)
     n_docs = docs.select(

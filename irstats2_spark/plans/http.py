@@ -44,9 +44,6 @@ CACHE_ENABLED_VIEWS = frozenset(
     {"Table", "Graph", "Spark", "GeoChart", "PieChart"}
 )
 
-# Context.pm:455-457 — default bad-character strip for context params
-_CTX_STRIP_RE = re.compile(r"[<>/\\;=&?%'\x00-\x1f]")
-
 
 def validate_non_context_param(key: str, value: str) -> bool:
     """Utils.pm:52-110's whitelist: unknown or malformed params are

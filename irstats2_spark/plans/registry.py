@@ -1,40 +1,19 @@
-"""Config-driven registries (SURVEY §2.10): processors, filters, metrics,
-views, and report definitions — the reference's plugin surface
-(Processor.pm:15-26, Handler.pm:1049-1113, View/KeyFigures.pm:13-68,
-cfg.d/z_irstats2.pl:319-577) as plain Python registries.
+"""Config-driven registries (SURVEY §2.10): KeyFigures metrics and report
+definitions — the reference's report plugin surface
+(View/KeyFigures.pm:13-68, cfg.d/z_irstats2.pl:319-577) as plain Python
+registries. The nightly pipeline (the reference's filter and processor
+plugins, Handler.pm:1049-1113) is defined once, in ``etl.pipeline``.
 
-A deployment registers its own processors/filters/metrics exactly like
-the reference's $c->{irstats2} config blocks; the defaults mirror the
-shipped configuration.
+A deployment registers its own metrics and reports exactly like the
+reference's $c->{irstats2} config blocks; the defaults mirror the shipped
+configuration.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-
 from irstats2_spark.plans.context import Context
-
-
-@dataclass(frozen=True)
-class ProcessorDef:
-    """A fact producer: name(s) it provides + builder(silver_df, deps)."""
-
-    provides: tuple[str, ...]
-    build: Callable[..., dict[str, DataFrame]]
-    dataset: str = "access"  # access | eprint | history
-    priority: int = 100
-
-
-@dataclass(frozen=True)
-class FilterDef:
-    """A record filter applied before processors (priority order)."""
-
-    name: str
-    apply: Callable[[DataFrame], DataFrame]
-    priority: int = 100
 
 
 @dataclass(frozen=True)
@@ -96,69 +75,19 @@ DEFAULT_REPORTS: dict[str, ReportDef] = {
 
 
 class Registry:
-    """Engine-wide plugin registry with priority ordering
-    (Handler.pm:1049-1113)."""
+    """Engine-wide registry of KeyFigures metrics and report pages."""
 
     def __init__(self) -> None:
-        self.processors: dict[str, ProcessorDef] = {}
-        self.filters: list[FilterDef] = []
         self.metrics: dict[str, MetricDef] = {}
         self.reports: dict[str, ReportDef] = dict(DEFAULT_REPORTS)
-
-    def register_processor(self, name: str, p: ProcessorDef) -> None:
-        self.processors[name] = p
-
-    def register_filter(self, f: FilterDef) -> None:
-        self.filters.append(f)
-        self.filters.sort(key=lambda x: x.priority)
 
     def register_metric(self, m: MetricDef) -> None:
         self.metrics[m.name] = m
 
-    def datatypes(self) -> list[str]:
-        out: list[str] = []
-        for p in sorted(self.processors.values(), key=lambda x: x.priority):
-            out.extend(p.provides)
-        return out
-
 
 def default_registry() -> Registry:
-    """Registry mirroring the reference's shipped plugin set."""
-    from irstats2_spark.etl import processors as P
-    from irstats2_spark.operators.filters import repeat_filter, robots_filter
-
+    """Registry mirroring the reference's shipped metrics and reports."""
     reg = Registry()
-    reg.register_filter(FilterDef("robots", robots_filter, priority=100))
-    reg.register_filter(FilterDef("repeat", repeat_filter, priority=200))
-    reg.register_processor(
-        "Downloads",
-        ProcessorDef(
-            provides=("downloads", "views"),
-            build=lambda ev: {"downloads": P.downloads(ev), "views": P.views(ev)},
-        ),
-    )
-    reg.register_processor(
-        "DocDownloads",
-        ProcessorDef(
-            provides=("doc_downloads",),
-            build=lambda ev: {"doc_downloads": P.doc_downloads(ev)},
-        ),
-    )
-    reg.register_processor(
-        "Browsers",
-        ProcessorDef(provides=("browsers",), build=lambda ev: {"browsers": P.browsers(ev)}),
-    )
-    reg.register_processor(
-        "Referrer",
-        ProcessorDef(provides=("referrer",), build=lambda ev: {"referrer": P.referrer(ev)}),
-    )
-    reg.register_processor(
-        "SearchTerms",
-        ProcessorDef(
-            provides=("search_terms",),
-            build=lambda ev: {"search_terms": P.search_terms(ev)},
-        ),
-    )
     reg.register_metric(
         MetricDef("downloads", Context(datatype="downloads", range="_ALL_"))
     )

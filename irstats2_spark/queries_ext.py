@@ -172,7 +172,7 @@ def events_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sessionization — gap-based per-user sessions (operators/sessions.py).
+# Sessionization — gap-based per-user sessions (pipeline/sessions.py).
 # ---------------------------------------------------------------------------
 @register(
     "events_sessionize",
@@ -201,10 +201,10 @@ def events_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(n) AS BIGINT) AS max_session_events
     FROM per_session GROUP BY 1
     """,
-    doc="sessionize extension — 30-min-gap sessions, one shuffle (see operators/sessions.py)",
+    doc="sessionize extension — 30-min-gap sessions, one shuffle (see pipeline/sessions.py)",
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.sessions import session_stats
+    from irstats2_spark.pipeline.sessions import session_stats
 
     return session_stats(load_table(spark, "events", sf_dir), gap_seconds=1800)
 
@@ -332,7 +332,7 @@ def text_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# As-of join — nearest preceding right row per key (operators/asof.py).
+# As-of join — nearest preceding right row per key (pipeline/asof.py).
 # "For each purchase, the same user's most recent click at-or-before it."
 # ---------------------------------------------------------------------------
 @register(
@@ -361,7 +361,7 @@ def text_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="as-of join extension — latest prior click per purchase, one shuffle",
 )
 def events_asof_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.asof import asof_join_prior
+    from irstats2_spark.pipeline.asof import asof_join_prior
 
     ev = load_table(spark, "events", sf_dir)
     res = asof_join_prior(
@@ -603,7 +603,7 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Skew-bounded join (operators/skew.py): the J1 fact x dimension shape
+# Skew-bounded join (pipeline/skew.py): the J1 fact x dimension shape
 # under a hot key, with the dimension NOT broadcast — salting spreads the
 # hot key over `buckets` reducers. The salt never escapes, so the oracle
 # is the plain unsalted equi-join.
@@ -620,7 +620,7 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join; right side replicated R-fold, hot left keys split R ways",
 )
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.skew import salted_join
+    from irstats2_spark.pipeline.skew import salted_join
 
     cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
     nat = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
@@ -1080,7 +1080,7 @@ def events_attribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_session_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from irstats2_spark.operators.sessions import sessionize
+    from irstats2_spark.pipeline.sessions import sessionize
 
     events = load_table(spark, "events", sf_dir)
     sess = sessionize(events, gap_seconds=1800).withColumn(
@@ -1127,7 +1127,7 @@ def events_session_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Session-sequence analytics (operators/sessions.py): opening paths and
+# Session-sequence analytics (pipeline/sessions.py): opening paths and
 # co-visitation lift — the journey-level companions to sessionize.
 # ---------------------------------------------------------------------------
 _SESSIONS_CTE = """
@@ -1174,7 +1174,7 @@ _SESSIONS_CTE = """
     "final top-k is a TakeOrdered, never a full sort",
 )
 def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.sessions import top_paths
+    from irstats2_spark.pipeline.sessions import top_paths
 
     return top_paths(load_table(spark, "events", sf_dir), prefix_len=3, k=20)
 
@@ -1212,7 +1212,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one aggregation row; per-type totals broadcast",
 )
 def events_covisit_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.sessions import covisit_lift
+    from irstats2_spark.pipeline.sessions import covisit_lift
 
     return covisit_lift(load_table(spark, "events", sf_dir))
 
@@ -1248,7 +1248,7 @@ def events_covisit_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="interval-overlap join: the 5 busiest 10-minute windows joined "
     "against every session whose [start, end] span overlaps them — via "
-    "operators/intervals.interval_overlap_join's time-bucket expansion, "
+    "pipeline/intervals.interval_overlap_join's time-bucket expansion, "
     "which turns the no-equi-key range predicate Catalyst would plan as "
     "a nested-loop into a plain hash equi-join on the bucket id "
     "(AQE-splittable; expansion bounded by interval length / bucket); "
@@ -1256,8 +1256,8 @@ def events_covisit_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form loses nothing",
 )
 def events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.intervals import interval_overlap_join
-    from irstats2_spark.operators.sessions import sessionize
+    from irstats2_spark.pipeline.intervals import interval_overlap_join
+    from irstats2_spark.pipeline.sessions import sessionize
 
     ev = load_table(spark, "events", sf_dir)
     us = F.unix_micros(F.col("ts"))

@@ -945,7 +945,7 @@ def text_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="language-ID heuristic: marker-token votes, alphabetical tie-break",
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
     from irstats2_spark.pipeline.textstats import lang_id_from_tokens, tokens
 
     docs = ensure_parallelism(load_table(spark, "documents", sf_dir))
@@ -1789,7 +1789,7 @@ def similarity_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(MAX(tag0), 'none') AS top_tag
     FROM flat GROUP BY 1
     """,
-    doc="VARIANT/JSON sidecar ingestion (sources/jsonmeta.py): heterogeneous "
+    doc="VARIANT/JSON sidecar ingestion (pipeline/jsonmeta.py): heterogeneous "
     "per-doc JSON metadata parsed once into VARIANT (try_parse_json — the "
     "deliberately-malformed 10% become NULL variants, not failed jobs), "
     "typed fields pulled with try_variant_get paths (nested object, array "
@@ -1797,7 +1797,7 @@ def similarity_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan; the only shuffle is the final aggregation.",
 )
 def meta_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.sources.jsonmeta import extract_meta_fields, with_variant_meta
+    from irstats2_spark.pipeline.jsonmeta import extract_meta_fields, with_variant_meta
 
     docs = load_table(spark, "documents", sf_dir)
     sidecar = F.when(docs.doc_id % 10 == 9, F.lit('{"broken":')).otherwise(

@@ -72,76 +72,3 @@ RENDERED_DIM = T.StructType(
         T.StructField("rendered_set_value", T.StringType()),
     ]
 )
-
-# EPrint metadata consumed by set building + eprint processors (FIXTURES.md §2).
-EPRINT = T.StructType(
-    [
-        T.StructField("eprintid", T.IntegerType()),
-        T.StructField("eprint_status", T.StringType()),
-        T.StructField("datestamp", T.TimestampType()),
-        T.StructField("lastmod", T.TimestampType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("divisions", T.ArrayType(T.StringType())),
-        T.StructField("subjects", T.ArrayType(T.StringType())),
-        T.StructField(
-            "creators",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(
-                            "name",
-                            T.StructType(
-                                [
-                                    T.StructField("family", T.StringType()),
-                                    T.StructField("given", T.StringType()),
-                                ]
-                            ),
-                        ),
-                        T.StructField("id", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("full_text_status", T.StringType()),
-    ]
-)
-
-# Per-eprint documents (FIXTURES.md §3).
-DOCUMENT = T.StructType(
-    [
-        T.StructField("docid", T.IntegerType()),
-        T.StructField("eprintid", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("is_public", T.BooleanType()),
-    ]
-)
-
-# Subject hierarchy (FIXTURES.md §4).
-SUBJECT = T.StructType(
-    [
-        T.StructField("subjectid", T.StringType()),
-        T.StructField("parent", T.StringType()),
-        T.StructField("can_post", T.BooleanType()),
-        T.StructField("name", T.StringType()),
-    ]
-)
-
-# History actions (FIXTURES.md §5).
-HISTORY = T.StructType(
-    [
-        T.StructField("historyid", T.IntegerType()),
-        T.StructField("datasetid", T.StringType()),
-        T.StructField("objectid", T.IntegerType()),
-        T.StructField("action", T.StringType()),
-        T.StructField("timestamp", T.TimestampType()),
-    ]
-)
-
-# GeoIP stand-in ranges table (FIXTURES.md §6).
-GEOIP_RANGE = T.StructType(
-    [
-        T.StructField("ip_start_long", T.LongType()),
-        T.StructField("ip_end_long", T.LongType()),
-        T.StructField("country_iso2", T.StringType()),
-    ]
-)

@@ -53,17 +53,10 @@ def parse_access_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     # requires (e.g. DocDownloads only needs referent_docid)
 
 
-def read_access_logs(
-    spark: SparkSession,
-    path: str,
-    dedup_lines: bool = True,
-) -> DataFrame:
-    """S1+S2: read raw log lines (plain or .gz via glob), optionally
-    dedup exact duplicate lines, and parse to the ACCESS_EVENT schema."""
-    lines = spark.read.text(path)
-    if dedup_lines:
-        lines = lines.dropDuplicates(["value"])
-    return parse_access_lines(lines)
+def read_access_logs(spark: SparkSession, path: str) -> DataFrame:
+    """S1+S2: read raw log lines (plain or .gz via glob), dedup exact
+    duplicate lines, and parse to the ACCESS_EVENT schema."""
+    return parse_access_lines(spark.read.text(path).dropDuplicates(["value"]))
 
 
 def with_event_columns(events: DataFrame) -> DataFrame:

@@ -29,19 +29,14 @@ def _truncate_value(df: DataFrame) -> DataFrame:
     return df.withColumn("value", F.substring(F.col("value"), 1, 191))
 
 
-def write_fact(
-    fact: DataFrame,
-    root: str,
-    datatype: str,
-    mode: str = "overwrite",
-) -> str:
-    """Write one datatype's fact table partitioned by datestamp."""
+def write_fact(fact: DataFrame, root: str, datatype: str) -> str:
+    """Write (overwrite) one datatype's fact table partitioned by datestamp."""
     path = os.path.join(root, f"fact_{datatype}")
     (
         _truncate_value(fact)
         .repartition("datestamp")
         .write.partitionBy("datestamp")
-        .mode(mode)
+        .mode("overwrite")
         .parquet(path)
     )
     return path
@@ -150,36 +145,3 @@ def replay_from_date(
         .parquet(path)
     )
     return path
-
-
-def write_fact_bucketed(
-    fact: DataFrame,
-    root: str,
-    datatype: str,
-    table: str | None = None,
-    buckets: int = 16,
-    bucket_col: str = "eprintid",
-) -> str:
-    """Scale path: datestamp-partitioned AND eprintid-bucketed fact table.
-
-    Bucketing pre-hashes the join/group key at write time: a join or
-    aggregation between two tables bucketed the same way (same column,
-    same bucket count) reads co-located buckets and plans ZERO exchanges
-    — the 100 TB answer for fact-to-fact joins (downloads x views per
-    eprint) and repeated per-eprint rollups, where re-shuffling the fact
-    table per query would dominate. Requires saveAsTable (bucket metadata
-    lives in the session catalog); plain parquet paths cannot carry it.
-    tests/test_storage_streaming.py asserts the exchange-free join plan.
-    """
-    table = table or f"fact_{datatype}_bucketed"
-    path = os.path.join(root, f"{table}")
-    (
-        _truncate_value(fact)
-        .write.bucketBy(buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return table

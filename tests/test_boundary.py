@@ -4,7 +4,9 @@ The IRStats2 modules (access-log ingest, filters, ETL, gold storage, the
 fact stream, the query plans) must not import ``irstats2_spark.pipeline``
 or the ``irstats2_spark.queries_*`` catalogs, not even lazily inside a
 function. The extension may import the IRStats2 modules, never the other
-way round.
+way round. And the IRStats2 tree holds only what its entry points reach:
+a module that only the extension or a test imports belongs under
+``pipeline/``.
 """
 
 from __future__ import annotations
@@ -14,7 +16,24 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "irstats2_spark"
 IRSTATS2_DIRS = ("plans", "etl", "sources", "streaming", "operators", "functions")
-IRSTATS2_FILES = ("session.py", "schemas.py", "parallel.py")
+IRSTATS2_FILES = ("session.py", "schemas.py")
+# The nightly, serve and stream entry points, plus the two catalogs of
+# IRStats2-shaped queries.
+ENTRY_POINTS = (
+    "session",
+    "etl.pipeline",
+    "etl.sets",
+    "sources.access_log",
+    "sources.storage",
+    "sources.export",
+    "plans.http",
+    "plans.report",
+    "plans.registry",
+    "plans.views",
+    "streaming.ingest",
+    "queries_core",
+    "queries_irstats",
+)
 
 
 def _irstats2_modules() -> list[pathlib.Path]:
@@ -22,6 +41,11 @@ def _irstats2_modules() -> list[pathlib.Path]:
     for d in IRSTATS2_DIRS:
         out.extend(sorted((PKG / d).rglob("*.py")))
     return out
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = path.relative_to(PKG.parent).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
 def _forbidden(name: str) -> bool:
@@ -58,4 +82,28 @@ def test_irstats2_path_does_not_import_the_pipeline_extension():
     ]
     assert not offenders, "IRStats2 modules import the extension:\n" + "\n".join(
         offenders
+    )
+
+
+def test_every_irstats2_module_is_reachable_from_an_entry_point():
+    tree = {_module_name(p): p for p in _irstats2_modules()}
+    files = dict(tree)
+    todo = []
+    for root in ENTRY_POINTS:
+        name = f"irstats2_spark.{root}"
+        files[name] = PKG.joinpath(*root.split(".")).with_suffix(".py")
+        todo.append(name)
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for _, names in _imports(files[name]):
+            todo.extend(n for n in names if n in tree)
+    # a package counts as reached when a module inside it is
+    reached |= {n.rsplit(".", 1)[0] for n in reached}
+    unreached = sorted(set(tree) - reached)
+    assert not unreached, "IRStats2 modules no entry point imports:\n" + "\n".join(
+        unreached
     )

@@ -86,7 +86,7 @@ def test_parse_and_dedup(spark, log_dir):
 @pytest.fixture(scope="module")
 def store(spark, log_dir):
     ev = read_access_logs(spark, log_dir + "/*")
-    silver = build_silver_events(ev, repeat_timeout=3600)
+    silver = build_silver_events(ev)
     eprints = spark.createDataFrame(
         [
             (
@@ -209,11 +209,9 @@ def test_search_terms_builds_without_spark_jobs(spark, log_dir):
     partitioned by the repeat filter) must not probe the partitioning."""
     import uuid
 
-    from irstats2_spark import parallel
     from irstats2_spark.etl import processors as P
 
     silver = build_silver_events(read_access_logs(spark, log_dir + "/*"))
-    parallel._PARTS_MEMO.clear()  # a memoized probe would hide the job
     sc = spark.sparkContext
     group = f"test-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -223,6 +221,39 @@ def test_search_terms_builds_without_spark_jobs(spark, log_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_subject_closure_runs_one_spark_job(spark, tmp_path):
+    """F9 over a 4-level chain (plus a 2-cycle, which must still end):
+    one job reads the subject table, whatever the tree depth."""
+    import uuid
+
+    from irstats2_spark.etl.sets import subject_closure
+
+    path = str(tmp_path / "subjects")
+    spark.createDataFrame(
+        [("a", None), ("b", "a"), ("c", "b"), ("d", "c"), ("x", "y"), ("y", "x")],
+        "subjectid string, parent string",
+    ).write.parquet(path)
+    subjects = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        closure = subject_closure(subjects)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert closure.columns == ["subjectid", "ancestor"]
+    assert sorted(tuple(r) for r in closure.collect()) == [
+        ("a", "a"),
+        ("b", "a"), ("b", "b"),
+        ("c", "a"), ("c", "b"), ("c", "c"),
+        ("d", "a"), ("d", "b"), ("d", "c"), ("d", "d"),
+        ("x", "x"), ("x", "y"),
+        ("y", "x"), ("y", "y"),
+    ]
 
 
 def test_context_single_eprint_live_clamp(store):

@@ -312,8 +312,8 @@ def test_ensure_parallelism_memoizes_partition_probe(spark):
     builds of the same subtree skip the physical-plan materialization
     (r11 verdict #7 — the probe was a full analysis pass per call on
     the hot query-build path)."""
-    from irstats2_spark import parallel
-    from irstats2_spark.parallel import ensure_parallelism
+    from irstats2_spark.pipeline import parallel
+    from irstats2_spark.pipeline.parallel import ensure_parallelism
     from irstats2_spark.sources.testdata import load_table
 
     dp = spark.sparkContext.defaultParallelism

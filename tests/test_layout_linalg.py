@@ -1,6 +1,6 @@
 """Unit tests for the data-layout tier (pipeline/layout.py), the
 embedding linear-algebra tier (pipeline/linalg.py), and the
-session-journey analytics (operators/sessions.py additions)."""
+session-journey analytics (pipeline/sessions.py additions)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from irstats2_spark.pipeline import layout, linalg
-from irstats2_spark.operators import sessions
+from irstats2_spark.pipeline import sessions
 
 
 # ---------------------------------------------------------------------------
@@ -328,7 +328,7 @@ def _random_intervals(spark, n, seed, name):
 
 
 def test_interval_overlap_join_matches_direct_predicate(spark):
-    from irstats2_spark.operators.intervals import interval_overlap_join
+    from irstats2_spark.pipeline.intervals import interval_overlap_join
 
     left, lrows = _random_intervals(spark, 80, 3, "a")
     right, rrows = _random_intervals(spark, 60, 4, "b")
@@ -350,7 +350,7 @@ def test_interval_overlap_join_negative_timestamps(spark):
     would bucket [-90s, -30s] into bucket 0 alongside [30s, 90s] and MISS
     its true overlap with [-60s, -45s]; floor-division buckets must keep
     exact overlap semantics on both sides of zero."""
-    from irstats2_spark.operators.intervals import interval_overlap_join
+    from irstats2_spark.pipeline.intervals import interval_overlap_join
 
     lrows = [(1, -90_000_000, -30_000_000), (2, -10_000_000, 10_000_000)]
     rrows = [(1, -60_000_000, -45_000_000), (2, 5_000_000, 8_000_000),
@@ -365,7 +365,7 @@ def test_interval_overlap_join_negative_timestamps(spark):
 
 
 def test_interval_overlap_join_bucket_size_invariant(spark):
-    from irstats2_spark.operators.intervals import interval_overlap_join
+    from irstats2_spark.pipeline.intervals import interval_overlap_join
 
     left, _ = _random_intervals(spark, 40, 5, "a")
     right, _ = _random_intervals(spark, 40, 6, "b")
@@ -479,65 +479,6 @@ def test_opq_rotation_is_orthogonal_and_beats_raw_pq(spark):
            linalg.opq_vs_pq_distortion(df, dim=d, m=4, n_codes=4).collect()}
     assert out["opq_rotated"]["n_vecs"] == out["pq_raw"]["n_vecs"] == n
     assert out["opq_rotated"]["total_sq_err"] < out["pq_raw"]["total_sq_err"]
-
-
-def test_interval_tag_stream_matches_batch(spark, tmp_path):
-    import json
-
-    from irstats2_spark.streaming.ingest import interval_tag_stream
-
-    base = 1_700_000_000_000_000  # fixed epoch-us anchor
-    events = [
-        {"event_id": i, "ts": "2024-01-01T%02d:%02d:00" % (i // 60, i % 60)}
-        for i in range(0, 180, 7)
-    ]
-    src = tmp_path / "ev"
-    src.mkdir()
-    (src / "a.json").write_text("\n".join(json.dumps(r) for r in events) + "\n")
-    stream = (
-        spark.readStream.schema("event_id long, ts string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    del base
-    # two 30-min incident windows
-    import datetime as dt
-
-    def us(h, m):
-        return int(
-            dt.datetime(2024, 1, 1, h, m, tzinfo=dt.timezone.utc).timestamp()
-            * 1_000_000
-        )
-
-    intervals = spark.createDataFrame(
-        [(1, us(0, 15), us(0, 45)), (2, us(1, 30), us(2, 0))],
-        "incident_id long, start_us long, end_us long",
-    )
-    q = (
-        interval_tag_stream(stream, intervals, bucket_seconds=600)
-        .writeStream.format("memory")
-        .queryName("tag_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.event_id, r.incident_id)
-        for r in spark.sql(
-            "SELECT event_id, incident_id FROM tag_stream_out"
-        ).collect()
-    )
-    batch = spark.createDataFrame(
-        [(r["event_id"], r["ts"]) for r in events], "event_id long, ts string"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    want = sorted(
-        (r.event_id, r.incident_id)
-        for r in interval_tag_stream(batch, intervals, bucket_seconds=600)
-        .select("event_id", "incident_id")
-        .collect()
-    )
-    assert got == want and len(got) > 0
 
 
 def test_encoding_anomaly_counts_dirty_strings(spark):
@@ -658,7 +599,7 @@ def test_zorder_matches_python_model_on_arbitrary_ints(spark, xs, bits):
     bucket=st.sampled_from([60, 600, 7200]),
 )
 def test_interval_overlap_property_vs_bruteforce(spark, data, bucket):
-    from irstats2_spark.operators.intervals import interval_overlap_join
+    from irstats2_spark.pipeline.intervals import interval_overlap_join
 
     # negative starts included: pre-1970 timestamps exercise the
     # floor-vs-truncate bucketing distinction (truncation toward zero

@@ -622,7 +622,7 @@ def test_sessionize_gap_boundary_and_tiebreak(spark):
     # Repeat.pm:89-95 parity: a gap EQUAL to the timeout stays in the same
     # session (the comparison is strictly greater); equal timestamps order
     # by the tiebreak column.
-    from irstats2_spark.operators.sessions import session_stats, sessionize
+    from irstats2_spark.pipeline.sessions import session_stats, sessionize
 
     rows = [
         # user 1: 0s, +1800s (same session), +1801s after that (new)
@@ -675,7 +675,7 @@ def test_vocab_top_k_orders_and_breaks_ties(spark):
 
 
 def test_asof_join_prior_semantics(spark):
-    from irstats2_spark.operators.asof import asof_join_prior
+    from irstats2_spark.pipeline.asof import asof_join_prior
 
     left = spark.createDataFrame(
         [
@@ -739,7 +739,7 @@ def test_asof_matches_pandas_merge_asof_random(spark):
     import numpy as np
     import pandas as pd
 
-    from irstats2_spark.operators.asof import asof_join_prior
+    from irstats2_spark.pipeline.asof import asof_join_prior
 
     rng = np.random.default_rng(7)
 
@@ -787,7 +787,7 @@ def test_asof_matches_pandas_merge_asof_random(spark):
 def test_sessionize_matches_sequential_oracle_random(spark):
     import numpy as np
 
-    from irstats2_spark.operators.sessions import sessionize
+    from irstats2_spark.pipeline.sessions import sessionize
 
     rng = np.random.default_rng(11)
     rows = [
@@ -1738,7 +1738,7 @@ def test_jsonmeta_variant_extraction_and_malformed_tolerance(spark):
     path extraction returns NULL (never an error) for malformed JSON,
     missing paths, and uncastable values; the fixed-schema from_json path
     agrees on the shared fields."""
-    from irstats2_spark.sources.jsonmeta import (
+    from irstats2_spark.pipeline.jsonmeta import (
         extract_meta_fields,
         with_struct_meta,
         with_variant_meta,

@@ -344,7 +344,7 @@ def test_salted_join_matches_plain_join_and_splits_hot_key(spark):
     (key, salt) so a hot key spreads over `buckets` reducers."""
     from pyspark.sql import functions as F
 
-    from irstats2_spark.operators.skew import salted_join
+    from irstats2_spark.pipeline.skew import salted_join
 
     fact = spark.range(0, 50_000).select(
         F.when(F.col("id") < 45_000, 0).otherwise(F.col("id") % 50 + 1).alias("k"),
@@ -364,7 +364,7 @@ def test_salted_join_matches_plain_join_and_splits_hot_key(spark):
 def test_salted_grouped_sum_matches_plain(spark):
     from pyspark.sql import functions as F
 
-    from irstats2_spark.operators.skew import salted_grouped_sum
+    from irstats2_spark.pipeline.skew import salted_grouped_sum
 
     df = spark.range(0, 30_000).select(
         (F.col("id") % 7).alias("g"), F.col("id").alias("v")
@@ -379,7 +379,7 @@ def test_salted_grouped_sum_accepts_column_exprs(spark):
     string '1' (which would resolve as a column named '1')."""
     from pyspark.sql import functions as F
 
-    from irstats2_spark.operators.skew import salted_grouped_sum
+    from irstats2_spark.pipeline.skew import salted_grouped_sum
 
     df = spark.range(0, 10_000).select(
         (F.col("id") % 3).alias("g"), F.col("id").alias("v")
@@ -447,7 +447,7 @@ def test_salted_join_bounds_skew_without_aqe(spark):
     plain join exactly."""
     from pyspark.sql import functions as F
 
-    from irstats2_spark.operators.skew import salted_join
+    from irstats2_spark.pipeline.skew import salted_join
 
     confs = {
         "spark.sql.adaptive.enabled": "false",

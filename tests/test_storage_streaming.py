@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -272,49 +271,6 @@ def test_stream_and_batch_facts_agree_on_a_clean_day(spark, tmp_path):
     assert streamed["downloads"] != batch["downloads"]
 
 
-def test_streaming_repeat_key_dedup(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keyed like the Repeat filter: the
-    stream keeps one event per key within the horizon (P9 streaming
-    approximation, SURVEY §2.9)."""
-    from irstats2_spark.streaming.ingest import read_access_stream
-
-    logs = tmp_path / "cur"
-    logs.mkdir()
-    rows = []
-    for i in range(6):  # same eprint/doc/ip, 10 min apart => one survivor
-        ts = dt.datetime(2024, 1, 1) + dt.timedelta(minutes=10 * i)
-        rows.append(
-            "\t".join(
-                [
-                    ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
-                    "10.0.0.1",
-                    "Mozilla/5.0 Chrome/1",
-                    "",
-                    "?fulltext=yes",
-                    "1",
-                    "100",
-                ]
-            )
-        )
-    # a different ip => its own key => second survivor
-    rows.append("2024-01-01T00:05:00Z\t10.0.0.2\tMozilla/5.0 Chrome/1\t\t?fulltext=yes\t1\t100")
-    (logs / "2024-01-01.log").write_text("\n".join(rows) + "\n")
-
-    stream = read_access_stream(
-        spark, str(logs), dedup_lines=False, repeat_key_dedup=True
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("repeat_dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM repeat_dedup_out").collect()
-    assert len(got) == 2
-
-
 def test_streaming_doc_dedup_against_snapshot_and_stream(spark, tmp_path):
     """dedup_doc_stream: the streaming twin of exact_dedup_incremental —
     drops docs whose hash is in the static snapshot, keeps one instance
@@ -429,63 +385,6 @@ def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
     assert all(new != 2 for (_, new) in got)  # the clean doc flags nothing
 
 
-def test_incremental_checkpoint_scan(spark, tmp_path):
-    from irstats2_spark.sources.checkpoint import (
-        Checkpoint,
-        advance_to_max,
-        incremental_scan,
-    )
-
-    ck = Checkpoint(str(tmp_path))
-    df = spark.createDataFrame(
-        [(i, f"e{i}") for i in range(1, 11)], "eprintid int, payload string"
-    )
-    first = incremental_scan(df, "eprintid", ck, "eprint")
-    assert first.count() == 10  # no checkpoint yet: full scan
-    advance_to_max(first, "eprintid", ck, "eprint")
-    assert ck.get("eprint", "eprintid") == 10
-
-    more = df.union(
-        spark.createDataFrame([(11, "e11"), (12, "e12")], df.schema)
-    )
-    second = incremental_scan(more, "eprintid", ck, "eprint")
-    assert sorted(r.eprintid for r in second.collect()) == [11, 12]
-    advance_to_max(second, "eprintid", ck, "eprint")
-    assert ck.get("eprint", "eprintid") == 12
-    # empty increment: checkpoint unchanged
-    advance_to_max(
-        incremental_scan(more, "eprintid", ck, "eprint"), "eprintid", ck, "eprint"
-    )
-    assert ck.get("eprint", "eprintid") == 12
-
-
-def test_jdbc_scan_options():
-    from irstats2_spark.sources.jdbc import jdbc_scan_options
-
-    opts = jdbc_scan_options(
-        "jdbc:mysql://db/eprints", "access", num_partitions=16, upper=5_000_000
-    )
-    assert opts["partitionColumn"] == "accessid"
-    assert opts["numPartitions"] == "16"
-    assert opts["upperBound"] == "5000000"
-    assert opts["fetchsize"] == "100000"
-
-
-def test_jdbc_tranche_bounds_match_shell_arithmetic():
-    """import_access_table_tranches:1-12 as windows: inclusive bounds,
-    last window may overshoot last_id (the shell's does too — the id
-    predicate, not the window, bounds the scan)."""
-    from irstats2_spark.sources.jdbc import tranche_bounds
-
-    assert tranche_bounds(25, first_id=1, tranche=10) == [
-        (1, 10),
-        (11, 20),
-        (21, 30),
-    ]
-    assert tranche_bounds(10, first_id=1, tranche=10) == [(1, 10)]
-    assert tranche_bounds(5, first_id=3, tranche=10) == [(3, 12)]
-
-
 def test_find_robots_ip_duplicates_three_probe_levels():
     """find_local_robots_ip_duplicates:32-48: a local prefix is a
     duplicate if the shipped list holds its /16, its /24, or the exact
@@ -512,295 +411,6 @@ def test_find_robots_ip_duplicates_three_probe_levels():
         )
         local = two_level + "123"
         assert find_robots_ip_duplicates([local]) == [(local, two_level)]
-
-
-def test_streaming_repeat_exact_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: the anchor persists across micro-batches —
-    an event in batch 2 within the timeout of batch 1's kept event is
-    dropped, and the anchor is NOT refreshed by dropped events."""
-    from irstats2_spark.streaming.ingest import (
-        read_access_stream,
-        repeat_filter_stream,
-    )
-
-    def line(ts, ip="10.0.0.1"):
-        return "\t".join(
-            [ts, ip, "Mozilla/5.0 Chrome/1", "", "?fulltext=yes", "1", "100"]
-        )
-
-    logs = tmp_path / "cur"
-    logs.mkdir()
-    out_dir = tmp_path / "out"
-    ck = tmp_path / "ck"
-
-    def run_once():
-        stream = repeat_filter_stream(
-            read_access_stream(spark, str(logs), dedup_lines=False), timeout=3600
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: keep 00:00 (anchor), drop 00:30
-    (logs / "b1.log").write_text(
-        line("2024-01-01T00:00:00Z") + "\n" + line("2024-01-01T00:30:00Z") + "\n"
-    )
-    run_once()
-    # batch 2: 00:55 within 3600s of the 00:00 anchor => dropped (the
-    # 00:30 drop must not have refreshed it); 01:30 beyond => kept
-    (logs / "b2.log").write_text(
-        line("2024-01-01T00:55:00Z") + "\n" + line("2024-01-01T01:30:00Z") + "\n"
-    )
-    run_once()
-
-    got = sorted(
-        r.epoch for r in spark.read.parquet(str(out_dir)).collect()
-    )
-    base = 1704067200  # 2024-01-01T00:00:00Z
-    assert got == [base, base + 5400]
-
-
-def test_streaming_repeat_state_ttl_prunes_idle_anchors(spark, tmp_path):
-    """state_ttl enforces Repeat.pm:39-56's prune on the stable engine
-    (ProcessingTimeTimeout): an anchor idle past the TTL is purged — a
-    later event that WOULD have been inside the first anchor's window
-    is kept because the anchor is gone (without TTL the same event is
-    dropped — pinned by test_streaming_repeat_exact_state_across_batches).
-    The purge path emits nothing (no phantom rows). Runs under a
-    continuous trigger: state_ttl's documented deployment (a pending
-    processing-time timer blocks availableNow self-termination)."""
-    import time
-
-    from irstats2_spark.streaming.ingest import (
-        read_access_stream,
-        repeat_filter_stream,
-    )
-
-    def line(ts, ip="10.0.0.1"):
-        return "\t".join(
-            [ts, ip, "Mozilla/5.0 Chrome/1", "", "?fulltext=yes", "1", "100"]
-        )
-
-    base = 1704067200  # 2024-01-01T00:00:00Z
-    logs = tmp_path / "cur"
-    logs.mkdir()
-
-    stream = repeat_filter_stream(
-        read_access_stream(spark, str(logs), dedup_lines=False),
-        timeout=3600,
-        state_ttl=1,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("repeat_ttl_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-
-        def rows():
-            return sorted(
-                r.epoch
-                for r in spark.sql("SELECT * FROM repeat_ttl_out").collect()
-            )
-
-        def wait_for(expected, deadline=60):
-            t0 = time.time()
-            while time.time() - t0 < deadline:
-                if rows() == expected:
-                    return
-                time.sleep(0.5)
-            assert rows() == expected
-
-        # anchor at 00:00 for the 10.0.0.1 key
-        (logs / "b1.log").write_text(line("2024-01-01T00:00:00Z") + "\n")
-        wait_for([base])
-        time.sleep(2.5)  # idle past the 1 s TTL; timers fire in the
-        # scheduled micro-batches and purge the anchor, emitting nothing
-        # 00:30 is inside the 00:00 anchor's 3600 s window — kept only
-        # because the anchor was purged
-        (logs / "b2.log").write_text(line("2024-01-01T00:30:00Z") + "\n")
-        wait_for([base, base + 1800])
-    finally:
-        q.stop()
-
-
-def test_streaming_repeat_event_ttl_bounded_state_under_available_now(
-    spark, tmp_path
-):
-    """state_ttl_mode='event' (r10 verdict #2): bounded repeat-filter
-    state for NIGHTLY availableNow runs. Three restarts over one
-    checkpoint must (a) each SELF-TERMINATE — the processing-time TTL
-    can't (a pending wall-clock timer blocks availableNow) — (b) emit
-    bit-identical rows to the unbounded twin (state_ttl >= timeout +
-    max_event_lag makes the purge invisible), and (c) actually prune:
-    the idle key A's anchor is gone once the watermark passes
-    anchor + state_ttl, so the TTL twin ends with 2 state rows where
-    the unbounded twin holds 3."""
-    from irstats2_spark.streaming.ingest import (
-        read_access_stream,
-        repeat_filter_stream,
-    )
-
-    def line(ts, ip):
-        return "\t".join(
-            [ts, ip, "Mozilla/5.0 Chrome/1", "", "?fulltext=yes", "1", "100"]
-        )
-
-    logs = tmp_path / "cur"
-    logs.mkdir()
-
-    def drive(tag, state_ttl, mode):
-        # the stream's own datestamp watermark (60 s delay) drives the
-        # event-time timers; contract: state_ttl >= timeout + delay
-        stream = repeat_filter_stream(
-            read_access_stream(
-                spark, str(logs), dedup_lines=False, watermark="60 seconds"
-            ),
-            timeout=3600,
-            state_ttl=state_ttl,
-            state_ttl_mode=mode,
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", str(tmp_path / f"out_{tag}"))
-            .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), (
-            f"{tag}: availableNow run did not self-terminate"
-        )
-        return q.lastProgress["stateOperators"][0]["numRowsTotal"]
-
-    def drive_both():
-        n_ttl = drive("ttl", 3700, "event")  # 3700 >= 3600 + 60
-        n_unbounded = drive("raw", None, "processing")
-        return n_ttl, n_unbounded
-
-    # run 1: anchors for A and B; A's 00:30 event drops (in-window)
-    (logs / "b1.log").write_text(
-        line("2024-01-01T00:00:00Z", "10.0.0.1")
-        + "\n"
-        + line("2024-01-01T00:00:00Z", "10.0.0.2")
-        + "\n"
-        + line("2024-01-01T00:30:00Z", "10.0.0.1")
-        + "\n"
-    )
-    drive_both()
-    # run 2: B again (kept; past its window) — advances the watermark to
-    # 03:00-60s, far past A's expiry at 00:00 + 3700s
-    (logs / "b2.log").write_text(line("2024-01-01T03:00:00Z", "10.0.0.2") + "\n")
-    drive_both()
-    # run 3: a NEW key C; A's timer fires no later than this run
-    (logs / "b3.log").write_text(line("2024-01-01T03:10:00Z", "10.0.0.3") + "\n")
-    n_ttl, n_unbounded = drive_both()
-
-    base = 1704067200  # 2024-01-01T00:00:00Z
-    expected = sorted([base, base, base + 10800, base + 11400])
-    got_ttl = sorted(
-        r.epoch for r in spark.read.parquet(str(tmp_path / "out_ttl")).collect()
-    )
-    got_raw = sorted(
-        r.epoch for r in spark.read.parquet(str(tmp_path / "out_raw")).collect()
-    )
-    assert got_ttl == got_raw == expected  # purge is semantics-invisible
-    assert n_unbounded == 3  # A, B, C anchors all retained forever
-    assert n_ttl == 2  # idle A purged; B, C alive
-
-
-def test_streaming_session_window(spark, tmp_path):
-    import datetime as dt
-
-    from irstats2_spark.streaming.ingest import (
-        read_access_stream,
-        session_counts_stream,
-    )
-
-    logs = tmp_path / "current"
-    logs.mkdir()
-
-    def line(ts, ip):
-        return "\t".join(
-            [
-                ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
-                ip,
-                "Mozilla/5.0 Chrome/1",
-                "",
-                "?fulltext=yes",
-                "1",
-                "100",
-            ]
-        )
-
-    t0 = dt.datetime(2024, 1, 1, 8, 0, 0)
-    rows = [
-        line(t0, "10.0.0.1"),                              # session 1
-        line(t0 + dt.timedelta(minutes=10), "10.0.0.1"),   # session 1
-        line(t0 + dt.timedelta(hours=3), "10.0.0.1"),      # session 2
-        line(t0, "10.0.0.2"),                              # other user
-    ]
-    (logs / "2024-01-01.log").write_text("\n".join(rows) + "\n")
-    # a later event advances the watermark past day 1, closing its
-    # sessions; Spark then runs a no-data batch that emits them
-    (logs / "2024-01-03.log").write_text(
-        line(t0 + dt.timedelta(days=2), "10.0.0.3") + "\n"
-    )
-
-    stream = read_access_stream(spark, str(logs), dedup_lines=False)
-    q = (
-        session_counts_stream(stream, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_counts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start.isoformat()): r.n_events
-        for r in spark.sql("SELECT * FROM sess_counts").collect()
-    }
-    assert got[("10.0.0.1", "2024-01-01T08:00:00")] == 2
-    assert got[("10.0.0.1", "2024-01-01T11:00:00")] == 1
-    assert got[("10.0.0.2", "2024-01-01T08:00:00")] == 1
-
-
-def test_bucketed_facts_join_without_exchange(spark, tmp_path):
-    from irstats2_spark.sources.storage import write_fact_bucketed
-
-    rows = [(i % 7, 20240101 + (i % 3), "v", 1) for i in range(100)]
-    fact = spark.createDataFrame(
-        rows, "eprintid int, datestamp int, value string, count int"
-    )
-    t_dl = write_fact_bucketed(fact, str(tmp_path), "downloads", buckets=4)
-    t_vw = write_fact_bucketed(fact, str(tmp_path), "views", buckets=4)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        dl = spark.table(t_dl).groupBy("eprintid").agg(F.sum("count").alias("dl"))
-        vw = spark.table(t_vw).groupBy("eprintid").agg(F.sum("count").alias("vw"))
-        joined = dl.join(vw, "eprintid")
-        plan = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        tree = plan.split("\n\n")[0]
-        # both sides pre-hashed by the bucketing: no shuffle anywhere —
-        # not for the aggregations, not for the join
-        assert "Exchange" not in tree, tree
-        assert joined.count() == 7
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql(f"DROP TABLE IF EXISTS {t_dl}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_vw}")
 
 
 def test_streaming_bloom_prefilter_matches_batch_probe(spark, tmp_path):

@@ -127,9 +127,9 @@ def test_registry_defaults():
     from irstats2_spark.plans.registry import default_registry
 
     reg = default_registry()
-    assert "downloads" in reg.datatypes()
-    assert [f.name for f in reg.filters] == ["robots", "repeat"]
-    assert "main" in reg.reports
+    assert list(reg.metrics) == ["downloads", "deposits"]
+    assert reg.metrics["downloads"].context.datatype == "downloads"
+    assert list(reg.reports) == ["main"]
 
 
 @pytest.fixture(scope="module")
