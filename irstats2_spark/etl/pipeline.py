@@ -22,8 +22,8 @@ def build_silver_events(
     events: DataFrame,
     robots_kwargs: dict | None = None,
 ) -> DataFrame:
-    """P8 + P9 + P10 over parsed access events (already ACCESS_EVENT
-    schema). Returns the silver DataFrame with derived columns."""
+    """P8 + P9 + P10 over parsed access events (the columns of
+    ``sources.access_log.parse_access_lines``). Returns the silver DataFrame with derived columns."""
     ev = events if "epoch" in events.columns else with_event_columns(events)
     ev = ev.filter(ev.datestamp.isNotNull())  # P10 null-year guard
     ev = robots_filter(ev, **(robots_kwargs or {}))

@@ -4,7 +4,7 @@ F9-F11; reference Sets.pm:222-457, Handler.pm:876-1009).
 The reference drops + rebuilds one MySQL table pair per configured set by
 scanning the archive row-at-a-time in -eprintid order. Here each set is an
 explode/normalize/join over the eprints DataFrame, producing three unified
-dimensions (schemas.SET_DIM / GROUPING_DIM / RENDERED_DIM) partitionable
+dimensions (sets, groupings, rendered values) partitionable
 by set_name. The reference's "most recent eprint's rendering wins" rule
 (Sets.pm:279-280) becomes an explicit row_number() window.
 

@@ -46,31 +46,10 @@ def with_country(
     """Attach a country code via broadcast range join; rows with no match
     keep NULL (the reference drops those records in the Country processor).
 
-    At scale: the broadcast side is sorted, non-overlapping intervals; the
-    BroadcastNestedLoopJoin Catalyst picks for a theta join is acceptable
-    only because the build side is tiny. For very hot paths, bucketing the
-    ranges by /8 prefix and equi-joining on the prefix first cuts the
-    interval probes 256x — see prefix_bucketed variant below.
-    """
-    ipl = ip_to_long(F.col(ip_col)).alias("__ipl")
-    left = df.withColumn("__ipl", ipl)
-    cond = (F.col("__ipl") >= ranges.ip_start_long) & (F.col("__ipl") <= ranges.ip_end_long)
-    joined = left.join(F.broadcast(ranges), cond, "left")
-    return joined.withColumn(out_col, F.col("country_iso2")).drop(
-        "ip_start_long", "ip_end_long", "__ipl"
-    )
-
-
-def with_country_prefix_bucketed(
-    df: DataFrame,
-    ranges: DataFrame,
-    ip_col: str = "requester_id",
-    out_col: str = "country_iso2",
-) -> DataFrame:
-    """Scale path: explode each range into the /8 prefixes it spans, then
-    equi-join on prefix before the interval test. Catalyst plans a
-    broadcast HASH join on the prefix (not a nested loop), so each fact
-    row probes only the ranges sharing its first octet.
+    Each range is exploded into the /8 prefixes it spans and the join
+    equi-joins on the prefix before the interval test, so Catalyst plans
+    a broadcast HASH join (not a nested loop) and each fact row probes
+    only the ranges sharing its first octet.
     """
     exploded = ranges.withColumn(
         "__prefix",

@@ -14,7 +14,6 @@ Plus the documented optimizations:
 - pre-live-date clamp (Handler.pm:233-263) for single-eprint queries,
   compiled as a broadcast semi-join to the eprint's live date, so that
   compiling a Context never runs a Spark job;
-- archive-only semi-join (Handler.pm:356-361);
 - ORDER BY + LIMIT compiled together => TakeOrderedAndProject.
 
 Scale: facts are date-partitioned parquet — the date predicate is pure
@@ -26,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from irstats2_spark.plans.context import Context, QueryOptions, VALID_FACT_FIELDS
@@ -68,7 +67,6 @@ def compile_context(
     store: StatsStore,
     ctx: Context,
     opts: QueryOptions | None = None,
-    archive_only: bool = False,
     today=None,
 ) -> DataFrame:
     """Compile a Context (+options) to a DataFrame of
@@ -115,13 +113,6 @@ def compile_context(
     if ctx.datafilter is not None:
         fact = fact.filter(F.col("value") == ctx.datafilter)
         fields = [f for f in fields if f != "value"]
-
-    # --- archive-only semi-join (P7) ---------------------------------------
-    if archive_only and store.eprints is not None:
-        archive_ids = store.eprints.filter(
-            F.col("eprint_status") == "archive"
-        ).select("eprintid")
-        fact = fact.join(F.broadcast(archive_ids), "eprintid", "left_semi")
 
     # --- the three shapes ---------------------------------------------------
     if not is_eprint_path:

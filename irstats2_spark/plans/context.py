@@ -9,7 +9,7 @@ param sanitization, date normalization, registry checks.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from irstats2_spark.functions.dates import normalise_dates
 

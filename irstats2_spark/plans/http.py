@@ -18,7 +18,7 @@ import datetime as dt
 import re
 from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
 from irstats2_spark.plans.context import Context, QueryOptions
@@ -54,6 +54,7 @@ def validate_non_context_param(key: str, value: str) -> bool:
         "graph_type": r"^(area|column)$",
         "cumulative": r"^(true|false)$",
         "show_average": r"^(true|false)$",
+        "data_min": r"^\d+$",
         "q": r"^[\x20-\x7e]+$",
         "export": r"^[\w.\-:]+$",
         "top": r"^[\w.\-:]+$",
@@ -167,10 +168,11 @@ def _render_view(
     opts: dict[str, str],
     today: dt.date | None,
 ) -> tuple[list[str], list[tuple]]:
-    """View dispatch (get:53-58 instantiates Stats::View::<view>);
-    routing mirrors plans/report.run_report's per-plugin arms. Returns
-    the view's ``(columns, rows)``: every view is one compiled grouped
-    sum, collected once, here or in its plans/views row builder."""
+    """View dispatch (get:53-58 instantiates Stats::View::<view>): the
+    one place a view name becomes a plan, for /cgi/stats/get, browse,
+    report rendering and the nightly pre-warm alike. Returns the view's
+    ``(columns, rows)``: every view is one compiled grouped sum,
+    collected once, here or in its plans/views row builder."""
     from irstats2_spark.plans.views import graph_rows, sparkline_rows, top_table
 
     view = view.split("::")[-1]  # 'Google::Graph' -> 'Graph'
@@ -192,7 +194,7 @@ def _render_view(
     elif view in ("Table", "PieChart"):
         df = top_table(
             store, ctx, opts.get("top", "eprint"), opts.get("limit", "10"),
-            today=today,
+            opts.get("data_min"), today=today,
         )
     else:
         raise KeyError(view)
@@ -259,7 +261,6 @@ def handle_browse(
     spark: SparkSession,
     store: StatsStore,
     referer: str | None,
-    set_mappings: dict[str, str | None] | None = None,
     today: dt.date | None = None,
 ) -> tuple[int, str, str]:
     """The /cgi/stats/browse endpoint (browse:17-121): parse the
@@ -274,8 +275,7 @@ def handle_browse(
     if not m:
         return 400, "text/html", "<p>IRStats2: unparseable referer</p>"
     viewid, key = m.group(1), m.group(2)
-    mappings = set_mappings if set_mappings is not None else _BROWSE_SET_MAPPINGS
-    setid = mappings.get(viewid, viewid)
+    setid = _BROWSE_SET_MAPPINGS.get(viewid, viewid)
     key = re.sub(r"(\..*)$", "", key)
     key = re.sub(r"(/.*)$", "", key)
     if viewid == "year":
@@ -298,22 +298,20 @@ def handle_browse(
 def handle_fp_stats(
     spark: SparkSession,
     store: StatsStore,
-    archive: DataFrame | None = None,
     today: dt.date | None = None,
 ) -> tuple[int, str, str]:
     """The /cgi/stats/fp_stats front-page counters (fp_stats:17-43):
     full-text document count, all-time downloads, and last-year
     downloads — each thousands-separated (F12, Utils.pm:340-369).
 
-    ``archive``: the eprint table; rows with ``full_text_status`` in
-    (public, restricted) are counted when the column exists, else every
-    row (the synthetic testdata carries no such column — pass the real
-    archive in production). Falls back to ``store.eprints``."""
+    The documents counted are the rows of ``store.eprints`` with
+    ``full_text_status`` in (public, restricted) when the column exists,
+    else every row (the synthetic testdata carries no such column)."""
     import json as _json
 
     from pyspark.sql import functions as F
 
-    arch = archive if archive is not None else store.eprints
+    arch = store.eprints
     if arch is not None:
         if "full_text_status" in arch.columns:
             arch = arch.filter(

@@ -32,7 +32,12 @@ class ReportItem:
     ``priv`` is the privilege required to see the panel
     (Screen/IRStats2/Report.pm:112-117); ``appears`` optionally gates the
     panel to specific set contexts (z_irstats2.pl:431-434: e.g. a panel
-    shown only on repository-wide pages, set_name=None)."""
+    shown only on repository-wide pages, set_name=None).
+
+    ``options`` are the view options of the panel's /cgi/stats/get
+    request, in request form: strings such as ``"true"`` or ``"10"``,
+    which the parameter whitelist accepts (Utils.pm:52-110). A Grid's
+    ``options["items"]`` holds its sub-panels instead."""
 
     plugin: str  # view name: Graph | Table | Counter | KeyFigures | ...
     datatype: str = "downloads"

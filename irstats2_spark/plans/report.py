@@ -1,16 +1,19 @@
 """Report composition + result cache (SURVEY §3.1 step 4, §3.2, §4).
 
-The reference's report page instantiates one view per configured item
-with a cloned context (Screen/IRStats2/Report.pm:101-173), each view's
-AJAX request is served through an MD5-keyed file cache
-(cgi/stats/get:76-99; key Utils.pm:676-692), and the nightly ETL clears
-then pre-warms the cache for configured reports
+The reference renders a report page by cloning the context for each
+configured panel (Screen/IRStats2/Report.pm:101-173); each panel's JS
+then requests its data from /cgi/stats/get, served through an MD5-keyed
+file cache (cgi/stats/get:76-99; key Utils.pm:676-692). Only KeyFigures
+is computed while the page renders (Report.pm:141-172). The nightly ETL
+clears the cache, then pre-warms those same requests
 (bin/stats/process_stats:144-159). Here:
 
-- ``run_report`` executes every item of a ReportDef against the store,
-  reproducing Table.pm:57-85's ``top`` routing (top='eprint' => group by
-  eprintid; top=<the item's datatype> => group by the fact value column;
-  top=<set name> => grouping join) and per-item context isolation.
+- ``_panels`` walks a report's visible panels, Grid sub-panels included,
+  and yields the /cgi/stats/get request each panel's page sends.
+- ``run_report`` renders those requests through ``plans.http.handle_get``
+  and returns the JSON rows the page receives; ``prewarm_report`` sends
+  the same requests with the cache attached. ``handle_get`` is the one
+  place a view name becomes a plan.
 - ``ResultCache`` stores collected results as JSON keyed by the MD5 of
   the canonical (sorted) parameter dict — same invalidation story as the
   reference: clear + pre-warm after each ETL run.
@@ -24,27 +27,50 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from dataclasses import replace
 
 import datetime as dt
 
 from pyspark.sql import SparkSession
 
-from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
-from irstats2_spark.plans.context import Context
-from irstats2_spark.plans.registry import Registry
-from irstats2_spark.plans.views import graph_series, key_figures, top_table
+from irstats2_spark.plans.builder import StatsStore
+from irstats2_spark.plans.http import CACHE_ENABLED_VIEWS, handle_get
+from irstats2_spark.plans.registry import Registry, ReportItem
+from irstats2_spark.plans.views import key_figures
+
+# the URI a repository-wide report page sends its panel requests from
+_REPORT_URI = "/cgi/stats/report"
 
 
-def _visible_items(rdef, base: Context, privileges):
-    """(key, item) for each item of a report the context may see:
-    per-item gating (Report.pm:112-117, z_irstats2.pl:431-434)."""
-    for i, item in enumerate(rdef.items):
+def _visible_items(items: tuple[ReportItem, ...], privileges):
+    """(key, item) for each item of a repository-wide report page
+    (set_name None) the viewer may see: per-item gating
+    (Report.pm:112-117, z_irstats2.pl:431-434)."""
+    for i, item in enumerate(items):
         if item.priv is not None and item.priv not in privileges:
             continue
-        if item.appears is not None and base.set_name not in item.appears:
+        if item.appears is not None and None not in item.appears:
             continue
         yield f"{i}_{item.plugin.lower()}_{item.datatype}", item
+
+
+def _panels(items: tuple[ReportItem, ...], privileges):
+    """(path, params) for each visible panel, depth first. ``path`` is the
+    panel's key after the keys of the Grids (Grid.pm) it sits in;
+    ``params`` is the /cgi/stats/get request the panel's page sends.
+    ReportHeader is presentational and sends none."""
+    for key, item in _visible_items(items, privileges):
+        if item.plugin == "Grid":
+            for path, params in _panels(item.options.get("items", ()), privileges):
+                yield (key, *path), params
+        elif item.plugin != "ReportHeader":
+            fields = {
+                "view": item.plugin,
+                "datatype": item.datatype,
+                "datafilter": item.datafilter,
+                "grouping": item.grouping,
+                **item.options,
+            }
+            yield (key,), {k: v for k, v in fields.items() if v is not None}
 
 
 def _key_figures(store: StatsStore, registry: Registry, today) -> dict[str, int]:
@@ -58,67 +84,28 @@ def run_report(
     store: StatsStore,
     registry: Registry,
     report: str = "main",
-    base_context: Context | None = None,
     today: dt.date | None = None,
     privileges: frozenset[str] | set[str] = frozenset(),
 ) -> dict[str, object]:
-    """Execute every item of a report; returns {item_key: DataFrame|dict}.
-    Each item gets its OWN context clone (Report.pm:133: isolation);
-    items with an unmet ``priv`` or an ``appears`` list not matching the
-    context's set_name are skipped."""
-    rdef = registry.reports[report]
-    base = base_context or Context()
+    """Render every visible panel of a report as its page receives it:
+    ``{item_key: JSON rows}``, KeyFigures as its dict of totals and a
+    Grid as a nested dict of its panels. Each panel is one request
+    through ``plans.http.handle_get``, so each gets its own context
+    (Report.pm:133: isolation). A panel that does not render, an unknown
+    view included, raises ValueError. Items with an unmet ``priv`` or an
+    ``appears`` list without None (repository-wide) are skipped."""
     out: dict[str, object] = {}
-    for key, item in _visible_items(rdef, base, privileges):
-        ctx = replace(
-            base,
-            datatype=item.datatype,
-            datafilter=item.datafilter,
-            grouping=item.grouping or base.grouping,
-        )
-        if item.plugin == "KeyFigures":
-            out[key] = _key_figures(store, registry, today)
-        elif item.plugin == "Graph":
-            out[key] = graph_series(
-                spark,
-                store,
-                ctx,
-                resolution=item.options.get("date_resolution", "day"),
-                cumulative=item.options.get("cumulative", False),
-                show_average=item.options.get("show_average", False),
-                today=today,
-            )
-        elif item.plugin == "Counter":
-            out[key] = sum_all(compile_context(store, ctx, today=today))
-        elif item.plugin in ("Table", "PieChart"):
-            out[key] = top_table(
-                store,
-                ctx,
-                item.options.get("top", "eprint"),
-                item.options.get("limit", 10),
-                item.options.get("data_min"),
-                today=today,
-            )
-        elif item.plugin == "GeoChart":
-            # GeoChart.pm:16-21: select fields=['value'] — group the fact
-            # by its value column (country codes)
-            out[key] = compile_context(
-                store, replace(ctx, grouping="value"), today=today
-            )
-        elif item.plugin == "Grid":
-            # Grid.pm: layout container — run the nested items
-            from irstats2_spark.plans.registry import ReportDef
-
-            sub = ReportDef(name=f"{rdef.name}.{key}",
-                            items=tuple(item.options.get("items", ())))
-            registry.reports[sub.name] = sub
-            out[key] = run_report(
-                spark, store, registry, sub.name, base, today, privileges
-            )
-        elif item.plugin == "ReportHeader":
-            continue  # presentational only (ReportHeader.pm)
-        else:
-            raise ValueError(f"unknown view plugin '{item.plugin}'")
+    for path, params in _panels(registry.reports[report].items, privileges):
+        parent = out
+        for key in path[:-1]:
+            parent = parent.setdefault(key, {})
+        if params["view"] == "KeyFigures":
+            parent[path[-1]] = _key_figures(store, registry, today)
+            continue
+        status, _, body = handle_get(spark, store, _REPORT_URI, params, today=today)
+        if status != 200:
+            raise ValueError(f"report '{report}' panel {'.'.join(path)}: {body}")
+        parent[path[-1]] = json.loads(body)
     return out
 
 
@@ -172,26 +159,25 @@ def prewarm_report(
 ) -> int:
     """Post-ETL pre-warm of a report's panels (process_stats:151-159).
 
-    Each panel is requested through ``plans.http.handle_get`` with the
-    parameters its page sends, so the cached entry sits under the very
-    key a user's request looks up. KeyFigures, which the page computes
-    while rendering rather than through /cgi/stats/get, is cached under
-    ``{report, item}``. Returns the number of panels warmed."""
-    from irstats2_spark.plans.http import handle_get
-
+    Walks the same panels as ``run_report`` and sends each cache-enabled
+    panel's request through ``plans.http.handle_get`` with the cache, so
+    the entry sits under the very key a user's request looks up; a
+    Counter, which /cgi/stats/get never caches (get:19-24), is not
+    requested. KeyFigures, which the page computes while rendering, is
+    cached under ``{report, item}``. Returns the number of panels cached:
+    KeyFigures plus every request that returned 200."""
     n = 0
-    for key, item in _visible_items(registry.reports[report], Context(), frozenset()):
-        if item.plugin == "ReportHeader":
-            continue
-        if item.plugin == "KeyFigures":
+    for path, params in _panels(registry.reports[report].items, frozenset()):
+        view = params["view"]
+        if view == "KeyFigures":
             cache.put(
-                {"report": report, "item": key},
+                {"report": report, "item": ".".join(path)},
                 [_key_figures(store, registry, today)],
             )
-        else:
-            params = {"view": item.plugin, "datatype": item.datatype, **item.options}
-            handle_get(
-                spark, store, "/cgi/stats/report", params, cache=cache, today=today
+            n += 1
+        elif view.split("::")[-1] in CACHE_ENABLED_VIEWS:
+            status, _, _ = handle_get(
+                spark, store, _REPORT_URI, params, cache=cache, today=today
             )
-        n += 1
+            n += status == 200
     return n

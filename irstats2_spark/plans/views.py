@@ -7,7 +7,7 @@ views here do the same: ``graph_rows`` / ``sparkline_rows`` compile the
 day-grain grouped sum, collect its at most |days| rows once, then
 zero-fill, bucket, accumulate and trim them in plain Python on the
 driver. ``graph_series`` / ``sparkline_series`` wrap those rows in a
-DataFrame for the catalog and ``run_report``.
+DataFrame for the catalog rows.
 """
 
 from __future__ import annotations
@@ -123,13 +123,15 @@ def top_table(
     ctx: Context,
     top: str = "eprint",
     limit: int | str = 10,
-    data_min: int | None = None,
+    data_min: int | str | None = None,
     today: dt.date | None = None,
 ) -> DataFrame:
     """View::Table / PieChart (Table.pm:37-89, PieChart.pm:32-85): ``top``
     selects the grouping axis — 'eprint' groups by eprintid, the
     context's datatype groups by the fact value column, a set name is a
-    grouping join (top authors/divisions/...)."""
+    grouping join (top authors/divisions/...). ``data_min`` drops groups
+    with a smaller count (Table.pm:134-135). ``limit`` and ``data_min``
+    may come in request form ('10', 'all')."""
     if top == "eprint":
         ctx = replace(ctx, grouping="eprint")
     elif top == ctx.datatype:
@@ -137,7 +139,8 @@ def top_table(
     else:
         ctx = replace(ctx, grouping=top)
     opts = QueryOptions(
-        limit=None if limit == "all" else int(limit), data_min=data_min
+        limit=None if limit == "all" else int(limit),
+        data_min=None if data_min is None else int(data_min),
     )
     return compile_context(store, ctx, opts, today=today)
 

@@ -18,7 +18,6 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from irstats2_spark.catalog import register

@@ -339,7 +339,7 @@ def search_term_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="F7 Country.pm:75-105 — broadcast IP-range join (10.0.x.x synthetic IPs)",
 )
 def geoip_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.functions.geo import with_country_prefix_bucketed
+    from irstats2_spark.functions.geo import with_country
 
     # literal dims as a VALUES LocalRelation, not createDataFrame: a
     # parallelized 3-row RDD spreads over defaultParallelism partitions
@@ -366,7 +366,7 @@ def geoip_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    located = with_country_prefix_bucketed(ev, ranges).filter(
+    located = with_country(ev, ranges).filter(
         F.col("country_iso2").isNotNull()
     )
     return located.groupBy(F.col("country_iso2").alias("value")).agg(

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irstats2_spark.schemas import ACCESS_EVENT
-
 _TS_RE = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}Z$"
 
 
@@ -55,7 +53,7 @@ def parse_access_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
 
 def read_access_logs(spark: SparkSession, path: str) -> DataFrame:
     """S1+S2: read raw log lines (plain or .gz via glob), dedup exact
-    duplicate lines, and parse to the ACCESS_EVENT schema."""
+    duplicate lines, and parse them (``parse_access_lines``)."""
     return parse_access_lines(spark.read.text(path).dropDuplicates(["value"]))
 
 

@@ -19,7 +19,7 @@ def records(columns: list[str], rows: list[tuple]) -> list[dict]:
     return [dict(zip(columns, r)) for r in rows]
 
 
-def to_csv(columns: list[str], rows: list[tuple], excel_proof: bool = True) -> str:
+def to_csv(columns: list[str], rows: list[tuple]) -> str:
     """Export/CSV.pm:13-73: quoted fields, control chars stripped; numbers
     wrapped as ="123" so Excel keeps long ids verbatim."""
     out = [",".join(columns)]
@@ -28,7 +28,7 @@ def to_csv(columns: list[str], rows: list[tuple], excel_proof: bool = True) -> s
         for v in r:
             if v is None:
                 cells.append("")
-            elif isinstance(v, (int, float)) and excel_proof:
+            elif isinstance(v, (int, float)):
                 cells.append(f'="{v}"')
             else:
                 s = str(v).replace('"', "").replace("\r", " ").replace("\n", " ")

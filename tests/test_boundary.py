@@ -6,7 +6,9 @@ or the ``irstats2_spark.queries_*`` catalogs, not even lazily inside a
 function. The extension may import the IRStats2 modules, never the other
 way round. And the IRStats2 tree holds only what its entry points reach:
 a module that only the extension or a test imports belongs under
-``pipeline/``.
+``pipeline/``. An import nothing uses does not count as reaching a module,
+so no module of the tree, nor the catalog and its two IRStats2-shaped
+query modules, keeps one.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "irstats2_spark"
 IRSTATS2_DIRS = ("plans", "etl", "sources", "streaming", "operators", "functions")
-IRSTATS2_FILES = ("session.py", "schemas.py")
+IRSTATS2_FILES = ("session.py",)
 # The nightly, serve and stream entry points, plus the two catalogs of
 # IRStats2-shaped queries.
 ENTRY_POINTS = (
@@ -71,6 +73,30 @@ def _imports(path: pathlib.Path):
             yield node.lineno, [mod] + [f"{mod}.{alias.name}" for alias in node.names]
 
 
+# catalog.py imports the query modules only for their registrations
+REGISTRATION_IMPORTS = {
+    "catalog.py": {"queries_core", "queries_ext", "queries_irstats", "queries_pipeline"}
+}
+
+
+def _unused_imports(path: pathlib.Path):
+    """Yield (line, name) for each name an import binds in ``path`` that
+    the module never reads, nested imports included."""
+    tree = ast.parse(path.read_text(), str(path))
+    used = {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+    exempt = REGISTRATION_IMPORTS.get(path.name, set())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [alias.asname or alias.name.split(".")[0] for alias in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            names = [alias.asname or alias.name for alias in node.names]
+        else:
+            continue
+        for name in names:
+            if name not in used and name not in exempt:
+                yield node.lineno, name
+
+
 def test_irstats2_path_does_not_import_the_pipeline_extension():
     modules = _irstats2_modules()
     assert len(modules) > 20, "module discovery found too little"
@@ -107,3 +133,15 @@ def test_every_irstats2_module_is_reachable_from_an_entry_point():
     assert not unreached, "IRStats2 modules no entry point imports:\n" + "\n".join(
         unreached
     )
+
+
+def test_no_unused_imports_on_the_irstats2_path():
+    modules = _irstats2_modules() + [
+        PKG / f for f in ("catalog.py", "queries_core.py", "queries_irstats.py")
+    ]
+    unused = [
+        f"{path.relative_to(PKG.parent)}:{line}: {name}"
+        for path in modules
+        for line, name in _unused_imports(path)
+    ]
+    assert not unused, "imports nothing uses:\n" + "\n".join(unused)

@@ -223,6 +223,43 @@ def test_search_terms_builds_without_spark_jobs(spark, log_dir):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
+def test_countries_processor_locates_by_range(spark):
+    """Country.pm:75-105: downloads with a requester IP inside a GeoIP
+    range count for that range's country, a range spanning several /8
+    prefixes included; unlocated, malformed and non-download rows drop."""
+    from irstats2_spark.etl import processors as P
+
+    ranges = spark.createDataFrame(
+        [
+            (167772160, 167772415, "US"),  # 10.0.0.0 - 10.0.0.255
+            (167772416, 167772671, "DE"),  # 10.0.1.0 - 10.0.1.255
+            (167837696, 218103807, "JP"),  # 10.1.0.0 - 12.255.255.255
+        ],
+        "ip_start_long long, ip_end_long long, country_iso2 string",
+    )
+    events = spark.createDataFrame(
+        [
+            (1, "10.0.0.7", True, 20240101),
+            (1, "10.0.0.9", True, 20240101),
+            (2, "10.0.1.1", True, 20240101),
+            (2, "11.5.6.7", True, 20240102),
+            (3, "12.255.255.255", True, 20240102),
+            (3, "9.9.9.9", True, 20240102),  # in no range
+            (3, "not.an.ip", True, 20240102),
+            (3, "10.0.0.1", False, 20240102),  # not a download
+            (None, "10.0.0.1", True, 20240102),
+        ],
+        "referent_id int, requester_id string, is_download boolean, date_key int",
+    )
+    got = {tuple(r) for r in P.countries(events, ranges).collect()}
+    assert got == {
+        (1, 20240101, "US", 2),
+        (2, 20240101, "DE", 1),
+        (2, 20240102, "JP", 1),
+        (3, 20240102, "JP", 1),
+    }
+
+
 def test_subject_closure_runs_one_spark_job(spark, tmp_path):
     """F9 over a 4-level chain (plus a 2-cycle, which must still end):
     one job reads the subject table, whatever the tree depth."""

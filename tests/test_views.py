@@ -169,18 +169,18 @@ def test_run_report_main(spark, report_store):
     assert len(results) == 5
     kf = results["0_keyfigures_downloads"]
     assert kf["downloads"] == 21  # metrics dict, deposits skipped (not loaded)
-    graph = results["1_graph_downloads"].collect()
+    graph = results["1_graph_downloads"]
     # monthly resolution over dataset bounds: Jan + Feb 2024
-    assert [(r.datestamp, r["count"]) for r in graph] == [
+    assert [(r["datestamp"], r["count"]) for r in graph] == [
         (202401, 14),
         (202402, 7),
     ]
-    top_ep = results["2_table_downloads"].collect()
-    assert top_ep[0].eprintid == 1 and top_ep[0]["count"] == 17
-    top_ref = {r.value: r["count"] for r in results["3_table_referrer"].collect()}
+    top_ep = results["2_table_downloads"]
+    assert top_ep[0]["eprintid"] == 1 and top_ep[0]["count"] == 17
+    top_ref = {r["value"]: r["count"] for r in results["3_table_referrer"]}
     assert top_ref == {"Google": 9, "Yahoo": 2}
-    top_terms = results["4_table_search_terms"].collect()
-    assert top_terms[0].value == "spark"
+    top_terms = results["4_table_search_terms"]
+    assert top_terms[0]["value"] == "spark"
 
 
 def test_result_cache_roundtrip_and_prewarm(spark, report_store, tmp_path):
@@ -244,13 +244,88 @@ def test_report_pie_geo_grid_plugins(spark, report_store):
         ),
     )
     out = run_report(spark, report_store, reg, "rich", today=TODAY)
-    pie = {r.value: r["count"] for r in out["0_piechart_referrer"].collect()}
+    pie = {r["value"]: r["count"] for r in out["0_piechart_referrer"]}
     assert pie == {"Google": 9, "Yahoo": 2}
-    geo = {r.value: r["count"] for r in out["1_geochart_referrer"].collect()}
+    geo = {r["value"]: r["count"] for r in out["1_geochart_referrer"]}
     assert geo == {"Google": 9, "Yahoo": 2}
     assert "2_reportheader_downloads" not in out  # presentational, skipped
     grid = out["3_grid_downloads"]
-    assert grid["0_counter_downloads"].head()["count"] == 21
+    assert grid["0_counter_downloads"][0]["count"] == 21
+
+
+def test_table_data_min_is_one_request_on_every_path(spark, report_store, tmp_path):
+    """A Table panel's data_min (Table.pm:134-135) drops the same rows on
+    /cgi/stats/get, in run_report and in the pre-warmed cache entry."""
+    import json
+
+    from irstats2_spark.plans.http import handle_get
+    from irstats2_spark.plans.registry import Registry, ReportDef, ReportItem
+    from irstats2_spark.plans.report import ResultCache, prewarm_report, run_report
+
+    reg = Registry()
+    reg.reports["min"] = ReportDef(
+        name="min",
+        items=(ReportItem(plugin="Table", options={"top": "eprint", "data_min": "12"}),),
+    )
+    params = {"view": "Table", "datatype": "downloads", "top": "eprint", "data_min": "12"}
+    want = [{"eprintid": 1, "count": 17}]  # eprint 2's 4 downloads fall below 12
+    _, _, body = handle_get(spark, report_store, "/cgi/stats/report", params, today=TODAY)
+    assert json.loads(body) == want
+    assert run_report(spark, report_store, reg, "min", today=TODAY) == {
+        "0_table_downloads": want
+    }
+    cache = ResultCache(str(tmp_path / "cache"))
+    assert prewarm_report(spark, report_store, reg, cache, "min", today=TODAY) == 1
+    assert cache.get({**params, "__uri": "/cgi/stats/report"}) == want
+
+
+def test_prewarm_caches_grid_panels_under_their_get_keys(spark, report_store, tmp_path):
+    """Prewarm requests a Grid's sub-panels, not the Grid, and returns the
+    number of panels it cached; a Counter is never cached (get:19-24)."""
+    import json
+    import os
+
+    from irstats2_spark.plans.http import handle_get
+    from irstats2_spark.plans.registry import Registry, ReportDef, ReportItem
+    from irstats2_spark.plans.report import ResultCache, prewarm_report
+
+    reg = Registry()
+    reg.reports["grid"] = ReportDef(
+        name="grid",
+        items=(
+            ReportItem(plugin="KeyFigures"),
+            ReportItem(plugin="Grid", options={"items": (
+                ReportItem(plugin="Table", datatype="referrer",
+                           options={"top": "referrer"}),
+                ReportItem(plugin="Counter"),
+            )}),
+        ),
+    )
+    cache = ResultCache(str(tmp_path / "cache"))
+    n = prewarm_report(spark, report_store, reg, cache, "grid", today=TODAY)
+    uri = "/cgi/stats/report"
+    table = {"view": "Table", "datatype": "referrer", "top": "referrer"}
+    _, _, fresh = handle_get(spark, report_store, uri, table, today=TODAY)
+    assert cache.get({**table, "__uri": uri}) == json.loads(fresh)
+    assert cache.get({"view": "Counter", "datatype": "downloads", "__uri": uri}) is None
+    assert n == len(os.listdir(cache.dir)) == 2  # KeyFigures + the Grid's Table
+
+
+def test_run_report_leaves_the_registry_unchanged(spark, report_store):
+    from irstats2_spark.plans.registry import Registry, ReportDef, ReportItem
+    from irstats2_spark.plans.report import run_report
+
+    reg = Registry()
+    reg.reports["grid"] = ReportDef(
+        name="grid",
+        items=(ReportItem(plugin="Grid", options={"items": (
+            ReportItem(plugin="Counter"),
+        )}),),
+    )
+    before = dict(reg.reports)
+    out = run_report(spark, report_store, reg, "grid", today=TODAY)
+    assert reg.reports == before
+    assert out == {"0_grid_downloads": {"0_counter_downloads": [{"count": 21}]}}
 
 
 def test_http_parse_stats_uri_forms():
