@@ -12,18 +12,25 @@ Plus the documented optimizations:
 - cache-table rewrite (Data.pm:128-139): undated lifetime queries
   retargeted to the cache_* facts;
 - pre-live-date clamp (Handler.pm:233-263) for single-eprint queries,
-  compiled as a broadcast semi-join to the eprint's live date, so that
-  compiling a Context never runs a Spark job;
+  compiled as a semi-join to the eprint's live date (equal eprintid,
+  datestamp >= live), so that compiling a Context never runs a Spark job;
 - ORDER BY + LIMIT compiled together => TakeOrderedAndProject.
 
-Scale: facts are date-partitioned parquet — the date predicate is pure
-partition pruning; dimensions broadcast; every query is scan -> (bcast
-join) -> partial agg -> final agg, a single shuffle on the grouping keys.
+Scale: gold on disk is date-partitioned parquet. A request is served from
+``StatsStore.pinned()``, an in-memory snapshot in which each table that
+fits in one scan split is one partition. Over that snapshot every join
+is a shuffle-hash join and every compiled Context is scan -> join ->
+grouped sum in ONE exchange-free stage, one Spark job: a single partition
+already satisfies the join's and the aggregate's distribution. A table
+too large to pin into one partition keeps the scale-out plan: dimensions
+broadcast, then partial agg -> one shuffle on the grouping keys -> final
+agg.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,13 +41,22 @@ from irstats2_spark.plans.context import Context, QueryOptions, VALID_FACT_FIELD
 @dataclass
 class StatsStore:
     """The engine's tables: datatype -> fact DataFrame (FACT schema),
-    the unified set/grouping dims, and the eprints metadata table."""
+    the unified set/grouping dims, and the eprints metadata table.
+    ``single_partition`` is true only on a ``pinned()`` snapshot whose
+    tables are one partition each."""
 
     facts: dict[str, DataFrame]
     sets: DataFrame | None = None
     groupings: DataFrame | None = None
     rendered: DataFrame | None = None
     eprints: DataFrame | None = None
+    single_partition: bool = field(default=False, init=False)
+    _snapshot: "StatsStore | None" = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def fact(self, datatype: str) -> DataFrame:
         if datatype not in self.facts:
@@ -48,6 +64,56 @@ class StatsStore:
                 f"unknown datatype '{datatype}'; registered: {sorted(self.facts)}"
             )
         return self.facts[datatype]
+
+    def pinned(self) -> "StatsStore":
+        """This store's tables as an in-memory snapshot, built once per
+        store and shared by every request served from it.
+
+        A table whose optimizer size fits in one scan split
+        (``spark.sql.files.maxPartitionBytes``) is coalesced to one
+        partition; every table is then local-checkpointed, lazily: the
+        first query that reads it materializes it, and no job runs here.
+        A checkpoint, unlike ``cache()``, is bound to this store's plans,
+        so a store opened after new files land reads them, and the
+        snapshot's blocks are freed with the store. Its blocks live only
+        in executor memory, which ``session.get_spark``'s ``local[N]``
+        session loses only with the driver itself."""
+        with self._lock:
+            if self._snapshot is None:
+                snap = StatsStore(
+                    facts={d: _pin(df) for d, df in self.facts.items()},
+                    sets=_pin(self.sets),
+                    groupings=_pin(self.groupings),
+                    rendered=_pin(self.rendered),
+                    eprints=_pin(self.eprints),
+                )
+                tables = [*snap.facts.values(), snap.sets, snap.groupings,
+                          snap.rendered, snap.eprints]
+                snap.single_partition = all(
+                    df.rdd.getNumPartitions() == 1 for df in tables if df is not None
+                )
+                snap._snapshot = snap
+                self._snapshot = snap
+            return self._snapshot
+
+
+def _pin(df: DataFrame | None) -> DataFrame | None:
+    """One table of a pinned snapshot: one partition when it fits in one
+    scan split, then a lazy local checkpoint."""
+    if df is None:
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(size) <= conf.filesMaxPartitionBytes():
+        df = df.coalesce(1)
+    return df.localCheckpoint(eager=False)
+
+
+def _join_hint(store: StatsStore, dim: DataFrame) -> DataFrame:
+    """The build side of a dimension join. Over a single-partition
+    snapshot a shuffle-hash join needs no exchange, so the whole query
+    stays one stage; otherwise the dimension is broadcast."""
+    return dim.hint("shuffle_hash") if store.single_partition else F.broadcast(dim)
 
 
 def _apply_dates(df: DataFrame, from_i: int | None, to_i: int | None) -> DataFrame:
@@ -101,10 +167,14 @@ def compile_context(
             # go-live date on; no live date (or no eprints row) matches
             # nothing, an empty window
             live = store.eprints.filter(F.col("eprintid") == epid).select(
-                F.date_format("datestamp", "yyyyMMdd").cast("int").alias("live")
+                F.col("eprintid").alias("__lid"),
+                F.date_format("datestamp", "yyyyMMdd").cast("int").alias("live"),
             )
             fact = fact.join(
-                F.broadcast(live), F.col("datestamp") >= F.col("live"), "left_semi"
+                _join_hint(store, live),
+                (F.col("eprintid") == F.col("__lid"))
+                & (F.col("datestamp") >= F.col("live")),
+                "left_semi",
             )
 
     fact = _apply_dates(fact, from_i, to_i)
@@ -131,7 +201,7 @@ def compile_context(
             if ctx.set_value is not None:
                 dim = dim.filter(F.col("set_value") == ctx.set_value)
             dim = dim.select("eprintid", "grouping_value").distinct()
-            joined = fact.join(F.broadcast(dim), "eprintid", "inner")
+            joined = fact.join(_join_hint(store, dim), "eprintid", "inner")
             group_cols = ["grouping_value", *[f for f in fields if f != "grouping_value"]]
         else:
             # set shape (Handler.pm:415-573)
@@ -144,13 +214,9 @@ def compile_context(
             else:
                 group_cols = ["set_value", *[f for f in fields if f != "set_value"]]
             dim = dim.select("eprintid", "set_value")
-            joined = fact.join(
-                F.broadcast(dim.select("eprintid").distinct())
-                if ctx.set_value is not None
-                else F.broadcast(dim),
-                "eprintid",
-                "inner",
-            )
+            if ctx.set_value is not None:
+                dim = dim.select("eprintid").distinct()
+            joined = fact.join(_join_hint(store, dim), "eprintid", "inner")
         fact = joined
     else:
         if ctx.grouping == "eprint":

@@ -39,10 +39,11 @@ CONTEXT_FIELDS = (
     "cache",
 )
 
-# cgi/stats/get:19-24 — only these view results are file-cached
-CACHE_ENABLED_VIEWS = frozenset(
-    {"Table", "Graph", "Spark", "GeoChart", "PieChart"}
-)
+# the views /cgi/stats/get renders (get:53-58 instantiates
+# Stats::View::<view>); cgi/stats/get:19-24 — only the cache-enabled ones
+# are file-cached
+VIEWS = frozenset({"Table", "Graph", "Spark", "Counter", "GeoChart", "PieChart"})
+CACHE_ENABLED_VIEWS = VIEWS - {"Counter"}
 
 
 def validate_non_context_param(key: str, value: str) -> bool:
@@ -172,10 +173,10 @@ def _render_view(
     one place a view name becomes a plan, for /cgi/stats/get, browse,
     report rendering and the nightly pre-warm alike. Returns the view's
     ``(columns, rows)``: every view is one compiled grouped sum,
-    collected once, here or in its plans/views row builder."""
+    collected once, here or in its plans/views row builder. ``view`` is
+    one of ``VIEWS``."""
     from irstats2_spark.plans.views import graph_rows, sparkline_rows, top_table
 
-    view = view.split("::")[-1]  # 'Google::Graph' -> 'Graph'
     if view == "Graph":
         return graph_rows(
             store,
@@ -191,13 +192,11 @@ def _render_view(
         df = sum_all(compile_context(store, ctx, today=today))
     elif view == "GeoChart":
         df = compile_context(store, replace(ctx, grouping="value"), today=today)
-    elif view in ("Table", "PieChart"):
+    else:  # Table, PieChart
         df = top_table(
             store, ctx, opts.get("top", "eprint"), opts.get("limit", "10"),
             opts.get("data_min"), today=today,
         )
-    else:
-        raise KeyError(view)
     return df.columns, df.collect()
 
 
@@ -214,14 +213,23 @@ def handle_get(
     MD5-sorted-params file cache for the cache-enabled views. Returns
     (status, content_type, body) — body is JSON rows for views,
     CSV/JSON/XML text for exports. Pass ``cache`` as a
-    ``plans.report.ResultCache`` to enable the get:76-99 behavior."""
+    ``plans.report.ResultCache`` to enable the get:76-99 behavior. An
+    unknown view or a datatype the store does not hold is a 400."""
     import json as _json
 
+    store = store.pinned()
     params = dict(params or {})
     ctx, opts = context_from_request(uri, params)
     view = opts.get("view")
     if view is None:
         return 400, "text/html", "<p>IRStats2: missing parameters in request.</p>"
+    view = view.split("::")[-1]  # 'Google::Graph' -> 'Graph'
+    if view not in VIEWS:
+        safe = re.sub(r"[<>&]", "", view)
+        return 400, "text/html", f"<p>IRStats2: unknown view <strong>{safe}</strong></p>"
+    if ctx.datatype not in store.facts:
+        safe = re.sub(r"[<>&]", "", ctx.datatype)
+        return 400, "text/html", f"<p>IRStats2: unknown datatype <strong>{safe}</strong></p>"
     export = opts.get("export")
     # cache key = md5 of the canonical sorted request params (get:80,
     # Utils.pm:676-692) — ResultCache implements it
@@ -230,17 +238,13 @@ def handle_get(
         cache is not None
         and ctx.cache
         and export is None
-        and view.split("::")[-1] in CACHE_ENABLED_VIEWS
+        and view in CACHE_ENABLED_VIEWS
     )
     if cached:
         hit = cache.get(key_params)
         if hit is not None:
             return 200, "application/json", _json.dumps(hit)
-    try:
-        columns, rows = _render_view(spark, store, ctx, view, opts, today)
-    except KeyError:
-        safe = re.sub(r"[<>&]", "", view)
-        return 400, "text/html", f"<p>IRStats2: unknown view <strong>{safe}</strong></p>"
+    columns, rows = _render_view(spark, store, ctx, view, opts, today)
 
     if export is not None:
         if export.upper() not in _EXPORT_MIMETYPES:
@@ -269,6 +273,7 @@ def handle_browse(
     that context. Returns (status, content_type, JSON-rows body)."""
     import json as _json
 
+    store = store.pinned()
     if not referer:
         return 400, "text/html", "<p>IRStats2: missing referer</p>"
     m = re.search(r"/view/(\w+)/(.*)\.html", referer, re.I)
@@ -311,6 +316,7 @@ def handle_fp_stats(
 
     from pyspark.sql import functions as F
 
+    store = store.pinned()
     arch = store.eprints
     if arch is not None:
         if "full_text_status" in arch.columns:
@@ -347,6 +353,7 @@ def handle_export(
     exactly ONE of set_name/set_value is present, both are dropped),
     ``format`` required, full compiled selection exported in the
     format's content type."""
+    store = store.pinned()
     params = dict(params or {})
     fields = _request_fields(uri, params)
     if (fields.get("set_name") is None) != (fields.get("set_value") is None):
@@ -386,6 +393,7 @@ def handle_set_finder(
 
     from irstats2_spark.plans.views import set_listing
 
+    store = store.pinned()
     params = dict(params or {})
     ctx, opts = context_from_request(uri, params)
     if ctx.set_name is None:

@@ -74,6 +74,7 @@ def _panels(items: tuple[ReportItem, ...], privileges):
 
 
 def _key_figures(store: StatsStore, registry: Registry, today) -> dict[str, int]:
+    store = store.pinned()
     metrics = {m.name: m.context for m in registry.metrics.values()
                if m.context.datatype in store.facts}
     return key_figures(store, metrics, today=today)

@@ -221,3 +221,14 @@ def test_robots_pattern_file_loading(spark, tmp_path):
         df, ua_file=str(ua_file), ip_file=str(ip_file)
     ).collect()
     assert sorted(r.requester_id for r in kept) == ["192.16.0.1", "8.8.8.8"]
+
+
+def test_robots_ip_prefix_matches_anywhere_in_the_address(spark):
+    """Robots.pm:103-113 matches the escaped prefix unanchored: '1.2.3'
+    becomes /1\\.2\\.3\\./, which also matches inside 201.2.3.4."""
+    df = spark.createDataFrame(
+        [("1.2.3.4",), ("201.2.3.4",), ("1.2.30.4",), ("5.6.7.8",)],
+        "requester_id string",
+    )
+    out = robots_filter(df, ua_patterns=[], ip_prefixes=["1.2.3"]).collect()
+    assert sorted(r.requester_id for r in out) == ["1.2.30.4", "5.6.7.8"]

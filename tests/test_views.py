@@ -696,3 +696,157 @@ def test_prewarm_serves_the_main_report_graph_request(spark, report_store, tmp_p
         spark, report_store, "/cgi/stats/report", params, cache=cache, today=TODAY
     )
     assert served == fresh
+
+
+def test_get_on_a_missing_datatype_is_unknown_datatype(spark, store):
+    """A datatype the store does not hold is answered as such, not as an
+    unknown view; an unknown view is still named as the view."""
+    from irstats2_spark.plans.http import handle_get
+
+    assert handle_get(
+        spark, store, "/cgi/stats/report", {"view": "Graph", "datatype": "views"},
+        today=TODAY,
+    ) == (400, "text/html", "<p>IRStats2: unknown datatype <strong>views</strong></p>")
+    assert handle_get(
+        spark, store, "/cgi/stats/report", {"view": "Nope", "datatype": "views"},
+        today=TODAY,
+    ) == (400, "text/html", "<p>IRStats2: unknown view <strong>Nope</strong></p>")
+
+
+# ---------------------------------------------------------------------------
+# The serve path's pinned snapshot of a gold store on disk
+# ---------------------------------------------------------------------------
+
+
+def _write_gold(spark, root) -> None:
+    from irstats2_spark.sources.storage import write_fact
+
+    write_fact(
+        spark.createDataFrame(
+            [(e, 20240100 + d, "x", e * d) for e in range(1, 7) for d in range(1, 6)],
+            "eprintid int, datestamp int, value string, count long",
+        ),
+        root, "downloads",
+    )
+    spark.createDataFrame(
+        [("divisions", f"div{e % 2}", e) for e in range(1, 7)],
+        "set_name string, set_value string, eprintid int",
+    ).write.parquet(f"{root}/dim_sets")
+    spark.createDataFrame(
+        [("divisions", f"div{e % 2}", "authors", f"a{e % 3}", e) for e in range(1, 7)],
+        "set_name string, set_value string, grouping_name string, "
+        "grouping_value string, eprintid int",
+    ).write.parquet(f"{root}/dim_groupings")
+    spark.createDataFrame(
+        [(e, dt.datetime(2024, 1, 3)) for e in range(1, 7)],
+        "eprintid int, datestamp timestamp",
+    ).write.parquet(f"{root}/eprints")
+
+
+def _open_gold(spark, root) -> StatsStore:
+    from irstats2_spark.sources.storage import read_fact
+
+    return StatsStore(
+        facts={"downloads": read_fact(spark, root, "downloads")},
+        sets=spark.read.parquet(f"{root}/dim_sets"),
+        groupings=spark.read.parquet(f"{root}/dim_groupings"),
+        eprints=spark.read.parquet(f"{root}/eprints"),
+    )
+
+
+@pytest.fixture(scope="module")
+def gold_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("gold"))
+    _write_gold(spark, root)
+    return root
+
+
+# the eprint (with its live-date clamp), set member, whole set and
+# grouping shapes
+_SHAPES = [
+    Context(set_name="eprint", set_value="3", range="_ALL_"),
+    Context(set_name="divisions", set_value="div1", range="_ALL_"),
+    Context(set_name="divisions", range="_ALL_"),
+    Context(set_name="divisions", set_value="div1", grouping="authors", range="_ALL_"),
+]
+
+
+def _executed_plans(store) -> list[str]:
+    from irstats2_spark.plans.builder import compile_context
+    from irstats2_spark.plans.context import QueryOptions
+
+    opts = QueryOptions(fields=("datestamp",))
+    return [
+        compile_context(store, c, opts, today=TODAY)._jdf.queryExecution()
+        .executedPlan().toString()
+        for c in _SHAPES
+    ]
+
+
+def test_pinned_gold_compiles_every_shape_to_one_exchange_free_stage(spark, gold_root):
+    """Over a pinned snapshot of gold read from parquet, each table is one
+    partition, so no compiled shape needs a shuffle or a broadcast, and a
+    Graph request runs exactly one Spark job."""
+    store = _open_gold(spark, gold_root)
+    pinned = store.pinned()
+    assert pinned.single_partition and pinned is store.pinned() is pinned.pinned()
+    for plan in _executed_plans(pinned):
+        assert "Exchange" not in plan, plan  # BroadcastExchange included
+        assert "ShuffledHashJoin" in plan, plan
+    for uri in ("/cgi/stats/report/eprint/3", "/cgi/stats/report/divisions/div1"):
+        assert _jobs_in_group(
+            spark, lambda: _graph_get(spark, store, uri, range="_ALL_")
+        ) == 1
+
+
+def test_pinned_gold_too_large_for_one_split_keeps_broadcast_joins(spark, gold_root):
+    """A table larger than one scan split is not coalesced, and the
+    compiled shapes keep their broadcast joins."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        pinned = _open_gold(spark, gold_root).pinned()
+        assert not pinned.single_partition
+        for plan in _executed_plans(pinned):
+            assert "BroadcastHashJoin" in plan, plan
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_pinned_snapshot_keeps_its_rows_and_a_reopened_store_sees_new_files(spark, tmp_path):
+    """A pinned store serves the rows it was opened on; a store opened
+    after a part file lands reads it. (A ``cache()``d scan would serve the
+    old rows to the new store too: its plan matches by path.)"""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from irstats2_spark.plans.http import handle_get
+
+    root = str(tmp_path)
+    _write_gold(spark, root)
+
+    def total(store):
+        status, _, body = handle_get(
+            spark, store, "/cgi/stats/report", {"view": "Counter", "range": "_ALL_"},
+            today=TODAY,
+        )
+        assert status == 200
+        return json.loads(body)[0]["count"]
+
+    old = _open_gold(spark, root)
+    before = total(old)
+    day = tmp_path / "fact_downloads" / "datestamp=20240109"
+    day.mkdir()
+    pq.write_table(
+        pa.table({
+            "eprintid": pa.array([1], pa.int32()),
+            "value": pa.array(["x"]),
+            "count": pa.array([1000], pa.int64()),
+        }),
+        str(day / "part-00000-landed.parquet"),
+    )
+    assert total(old) == before
+    assert total(_open_gold(spark, root)) == before + 1000
