@@ -75,9 +75,9 @@ class StatsStore:
         first query that reads it materializes it, and no job runs here.
         A checkpoint, unlike ``cache()``, is bound to this store's plans,
         so a store opened after new files land reads them, and the
-        snapshot's blocks are freed with the store. Its blocks live only
-        in executor memory, which ``session.get_spark``'s ``local[N]``
-        session loses only with the driver itself."""
+        snapshot's blocks are freed with the store. The blocks live in
+        executor memory, which the ``local[N]`` session of
+        ``session.get_spark`` keeps for the life of the process."""
         with self._lock:
             if self._snapshot is None:
                 snap = StatsStore(
