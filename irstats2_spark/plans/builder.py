@@ -17,14 +17,14 @@ Plus the documented optimizations:
 - ORDER BY + LIMIT compiled together => TakeOrderedAndProject.
 
 Scale: gold on disk is date-partitioned parquet. A request is served from
-``StatsStore.pinned()``, an in-memory snapshot in which each table that
-fits in one scan split is one partition. Over that snapshot every join
+``StatsStore.pinned()``, an in-memory snapshot in which each table of at
+most ``PIN_MAX_BYTES`` is one partition. When every table is, every join
 is a shuffle-hash join and every compiled Context is scan -> join ->
 grouped sum in ONE exchange-free stage, one Spark job: a single partition
-already satisfies the join's and the aggregate's distribution. A table
-too large to pin into one partition keeps the scale-out plan: dimensions
-broadcast, then partial agg -> one shuffle on the grouping keys -> final
-agg.
+already satisfies the join's and the aggregate's distribution. A larger
+table is read from parquet as it is, with partition pruning, and keeps
+the scale-out plan: dimensions broadcast, then partial agg -> one shuffle
+on the grouping keys -> final agg.
 """
 
 from __future__ import annotations
@@ -69,44 +69,61 @@ class StatsStore:
         """This store's tables as an in-memory snapshot, built once per
         store and shared by every request served from it.
 
-        A table whose optimizer size fits in one scan split
-        (``spark.sql.files.maxPartitionBytes``) is coalesced to one
-        partition; every table is then local-checkpointed, lazily: the
-        first query that reads it materializes it, and no job runs here.
-        A checkpoint, unlike ``cache()``, is bound to this store's plans,
-        so a store opened after new files land reads them, and the
+        A table whose optimizer size is at most ``PIN_MAX_BYTES`` is
+        coalesced to one partition and local-checkpointed, lazily: the
+        first query that reads it materializes it. A larger table is kept
+        as it is, with its partition pruning and scan pushdowns. Over a
+        store read from disk no job runs here; over a store whose plans
+        hold shuffles (``pipeline.build_store``), checkpointing runs those
+        shuffle stages, and concurrent first requests wait for them. A
+        checkpoint, unlike ``cache()``, is bound to this store's plans, so
+        a store opened after new files land reads them, and the
         snapshot's blocks are freed with the store. The blocks live in
         executor memory, which the ``local[N]`` session of
         ``session.get_spark`` keeps for the life of the process."""
-        with self._lock:
-            if self._snapshot is None:
-                snap = StatsStore(
-                    facts={d: _pin(df) for d, df in self.facts.items()},
-                    sets=_pin(self.sets),
-                    groupings=_pin(self.groupings),
-                    rendered=_pin(self.rendered),
-                    eprints=_pin(self.eprints),
-                )
-                tables = [*snap.facts.values(), snap.sets, snap.groupings,
-                          snap.rendered, snap.eprints]
-                snap.single_partition = all(
-                    df.rdd.getNumPartitions() == 1 for df in tables if df is not None
-                )
-                snap._snapshot = snap
-                self._snapshot = snap
-            return self._snapshot
+        if self._snapshot is None:
+            with self._lock:
+                if self._snapshot is None:
+                    single = []
+
+                    def pin(df):
+                        df, one = _pin(df)
+                        single.append(one)
+                        return df
+
+                    snap = StatsStore(
+                        facts={d: pin(df) for d, df in self.facts.items()},
+                        sets=pin(self.sets),
+                        groupings=pin(self.groupings),
+                        rendered=pin(self.rendered),
+                        eprints=pin(self.eprints),
+                    )
+                    snap.single_partition = all(single)
+                    snap._snapshot = snap
+                    self._snapshot = snap
+        return self._snapshot
 
 
-def _pin(df: DataFrame | None) -> DataFrame | None:
-    """One table of a pinned snapshot: one partition when it fits in one
-    scan split, then a lazy local checkpoint."""
+# The largest table, by the optimizer's size estimate (parquet bytes on
+# disk for a store read from disk), that ``StatsStore.pinned()`` folds
+# into one partition. Measured with ``tools/pin_crossover.py`` on 4 cores:
+# the snapshot answered every request shape faster than the pruned
+# parquet plan at a 9.0 MB daily fact (2M rows); at 13.6 MB one eprint's
+# week took as long as the parquet plan, at 18 MB longer. Above the bound
+# a table keeps its parquet plan.
+PIN_MAX_BYTES = 8 * 1024 * 1024
+
+
+def _pin(df: DataFrame | None) -> tuple[DataFrame | None, bool]:
+    """One table of a pinned snapshot, and whether it is one partition:
+    a lazy local checkpoint of one partition when the table is at most
+    ``PIN_MAX_BYTES``, else the table as it is."""
     if df is None:
-        return None
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
+        return None, True
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if int(size) <= conf.filesMaxPartitionBytes():
-        df = df.coalesce(1)
-    return df.localCheckpoint(eager=False)
+    if int(size) > PIN_MAX_BYTES:
+        return df, False
+    return df.coalesce(1).localCheckpoint(eager=False), True
 
 
 def _join_hint(store: StatsStore, dim: DataFrame) -> DataFrame:

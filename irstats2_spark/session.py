@@ -11,8 +11,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-# one local worker thread per core unless SPARK_GRAFT_CPUS says otherwise
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+def usable_cpus() -> int:
+    """The cores this process may run on (its affinity mask, which a
+    container's cpuset narrows), or the machine's count where the
+    platform has no affinity call."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+# one local worker thread per usable core unless SPARK_GRAFT_CPUS says otherwise
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus())
 
 
 def get_spark(

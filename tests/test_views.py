@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 
@@ -731,16 +732,16 @@ def _write_gold(spark, root) -> None:
     spark.createDataFrame(
         [("divisions", f"div{e % 2}", e) for e in range(1, 7)],
         "set_name string, set_value string, eprintid int",
-    ).write.parquet(f"{root}/dim_sets")
+    ).coalesce(1).write.parquet(f"{root}/dim_sets")
     spark.createDataFrame(
         [("divisions", f"div{e % 2}", "authors", f"a{e % 3}", e) for e in range(1, 7)],
         "set_name string, set_value string, grouping_name string, "
         "grouping_value string, eprintid int",
-    ).write.parquet(f"{root}/dim_groupings")
+    ).coalesce(1).write.parquet(f"{root}/dim_groupings")
     spark.createDataFrame(
         [(e, dt.datetime(2024, 1, 3)) for e in range(1, 7)],
         "eprintid int, datestamp timestamp",
-    ).write.parquet(f"{root}/eprints")
+    ).coalesce(1).write.parquet(f"{root}/eprints")
 
 
 def _open_gold(spark, root) -> StatsStore:
@@ -799,19 +800,34 @@ def test_pinned_gold_compiles_every_shape_to_one_exchange_free_stage(spark, gold
         ) == 1
 
 
-def test_pinned_gold_too_large_for_one_split_keeps_broadcast_joins(spark, gold_root):
-    """A table larger than one scan split is not coalesced, and the
-    compiled shapes keep their broadcast joins."""
-    key = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "64")
-    try:
-        pinned = _open_gold(spark, gold_root).pinned()
-        assert not pinned.single_partition
-        for plan in _executed_plans(pinned):
-            assert "BroadcastHashJoin" in plan, plan
-    finally:
-        spark.conf.set(key, saved)
+def test_pinned_gold_too_large_to_pin_keeps_the_parquet_plan(spark, gold_root, monkeypatch):
+    """A fact larger than ``PIN_MAX_BYTES`` is left as read: the compiled
+    shapes keep their broadcast joins and the fact scan keeps its
+    partition pruning and pushed filters; the smaller dimensions are
+    still pinned."""
+    from irstats2_spark.plans import builder
+    from irstats2_spark.plans.context import QueryOptions
+
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    store = _open_gold(spark, gold_root)
+    fact = store.facts["downloads"]
+    dims = max(size(store.sets), size(store.groupings), size(store.eprints))
+    assert size(fact) > dims
+    monkeypatch.setattr(builder, "PIN_MAX_BYTES", dims)
+    pinned = store.pinned()
+    assert not pinned.single_partition
+    assert pinned.facts["downloads"] is fact and pinned.sets is not store.sets
+    for plan in _executed_plans(pinned):
+        assert "BroadcastHashJoin" in plan, plan
+    week = Context(set_name="eprint", set_value="3",
+                   from_date="20240102", to_date="20240104")
+    plan = builder.compile_context(
+        pinned, week, QueryOptions(fields=("datestamp",)), today=TODAY
+    )._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*datestamp", plan), plan
+    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(eprintid,3\)", plan), plan
 
 
 def test_pinned_snapshot_keeps_its_rows_and_a_reopened_store_sees_new_files(spark, tmp_path):
