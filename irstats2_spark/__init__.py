@@ -22,7 +22,6 @@ def __getattr__(name):
     lazy = {
         "get_spark": ("irstats2_spark.session", "get_spark"),
         "Context": ("irstats2_spark.plans.context", "Context"),
-        "QueryOptions": ("irstats2_spark.plans.context", "QueryOptions"),
         "StatsStore": ("irstats2_spark.plans.builder", "StatsStore"),
         "compile_context": ("irstats2_spark.plans.builder", "compile_context"),
         "default_registry": ("irstats2_spark.plans.registry", "default_registry"),

@@ -66,8 +66,6 @@ def build_store(
             facts["doc_format"] = P.doc_format(eprints, documents)
     if history is not None:
         facts["history"] = P.history_actions(history)
-    facts["cache_downloads"] = P.lifetime_cache(facts["downloads"], "downloads")
-    facts["cache_views"] = P.lifetime_cache(facts["views"], "views")
 
     dims = {"sets": None, "groupings": None, "rendered": None}
     if with_dimensions and eprints is not None:

@@ -215,11 +215,16 @@ def history_actions(history: DataFrame) -> DataFrame:
     return _fact(src, F.col("objectid"), F.col("action"))
 
 
-# -- Lifetime caches (A4) ----------------------------------------------------
+# -- Lifetime caches (A4), not built -----------------------------------------
 
 def lifetime_cache(fact: DataFrame, value_label: str) -> DataFrame:
     """'cache_downloads'/'cache_views' (CacheDownloads.pm:34-50): lifetime
-    SUM(count) per eprint, datestamp=0, value=the datatype label."""
+    SUM(count) per eprint, datestamp=0, value=the datatype label.
+
+    The nightly run no longer builds these copies: a lifetime request is
+    one grouped sum over the daily fact. The function stays defined only
+    because the benchmark's per-layer tracer (``perfbench/layers.py``)
+    wraps it by name; delete it when the benchmark drops that hook."""
     return fact.groupBy("eprintid").agg(
         F.sum("count").alias("count")
     ).select(

@@ -3,10 +3,11 @@ F9-F11; reference Sets.pm:222-457, Handler.pm:876-1009).
 
 The reference drops + rebuilds one MySQL table pair per configured set by
 scanning the archive row-at-a-time in -eprintid order. Here each set is an
-explode/normalize/join over the eprints DataFrame, producing three unified
-dimensions (sets, groupings, rendered values) partitionable
-by set_name. The reference's "most recent eprint's rendering wins" rule
-(Sets.pm:279-280) becomes an explicit row_number() window.
+explode/normalize/join over the eprints DataFrame; the sets' rows are
+tagged with their set_name and unioned into one extract, from which the
+three unified dimensions (sets, groupings, rendered values) derive. The
+reference's "most recent eprint's rendering wins" rule (Sets.pm:279-280)
+becomes an explicit row_number() window.
 
 Set types (Sets.pm:362-457):
 - simple: key = raw value (md5 if anon)
@@ -20,6 +21,7 @@ Set types (Sets.pm:362-457):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -166,67 +168,63 @@ def build_dimensions(
     """S7: produce the three unified dimension tables for all sets.
 
     Returns {'sets': SET_DIM, 'groupings': GROUPING_DIM,
-    'rendered': RENDERED_DIM}.
+    'rendered': RENDERED_DIM}, all derived from ONE extract: every set's
+    (eprintid, set_value, rendered_set_value) rows tagged with their
+    set_name and unioned. ``sets`` is its distinct membership,
+    ``rendered`` one row_number window over (set_name, set_value) (the
+    most recent eprint's rendering wins, Sets.pm:279-280), ``groupings``
+    the membership joined to a broadcast table of the configured
+    (set_name, grouping_name) pairs and back to the membership of the
+    grouping set on eprintid.
 
-    Cache lifecycle: each set's extracted values are pinned (two
-    consumers: the membership union and the rendered-value window);
-    the CALLER owns the pins — an ETL run writes the dimensions and
-    then clearCache()s (see pipeline.lifecycle for the contract).
+    Cache lifecycle: the tagged extract is pinned (three consumers); the
+    CALLER owns the pin — an ETL run writes the dimensions and then
+    clearCache()s (see pipeline.lifecycle for the contract).
     """
-    by_name = {c.set_name: c for c in sets}
-    set_parts, rendered_parts = [], []
-    extracted: dict[str, DataFrame] = {}
-
+    parts = []
     for cfg in sets:
         vals = _extract_values(eprints, cfg, subjects)
         for b in cfg.blacklist:
             vals = vals.filter(F.col("set_value") != b)
-        extracted[cfg.set_name] = vals.cache()
-        set_parts.append(
+        parts.append(
             vals.select(
-                F.lit(cfg.set_name).alias("set_name"), "set_value", "eprintid"
-            ).distinct()
-        )
-        # most recent eprint's rendering wins (Sets.pm:279-280)
-        w = Window.partitionBy("set_value").orderBy(F.col("eprintid").desc())
-        rendered_parts.append(
-            vals.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
                 F.lit(cfg.set_name).alias("set_name"),
                 "set_value",
+                "eprintid",
                 "rendered_set_value",
             )
         )
+    tagged = reduce(DataFrame.unionByName, parts).cache()
 
-    grouping_parts = []
-    for cfg in sets:
-        for gname in cfg.groupings:
-            if gname not in by_name:
-                continue
-            gvals = extracted[gname].select(
-                "eprintid", F.col("set_value").alias("grouping_value")
-            )
-            pairs = (
-                extracted[cfg.set_name]
-                .select("eprintid", "set_value")
-                .join(gvals, "eprintid", "inner")
-                .select(
-                    F.lit(cfg.set_name).alias("set_name"),
-                    "set_value",
-                    "eprintid",
-                    F.lit(gname).alias("grouping_name"),
-                    "grouping_value",
-                )
-                .distinct()
-            )
-            grouping_parts.append(pairs)
-
-    from functools import reduce
-
-    sets_dim = reduce(DataFrame.unionByName, set_parts)
-    rendered_dim = reduce(DataFrame.unionByName, rendered_parts)
-    groupings_dim = (
-        reduce(DataFrame.unionByName, grouping_parts) if grouping_parts else None
+    sets_dim = tagged.select("set_name", "set_value", "eprintid").distinct()
+    w = Window.partitionBy("set_name", "set_value").orderBy(F.col("eprintid").desc())
+    rendered_dim = (
+        tagged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("set_name", "set_value", "rendered_set_value")
     )
+
+    names = {c.set_name for c in sets}
+    pairs = list(
+        dict.fromkeys(
+            (c.set_name, g) for c in sets for g in c.groupings if g in names
+        )
+    )
+    groupings_dim = None
+    if pairs:
+        configured = eprints.sparkSession.createDataFrame(
+            pairs, "set_name string, grouping_name string"
+        )
+        members = sets_dim.select(
+            F.col("set_name").alias("grouping_name"),
+            "eprintid",
+            F.col("set_value").alias("grouping_value"),
+        )
+        groupings_dim = (
+            sets_dim.join(F.broadcast(configured), "set_name")
+            .join(members, ["grouping_name", "eprintid"])
+            .select(
+                "set_name", "set_value", "eprintid", "grouping_name", "grouping_value"
+            )
+        )
     return {"sets": sets_dim, "groupings": groupings_dim, "rendered": rendered_dim}

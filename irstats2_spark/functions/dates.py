@@ -117,11 +117,11 @@ def normalise_dates(
 def get_dates(
     from_i: YYYYMMDD | None,
     to_i: YYYYMMDD | None,
-    resolution: str = "day",
     today: dt.date | None = None,
 ) -> list[int]:
-    """T2 support (Utils.pm:135-215): the complete day/month/year key
-    sequence for densification. Returns ints: YYYYMMDD / YYYYMM / YYYY."""
+    """T2 support (Utils.pm:135-215): the complete YYYYMMDD day key
+    sequence for densification; coarser buckets are ``day // 100``
+    (YYYYMM) and ``day // 10000`` (YYYY)."""
     if from_i is None:
         return []
     today = today or dt.date.today()
@@ -129,16 +129,6 @@ def get_dates(
         to_i = date_to_int(today - dt.timedelta(days=1))
     if from_i > to_i:
         return []
-    if resolution == "year":
-        return list(range(from_i // 10000, to_i // 10000 + 1))
-    if resolution == "month":
-        out = []
-        fy, fm = from_i // 10000, (from_i // 100) % 100
-        ty, tm = to_i // 10000, (to_i // 100) % 100
-        for y in range(fy, ty + 1):
-            for m in range(fm if y == fy else 1, (tm if y == ty else 12) + 1):
-                out.append(y * 100 + m)
-        return out
     d = int_to_date(from_i)
     end = int_to_date(to_i)
     out = []

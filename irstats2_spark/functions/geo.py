@@ -37,13 +37,9 @@ def ip_to_long(ip: Column) -> Column:
     return F.when(F.size(parts) == 4, value)
 
 
-def with_country(
-    df: DataFrame,
-    ranges: DataFrame,
-    ip_col: str = "requester_id",
-    out_col: str = "country_iso2",
-) -> DataFrame:
-    """Attach a country code via broadcast range join; rows with no match
+def with_country(df: DataFrame, ranges: DataFrame) -> DataFrame:
+    """Attach ``country_iso2`` to each row by the range that holds its
+    ``requester_id`` IP, via a broadcast range join; rows with no match
     keep NULL (the reference drops those records in the Country processor).
 
     Each range is exploded into the /8 prefixes it spans and the join
@@ -60,7 +56,7 @@ def with_country(
             )
         ),
     )
-    ipl = ip_to_long(F.col(ip_col))
+    ipl = ip_to_long(F.col("requester_id"))
     left = df.withColumn("__ipl", ipl).withColumn(
         "__prefix", (F.col("__ipl") / 16777216).cast("long")
     )
@@ -70,6 +66,6 @@ def with_country(
         & (F.col("__ipl") <= exploded.ip_end_long)
     )
     joined = left.join(F.broadcast(exploded), cond, "left")
-    return joined.withColumn(out_col, exploded.country_iso2).drop(
+    return joined.withColumn("country_iso2", exploded.country_iso2).drop(
         "ip_start_long", "ip_end_long", "__ipl", "__prefix"
     )

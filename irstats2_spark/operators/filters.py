@@ -87,8 +87,6 @@ def _ip_prefix_regex(prefixes: list[str]) -> str | None:
 
 def robots_filter(
     df: DataFrame,
-    ua_col: str = "requester_user_agent",
-    ip_col: str = "requester_id",
     ua_patterns: list[str] | None = None,
     ip_prefixes: list[str] | None = None,
     ua_file: str | None = None,
@@ -115,11 +113,13 @@ def robots_filter(
     keep = F.lit(True)
     if ua_re:
         keep = keep & ~(
-            F.col(ua_col).isNotNull() & F.lower(F.col(ua_col)).rlike(ua_re)
+            F.col("requester_user_agent").isNotNull()
+            & F.lower(F.col("requester_user_agent")).rlike(ua_re)
         )
     if ip_re:
         keep = keep & ~(
-            F.col(ip_col).isNotNull() & F.col(ip_col).rlike(ip_re)
+            F.col("requester_id").isNotNull()
+            & F.col("requester_id").rlike(ip_re)
         )
     return df.filter(keep)
 
@@ -134,15 +134,10 @@ def repeat_key(epid_col, docid_col, ip_col):
     )
 
 
-def repeat_filter(
-    df: DataFrame,
-    epoch_col: str = "epoch",
-    key_cols: tuple[str, str, str] = ("referent_id", "referent_docid", "requester_id"),
-    timeout: int = 3600,
-) -> DataFrame:
+def repeat_filter(df: DataFrame, timeout: int = 3600) -> DataFrame:
     """P9 exact semantics: per-key sequential fold.
 
-    Requires an integer/float seconds column ``epoch_col``. Events are
+    Requires an integer/float seconds column ``epoch``. Events are
     processed in epoch order per key, matching the reference's file-order
     scan of time-sorted logs.
 
@@ -153,8 +148,12 @@ def repeat_filter(
     a partition, keys are high-cardinality (they embed the client IP), and
     Python sees each row exactly once.
     """
-    epid, docid, ip = key_cols
-    keyed = df.withColumn("__rk", repeat_key(F.col(epid), F.col(docid), F.col(ip)))
+    keyed = df.withColumn(
+        "__rk",
+        repeat_key(
+            F.col("referent_id"), F.col("referent_docid"), F.col("requester_id")
+        ),
+    )
     schema = keyed.schema
     n_out = len(schema) - 1  # __rk dropped on output
 
@@ -163,7 +162,7 @@ def repeat_filter(
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
     )
     arranged = keyed.repartition(parts, "__rk").sortWithinPartitions(
-        "__rk", epoch_col
+        "__rk", "epoch"
     )
 
     def scan(batches):
@@ -172,7 +171,7 @@ def repeat_filter(
         prev_key, anchor = None, None
         for pdf in batches:
             keys = pdf["__rk"].to_numpy()
-            times = pdf[epoch_col].to_numpy()
+            times = pdf["epoch"].to_numpy()
             keep = [False] * len(pdf)
             for i in range(len(pdf)):
                 if keys[i] != prev_key:

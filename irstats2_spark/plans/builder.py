@@ -8,13 +8,15 @@ Reproduces Handler.pm's three extract paths as declarative plans:
 - extract_grouping_data (Handler.pm:575-649): INNER join to the grouping
   pair dimension, GROUP BY grouping_value ("top G within set member X").
 
-Plus the documented optimizations:
-- cache-table rewrite (Data.pm:128-139): undated lifetime queries
-  retargeted to the cache_* facts;
-- pre-live-date clamp (Handler.pm:233-263) for single-eprint queries,
-  compiled as a semi-join to the eprint's live date (equal eprintid,
-  datestamp >= live), so that compiling a Context never runs a Spark job;
-- ORDER BY + LIMIT compiled together => TakeOrderedAndProject.
+Every request reads the one daily fact of its datatype: the reference's
+rewrite of undated queries onto lifetime ``cache_*`` copies
+(Data.pm:128-139) exists because MySQL sums slowly, and a grouped sum
+over the daily fact answers the same question. The pre-live-date clamp
+(Handler.pm:233-263) of single-eprint queries compiles to a semi-join to
+the eprint's live date (equal eprintid, datestamp >= live), so compiling
+a Context never runs a Spark job. Ranking (ORDER BY count + LIMIT, which
+plans as TakeOrderedAndProject) belongs to the one view that ranks,
+``plans.views.top_table``.
 
 Scale: gold on disk is date-partitioned parquet. A request is served from
 ``StatsStore.pinned()``, an in-memory snapshot in which each table of at
@@ -35,7 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from irstats2_spark.plans.context import Context, QueryOptions, VALID_FACT_FIELDS
+from irstats2_spark.plans.context import Context, VALID_FACT_FIELDS
 
 
 @dataclass
@@ -149,29 +151,16 @@ def _apply_dates(df: DataFrame, from_i: int | None, to_i: int | None) -> DataFra
 def compile_context(
     store: StatsStore,
     ctx: Context,
-    opts: QueryOptions | None = None,
+    fields: tuple[str, ...] = (),
     today=None,
 ) -> DataFrame:
-    """Compile a Context (+options) to a DataFrame of
-    `<selected fields...>, count` — the reference's result contract
-    (rows hydrated as {field: v, count: n}, Handler.pm:389-404)."""
-    opts = opts or QueryOptions()
+    """Compile a Context to a DataFrame of `<selected fields...>, count`:
+    the reference's result contract (rows hydrated as {field: v, count: n},
+    Handler.pm:389-404), as one grouped sum over the datatype's fact."""
     ctx = ctx.sanitized()
     from_i, to_i = ctx.resolved_dates(today=today)
-
-    datatype = ctx.datatype
-    fields = list(opts.fields)
-
-    # --- cache-table rewrite (Data.pm:128-139) -----------------------------
-    undated = from_i is None and to_i is None
-    if (
-        undated
-        and "datestamp" not in fields
-        and f"cache_{datatype}" in store.facts
-    ):
-        datatype = f"cache_{datatype}"
-
-    fact = store.fact(datatype)
+    fields = list(fields)
+    fact = store.fact(ctx.datatype)
 
     # --- eprint vs set vs grouping routing (Data.pm:141-152) ---------------
     is_eprint_path = ctx.set_name in (None, "", "eprint")
@@ -260,26 +249,6 @@ def compile_context(
         out = fact.groupBy(*group_cols).agg(F.sum("count").alias("count"))
     else:
         out = fact.agg(F.sum("count").alias("count"))
-
-    # --- data_min post-filter (P11) ----------------------------------------
-    if opts.data_min is not None:
-        out = out.filter(F.col("count") >= opts.data_min)
-
-    # --- O1/O2: order + limit/offset ---------------------------------------
-    order_col = opts.order_by or "count"
-    if order_col not in group_cols + ["count"]:
-        raise ValueError(
-            f"order_by '{order_col}' not in selected fields (Data.pm:74-78)"
-        )
-    ordering = F.col(order_col).desc() if opts.order_desc else F.col(order_col).asc()
-    # deterministic tie-break on the remaining keys
-    ties = [F.col(c).asc() for c in group_cols if c != order_col]
-    if opts.limit is not None or opts.offset is not None or opts.order_by:
-        out = out.orderBy(ordering, *ties)
-    if opts.offset:
-        out = out.offset(opts.offset)
-    if opts.limit is not None:
-        out = out.limit(opts.limit)
     return out
 
 

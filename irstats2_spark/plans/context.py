@@ -1,8 +1,8 @@
 """The Context — the reference's entire query "language" (SURVEY §1.4;
 Context.pm:14-25 + per-view options Utils.pm:52-110).
 
-A Context plus view options compiles to exactly one of two DataFrame
-shapes (see plans/builder.py). Validation mirrors Context.pm:438-549:
+A Context plus the fields a view selects compiles to exactly one of two
+DataFrame shapes (see plans/builder.py). Validation mirrors Context.pm:438-549:
 param sanitization, date normalization, registry checks.
 """
 
@@ -56,18 +56,3 @@ class Context:
             datafilter=sanitize_param(self.datafilter),
         )
 
-
-@dataclass(frozen=True)
-class QueryOptions:
-    """Per-view options (Utils.pm:52-110, View/Table.pm:37-89)."""
-
-    fields: tuple[str, ...] = ()
-    order_by: str | None = None  # default: count
-    order_desc: bool = True
-    limit: int | None = None
-    offset: int | None = None
-    top: str | None = None  # 'eprint' | set name | datatype value routing
-    date_resolution: str = "day"
-    cumulative: bool = False
-    show_average: bool = False
-    data_min: int | None = None

@@ -21,7 +21,7 @@ from dataclasses import replace
 from pyspark.sql import SparkSession
 
 from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
-from irstats2_spark.plans.context import Context, QueryOptions
+from irstats2_spark.plans.context import Context
 from irstats2_spark.sources.export import records
 
 # Context.pm:14-25 — the request fields that flow into the Context;
@@ -307,7 +307,9 @@ def handle_fp_stats(
 ) -> tuple[int, str, str]:
     """The /cgi/stats/fp_stats front-page counters (fp_stats:17-43):
     full-text document count, all-time downloads, and last-year
-    downloads — each thousands-separated (F12, Utils.pm:340-369).
+    downloads — each thousands-separated (F12, Utils.pm:340-369). Two
+    Spark jobs: the document count, and one collect of the all-time daily
+    downloads series, summed in Python for both totals.
 
     The documents counted are the rows of ``store.eprints`` with
     ``full_text_status`` in (public, restricted) when the column exists,
@@ -327,15 +329,18 @@ def handle_fp_stats(
     else:
         n_docs = 0
 
-    ctx_all = Context(datatype="downloads", range="_ALL_")
-    dl_all = sum_all(compile_context(store, ctx_all, today=today)).head()[0]
-    ctx_year = Context(datatype="downloads", range="1y")
-    dl_year = sum_all(compile_context(store, ctx_year, today=today)).head()[0]
+    days = compile_context(
+        store, Context(datatype="downloads", range="_ALL_"), ("datestamp",),
+        today=today,
+    ).collect()
+    lo, hi = Context(range="1y").resolved_dates(today=today)
+    dl_all = sum(r["count"] for r in days)
+    dl_year = sum(r["count"] for r in days if lo <= r["datestamp"] <= hi)
     body = _json.dumps(
         {
             "full_texts_all": f"{n_docs:,}",
-            "full_text_downloads_all": f"{int(dl_all):,}",
-            "full_text_downloads_year": f"{int(dl_year):,}",
+            "full_text_downloads_all": f"{dl_all:,}",
+            "full_text_downloads_year": f"{dl_year:,}",
         }
     )
     return 200, "application/json", body
@@ -369,9 +374,7 @@ def handle_export(
     ctx = _context(fields)
     # the export plugins dump the context's data selection row-by-row
     # (Export/CSV.pm:15-47) — the per-datestamp series of the selection
-    df = compile_context(
-        store, ctx, QueryOptions(fields=("datestamp",)), today=today
-    )
+    df = compile_context(store, ctx, ("datestamp",), today=today)
     return _export(fmt, df.columns, df.collect())
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from irstats2_spark.functions.dates import get_dates
 from irstats2_spark.plans.builder import StatsStore, compile_context
-from irstats2_spark.plans.context import Context, QueryOptions
+from irstats2_spark.plans.context import Context
 
 _SERIES_TYPES = {
     "datestamp": "int",
@@ -47,9 +47,7 @@ def graph_rows(
     An open window ('_ALL_') snaps to the first and last day with data."""
     from_i, to_i = ctx.resolved_dates(today=today)
     daily: dict[int, int] = {}
-    for r in compile_context(
-        store, ctx, QueryOptions(fields=("datestamp",)), today=today
-    ).collect():
+    for r in compile_context(store, ctx, ("datestamp",), today=today).collect():
         # a set or grouping context also groups by its key: fold it away
         daily[r["datestamp"]] = daily.get(r["datestamp"], 0) + (r["count"] or 0)
     columns = ["datestamp", "count"]
@@ -130,19 +128,22 @@ def top_table(
     selects the grouping axis — 'eprint' groups by eprintid, the
     context's datatype groups by the fact value column, a set name is a
     grouping join (top authors/divisions/...). ``data_min`` drops groups
-    with a smaller count (Table.pm:134-135). ``limit`` and ``data_min``
-    may come in request form ('10', 'all')."""
+    with a smaller count (Table.pm:134-135); the rest are ranked by count,
+    highest first, ties by key, and cut to ``limit`` unless it is 'all'
+    (Data.pm:74-78, O1-O3), which plans as TakeOrderedAndProject.
+    ``limit`` and ``data_min`` may come in request form ('10', 'all')."""
     if top == "eprint":
         ctx = replace(ctx, grouping="eprint")
     elif top == ctx.datatype:
         ctx = replace(ctx, grouping="value")
     else:
         ctx = replace(ctx, grouping=top)
-    opts = QueryOptions(
-        limit=None if limit == "all" else int(limit),
-        data_min=None if data_min is None else int(data_min),
-    )
-    return compile_context(store, ctx, opts, today=today)
+    out = compile_context(store, ctx, today=today)
+    if data_min is not None:
+        out = out.filter(F.col("count") >= int(data_min))
+    keys = [F.col(c).asc() for c in out.columns if c != "count"]
+    out = out.orderBy(F.col("count").desc(), *keys)
+    return out if limit == "all" else out.limit(int(limit))
 
 
 def compare_years(
@@ -157,7 +158,7 @@ def compare_years(
     monthly = compile_context(
         store,
         replace(ctx, range="_ALL_", from_date=None, to_date=None),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
         today=today,
     )
     return (

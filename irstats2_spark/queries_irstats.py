@@ -21,7 +21,8 @@ from irstats2_spark.catalog import register
 from irstats2_spark.etl import processors as P
 from irstats2_spark.operators.filters import repeat_filter, robots_filter
 from irstats2_spark.plans.builder import StatsStore, compile_context
-from irstats2_spark.plans.context import Context, QueryOptions
+from irstats2_spark.plans.context import Context
+from irstats2_spark.plans.views import top_table
 from irstats2_spark.sources.access_log import events_from_driver_table
 from irstats2_spark.sources.testdata import load_table
 
@@ -86,10 +87,7 @@ def etl_doc_downloads_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _store(spark: SparkSession, sf_dir: str) -> StatsStore:
     ev = _adapted(spark, sf_dir)
-    facts = {"downloads": P.downloads(ev), "views": P.views(ev)}
-    facts["cache_downloads"] = P.lifetime_cache(facts["downloads"], "downloads")
-    facts["cache_views"] = P.lifetime_cache(facts["views"], "views")
-    return StatsStore(facts=facts)
+    return StatsStore(facts={"downloads": P.downloads(ev), "views": P.views(ev)})
 
 
 @register(
@@ -109,7 +107,7 @@ def ctx_daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_context(
         store,
         Context(datatype="downloads", from_date="20240105", to_date="20240125"),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
     )
 
 
@@ -118,7 +116,8 @@ def ctx_daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT COUNT(*) AS count FROM events WHERE event_type = 'click'
     """,
-    doc="cache-table rewrite (Data.pm:128-139): undated total hits cache_downloads",
+    doc="undated lifetime total: one sum over the daily fact (the reference's "
+    "cache-table rewrite, Data.pm:128-139, is not kept)",
 )
 def ctx_lifetime_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _store(spark, sf_dir)
@@ -134,15 +133,12 @@ def ctx_lifetime_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY count DESC, eprintid ASC
     LIMIT 10
     """,
-    doc="O3 top-N routing: grouping='eprint' + order/limit (Table.pm:37-89)",
+    doc="O3 top-N routing through top_table: top='eprint' + order/limit "
+    "(Table.pm:37-89)",
 )
 def ctx_top_eprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _store(spark, sf_dir)
-    return compile_context(
-        store,
-        Context(datatype="views", grouping="eprint", range="_ALL_"),
-        QueryOptions(limit=10),
-    )
+    return top_table(store, Context(datatype="views", range="_ALL_"), "eprint", 10)
 
 
 @register(
@@ -160,7 +156,7 @@ def ctx_single_eprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_context(
         store,
         Context(datatype="downloads", set_name="eprint", set_value="7", range="_ALL_"),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
     )
 
 
@@ -637,7 +633,7 @@ def ctx_set_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             from_date="20240101",
             to_date="20240131",
         ),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
     )
 
 
@@ -657,8 +653,8 @@ def ctx_set_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM fact JOIN dim USING (eprintid)
     GROUP BY 1
     """,
-    doc="J1 set shape, no member filter: group by set_value; undated so the "
-    "cache-table rewrite (Data.pm:128-139) kicks in underneath",
+    doc="J1 set shape, no member filter: group by set_value over the whole "
+    "daily fact",
 )
 def ctx_top_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _dims_store(spark, sf_dir)
@@ -686,21 +682,21 @@ def ctx_top_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY count DESC, grouping_value ASC
     LIMIT 5
     """,
-    doc="J2 grouping shape via engine (Handler.pm:575-649): top nations "
+    doc="J2 grouping shape via top_table (Handler.pm:575-649): top nations "
     "within segment BUILDING, with O1/O2 order+limit",
 )
 def ctx_grouping_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _dims_store(spark, sf_dir)
-    return compile_context(
+    return top_table(
         store,
         Context(
             datatype="downloads",
             set_name="segment",
             set_value="BUILDING",
-            grouping="nation",
             range="_ALL_",
         ),
-        QueryOptions(limit=5),
+        "nation",
+        5,
     )
 
 
@@ -728,7 +724,7 @@ def ctx_prelive_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
             from_date="20240101",
             to_date="20240131",
         ),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
         today=_TODAY,
     )
 
@@ -741,14 +737,13 @@ def ctx_prelive_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     HAVING COUNT(*) >= 80
     """,
-    doc="P11 (View/Table.pm:134-135): data_min post-filter on the grouped sum",
+    doc="P11 (View/Table.pm:134-135): top_table's data_min post-filter on "
+    "the grouped sum",
 )
 def ctx_data_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _store(spark, sf_dir)
-    return compile_context(
-        store,
-        Context(datatype="views", grouping="eprint", range="_ALL_"),
-        QueryOptions(data_min=80),
+    return top_table(
+        store, Context(datatype="views", range="_ALL_"), "eprint", "all", 80
     )
 
 

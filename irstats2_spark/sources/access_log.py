@@ -27,11 +27,11 @@ from pyspark.sql import functions as F
 _TS_RE = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}Z$"
 
 
-def parse_access_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_access_lines(lines: DataFrame) -> DataFrame:
     """P1: split the 7-field TSV line and type the fields; malformed rows
     (wrong field count / bad timestamp / non-numeric ids) are dropped
     silently (Access.pm:16-43)."""
-    parts = F.split(F.col(value_col), "\t", -1)
+    parts = F.split(F.col("value"), "\t", -1)
     df = lines.select(
         parts.alias("p"), F.size(parts).alias("n")
     ).filter(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from irstats2_spark.etl.pipeline import build_silver_events, build_store
 from irstats2_spark.plans.builder import compile_context, sum_all
-from irstats2_spark.plans.context import Context, QueryOptions
+from irstats2_spark.plans.context import Context
 from irstats2_spark.sources.access_log import read_access_logs, with_event_columns
 
 UAS = [
@@ -161,8 +161,7 @@ def test_search_terms_values(store):
 
 def test_context_whole_repo_counts(store):
     df = compile_context(store, Context(datatype="downloads", range="_ALL_"))
-    # undated + no datestamp field => rewritten to cache_downloads; total
-    # must equal the plain sum over the daily fact
+    # an undated total is the plain sum over the daily fact
     total = df.head()["count"]
     expected = (
         store.facts["downloads"].agg(F.sum("count").alias("s")).head().s
@@ -190,7 +189,6 @@ def test_context_grouping_query(store):
             set_value="div1",
             grouping="type",
         ),
-        QueryOptions(limit=10),
     )
     rows = df.collect()
     assert all(r.grouping_value in ("article", "book") for r in rows)
@@ -298,7 +296,7 @@ def test_context_single_eprint_live_clamp(store):
     df = compile_context(
         store,
         Context(datatype="downloads", set_name="eprint", set_value="5", range="_ALL_"),
-        QueryOptions(fields=("datestamp",)),
+        ("datestamp",),
     )
     assert df.count() >= 0
     fact_direct = (
@@ -307,9 +305,46 @@ def test_context_single_eprint_live_clamp(store):
     assert df.count() == fact_direct
 
 
+def _get(spark, store, uri, **params):
+    import json
+
+    from irstats2_spark.plans.http import handle_get
+
+    status, _, body = handle_get(spark, store, uri, params, today=dt.date(2024, 3, 1))
+    assert status == 200, body
+    return json.loads(body)
+
+
+@pytest.mark.parametrize("range_", [None, "_ALL_"])
+def test_eprint_lifetime_counter_is_the_sum_of_its_day_graph(spark, store, range_):
+    """An eprint's lifetime Counter sums the daily fact from the eprint's
+    go-live date on, exactly as its day Graph does; the store holds one
+    fact per datatype, no lifetime copy."""
+    uri = "/cgi/stats/report/eprint/5"
+    graph = _get(spark, store, uri, view="Graph", datatype="downloads", range="_ALL_")
+    total = sum(r["count"] for r in graph)
+    assert total > 0
+    params = {"view": "Counter", "datatype": "downloads"}
+    if range_ is not None:
+        params["range"] = range_
+    assert _get(spark, store, uri, **params) == [{"count": total}]
+    assert not [d for d in store.facts if d.startswith("cache_")]
+
+
+def test_table_limit_all_is_ranked_by_count_then_key(spark, store):
+    """``limit=all`` lifts only the limit (O3): the rows stay ranked by
+    count, highest first, ties by eprintid."""
+    rows = _get(
+        spark, store, "/cgi/stats/report", view="Table", datatype="views", limit="all"
+    )
+    ranked = [(-r["count"], r["eprintid"]) for r in rows]
+    assert len(ranked) > 10
+    assert ranked == sorted(ranked)
+
+
 def test_sum_all(store):
     df = compile_context(
-        store, Context(datatype="views", range="_ALL_"), QueryOptions(fields=("eprintid",))
+        store, Context(datatype="views", range="_ALL_"), ("eprintid",)
     )
     total = sum_all(df).head()["count"]
     expected = store.facts["views"].agg(F.sum("count").alias("s")).head().s
@@ -345,13 +380,13 @@ def test_context_unknown_field_warned_and_skipped(store, caplog):
     import logging
 
     from irstats2_spark.plans.builder import compile_context
-    from irstats2_spark.plans.context import Context, QueryOptions
+    from irstats2_spark.plans.context import Context
 
     with caplog.at_level(logging.WARNING, "irstats2_spark.plans.builder"):
         out = compile_context(
             store,
             Context(datatype="downloads", range="_ALL_"),
-            QueryOptions(fields=("datestamp", "nonsense")),
+            ("datestamp", "nonsense"),
         )
     assert "nonsense" in caplog.text
     assert out.columns == ["datestamp", "count"]

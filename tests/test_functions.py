@@ -205,12 +205,10 @@ def test_add_delta_ymd_rollover():
 
 
 def test_get_dates():
-    assert get_dates(20240228, 20240302, "day") == [
+    assert get_dates(20240228, 20240302) == [
         20240228, 20240229, 20240301, 20240302,
     ]
-    assert get_dates(20231101, 20240201, "month") == [202311, 202312, 202401, 202402]
-    assert get_dates(20230615, 20250101, "year") == [2023, 2024, 2025]
-    assert get_dates(20240301, 20240201, "day") == []  # from > to guard
+    assert get_dates(20240301, 20240201) == []  # from > to guard
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +277,7 @@ def test_get_dates_day_sequence_complete(a, b):
             lo, hi = hi, lo
     from irstats2_spark.functions.dates import date_to_int
 
-    keys = get_dates(date_to_int(lo), date_to_int(hi), "day")
+    keys = get_dates(date_to_int(lo), date_to_int(hi))
     assert len(keys) == (hi - lo).days + 1
     assert keys[0] == date_to_int(lo) and keys[-1] == date_to_int(hi)
     assert keys == sorted(set(keys))  # no gaps, dups, or disorder

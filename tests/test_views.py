@@ -654,14 +654,13 @@ def test_view_path_runs_no_spark_job_outside_its_collect(spark, live_store):
     """Building an eprint context starts no Spark job; a Graph request
     starts no more jobs than one collect of its compiled context."""
     from irstats2_spark.plans.builder import compile_context
-    from irstats2_spark.plans.context import QueryOptions
 
     ctx = Context(datatype="downloads", set_name="eprint", set_value="1",
                   from_date="20240101", to_date="20240105")
-    opts = QueryOptions(fields=("datestamp",))
     built = []
     assert _jobs_in_group(
-        spark, lambda: built.append(compile_context(live_store, ctx, opts, today=TODAY))
+        spark,
+        lambda: built.append(compile_context(live_store, ctx, ("datestamp",), today=TODAY))
     ) == 0
     one_collect = _jobs_in_group(spark, lambda: built[0].collect())
     request = _jobs_in_group(
@@ -774,11 +773,9 @@ _SHAPES = [
 
 def _executed_plans(store) -> list[str]:
     from irstats2_spark.plans.builder import compile_context
-    from irstats2_spark.plans.context import QueryOptions
 
-    opts = QueryOptions(fields=("datestamp",))
     return [
-        compile_context(store, c, opts, today=TODAY)._jdf.queryExecution()
+        compile_context(store, c, ("datestamp",), today=TODAY)._jdf.queryExecution()
         .executedPlan().toString()
         for c in _SHAPES
     ]
@@ -806,7 +803,6 @@ def test_pinned_gold_too_large_to_pin_keeps_the_parquet_plan(spark, gold_root, m
     partition pruning and pushed filters; the smaller dimensions are
     still pinned."""
     from irstats2_spark.plans import builder
-    from irstats2_spark.plans.context import QueryOptions
 
     def size(df):
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -824,10 +820,40 @@ def test_pinned_gold_too_large_to_pin_keeps_the_parquet_plan(spark, gold_root, m
     week = Context(set_name="eprint", set_value="3",
                    from_date="20240102", to_date="20240104")
     plan = builder.compile_context(
-        pinned, week, QueryOptions(fields=("datestamp",)), today=TODAY
+        pinned, week, ("datestamp",), today=TODAY
     )._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*datestamp", plan), plan
     assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(eprintid,3\)", plan), plan
+
+
+def test_fp_stats_runs_two_jobs_over_a_pinned_store(spark, gold_root):
+    """fp_stats counts the documents and collects the all-time day series
+    once; both download totals are summed from it in Python, and the
+    body equals the two separate grand totals."""
+    import json
+
+    from irstats2_spark.plans.builder import compile_context, sum_all
+    from irstats2_spark.plans.http import handle_fp_stats
+
+    today = dt.date(2025, 1, 3)  # the last year is 20240102-20250102
+    store = _open_gold(spark, gold_root)
+    out = []
+    assert _jobs_in_group(
+        spark, lambda: out.append(handle_fp_stats(spark, store, today=today))
+    ) == 2
+    status, ctype, body = out[0]
+
+    def total(range_):
+        ctx = Context(datatype="downloads", range=range_)
+        return sum_all(compile_context(store, ctx, today=today)).head()[0]
+
+    assert (status, ctype) == (200, "application/json")
+    assert json.loads(body) == {
+        "full_texts_all": "6",
+        "full_text_downloads_all": f"{total('_ALL_'):,}",
+        "full_text_downloads_year": f"{total('1y'):,}",
+    }
+    assert json.loads(body)["full_text_downloads_year"] == "294"
 
 
 def test_pinned_snapshot_keeps_its_rows_and_a_reopened_store_sees_new_files(spark, tmp_path):

@@ -71,24 +71,31 @@ def write_gold(spark, root: str, rows: int) -> int:
     return eprints
 
 
-def shapes(eprints: int):
-    """(name, Context, QueryOptions) of the serve path's request shapes:
-    an eprint's week and lifetime, a set member's and the repository's
-    daily series, the top eprints, and the top authors within a set."""
-    from irstats2_spark.plans.context import Context, QueryOptions
+def shapes(eprints: int, today: dt.date):
+    """(name, plan) of the serve path's request shapes, ``plan`` taking a
+    store to the request's DataFrame: an eprint's week and lifetime, a
+    set member's and the repository's daily series, the top eprints, and
+    the top authors within a set."""
+    from irstats2_spark.plans.builder import compile_context
+    from irstats2_spark.plans.context import Context
+    from irstats2_spark.plans.views import top_table
 
-    days = QueryOptions(fields=("datestamp",))
-    top = QueryOptions(fields=(), limit=10)
+    def days(ctx):
+        return lambda s: compile_context(s, ctx, ("datestamp",), today=today)
+
+    def top(ctx, axis):
+        return lambda s: top_table(s, ctx, axis, 10, today=today)
+
     e = str(eprints // 2 + 1)
     return [
-        ("eprint_week", Context(set_name="eprint", set_value=e,
-                                from_date="20240610", to_date="20240616"), days),
-        ("eprint_all", Context(set_name="eprint", set_value=e, range="_ALL_"), days),
-        ("set_all", Context(set_name="divisions", set_value="div3", range="_ALL_"), days),
-        ("repo_all", Context(range="_ALL_"), days),
-        ("top_eprints", Context(range="_ALL_", grouping="eprint"), top),
-        ("top_authors", Context(set_name="divisions", set_value="div3",
-                                grouping="authors", range="_ALL_"), top),
+        ("eprint_week", days(Context(set_name="eprint", set_value=e,
+                                     from_date="20240610", to_date="20240616"))),
+        ("eprint_all", days(Context(set_name="eprint", set_value=e, range="_ALL_"))),
+        ("set_all", days(Context(set_name="divisions", set_value="div3", range="_ALL_"))),
+        ("repo_all", days(Context(range="_ALL_"))),
+        ("top_eprints", top(Context(range="_ALL_"), "eprint")),
+        ("top_authors", top(Context(set_name="divisions", set_value="div3",
+                                    range="_ALL_"), "authors")),
     ]
 
 
@@ -108,24 +115,24 @@ def measure(spark, root: str, rows: int, reps: int) -> dict:
     with mock.patch.object(builder, "PIN_MAX_BYTES", float("inf")):
         pinned = store.pinned()
     assert pinned.single_partition
-    today = dt.date(2025, 1, 1)
+    requests = shapes(eprints, dt.date(2025, 1, 1))
 
-    def run(s, ctx, opts) -> float:
+    def run(s, plan) -> float:
         t = time.perf_counter()
-        builder.compile_context(s, ctx, opts, today=today).collect()
+        plan(s).collect()
         return (time.perf_counter() - t) * 1000
 
     out = {"rows": rows, "eprints": eprints, "fact_size_bytes": size, "shapes": {}}
     t = time.perf_counter()
-    for _, ctx, opts in shapes(eprints):
-        run(pinned, ctx, opts)
+    for _, plan in requests:
+        run(pinned, plan)
     out["pin_s"] = round(time.perf_counter() - t, 2)
-    for name, ctx, opts in shapes(eprints):
-        run(store, ctx, opts)
+    for name, plan in requests:
+        run(store, plan)
         disk, mem = [], []
         for _ in range(reps):
-            disk.append(run(store, ctx, opts))
-            mem.append(run(pinned, ctx, opts))
+            disk.append(run(store, plan))
+            mem.append(run(pinned, plan))
         out["shapes"][name] = {
             "parquet_ms": round(statistics.median(disk), 1),
             "pinned_ms": round(statistics.median(mem), 1),
