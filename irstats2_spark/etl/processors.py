@@ -23,9 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from irstats2_spark.functions.classify import classify_browser, classify_referrer
+from irstats2_spark.functions.classify import classify_browser, referrer_label, referrer_labelled
 from irstats2_spark.functions.text import extract_search_terms
-from irstats2_spark.functions.urls import percent_decode
+from irstats2_spark.functions.urls import percent_decode, url_hostname, url_protocol, url_uri
 
 
 def _fact(df: DataFrame, id_col, value_col) -> DataFrame:
@@ -85,16 +85,21 @@ def referrer(
     local_domains: dict[str, str] | None = None,
 ) -> DataFrame:
     """'referrer' (Referrer.pm:39-59): percent-decoded referrer classified;
-    rows with unparsable hostname dropped."""
-    src = events.filter(
+    rows with unparsable hostname dropped. The drop tests the split parts,
+    not the label: a filter on the label copies the whole classification
+    into generated code that outgrows the 64 KB method limit."""
+    ref = percent_decode(F.col("referring_entity_id"))
+    parsed = events.filter(
         F.col("referent_id").isNotNull()
         & F.col("referring_entity_id").isNotNull()
         & (F.col("referring_entity_id") != "")
-    ).withColumn("__ref", percent_decode(F.col("referring_entity_id")))
-    labeled = src.withColumn(
-        "__label", classify_referrer(F.col("__ref"), host=host, local_domains=local_domains)
-    ).filter(F.col("__label").isNotNull())
-    return _fact(labeled, F.col("referent_id"), F.col("__label"))
+    ).withColumns(
+        {"__proto": url_protocol(ref), "__host": url_hostname(ref), "__uri": url_uri(ref)}
+    )
+    proto, hostname, uri = F.col("__proto"), F.col("__host"), F.col("__uri")
+    labeled = parsed.filter(referrer_labelled(proto, hostname, local_domains))
+    label = referrer_label(proto, hostname, uri, host=host, local_domains=local_domains)
+    return _fact(labeled, F.col("referent_id"), label)
 
 
 def search_terms(

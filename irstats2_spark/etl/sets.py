@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.window import Window
 
 from irstats2_spark.functions.names import normalise_name_udf
@@ -69,28 +70,38 @@ def subject_closure(subjects: DataFrame) -> DataFrame:
     """F9: ancestor closure `(subjectid, ancestor)` including self.
 
     The subject table is config-sized (a few levels, FIXTURES §4), so one
-    job collects its `(subjectid, parent)` edges and the driver walks each
-    subject's parents; the visited set ends a cyclic tree."""
-    parents: dict = {}
-    ids = []
-    for sid, parent in subjects.select("subjectid", "parent").collect():
-        ids.append(sid)
-        if sid is not None and parent is not None:
-            parents.setdefault(sid, []).append(parent)
-    rows = set()
-    for sid in ids:
-        seen, todo = {sid}, [sid]
-        while todo:
-            for parent in parents.get(todo.pop(), ()):
-                if parent not in seen:
-                    seen.add(parent)
-                    todo.append(parent)
-        rows.update((sid, anc) for anc in seen)
+    task receives all its `(subjectid, parent)` edges and walks each
+    subject's parents; the visited set ends a cyclic tree. Lazy: no job
+    runs until the closure is used."""
     dtype = subjects.schema["subjectid"].dataType
     schema = T.StructType(
         [T.StructField("subjectid", dtype), T.StructField("ancestor", dtype)]
     )
-    return subjects.sparkSession.createDataFrame(list(rows), schema)
+    kind = to_arrow_type(dtype)
+
+    def walk(batches):
+        import pyarrow as pa
+
+        parents: dict = {}  # every subject -> its parents
+        for edges in batches:
+            for sid, parent in zip(*edges.to_pydict().values()):
+                up = parents.setdefault(sid, [])
+                if sid is not None and parent is not None:
+                    up.append(parent)
+        rows = set()
+        for sid in parents:
+            seen, todo = {sid}, [sid]
+            while todo:
+                for parent in parents.get(todo.pop(), ()):
+                    if parent not in seen:
+                        seen.add(parent)
+                        todo.append(parent)
+            rows.update((sid, anc) for anc in seen)
+        cols = list(zip(*rows)) or [(), ()]
+        yield pa.RecordBatch.from_arrays([pa.array(c, kind) for c in cols], schema.names)
+
+    edges = subjects.select("subjectid", "parent").coalesce(1)
+    return edges.mapInArrow(walk, schema)
 
 
 def _extract_values(eprints: DataFrame, cfg: SetConfig, subjects: DataFrame | None):

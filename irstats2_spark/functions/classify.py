@@ -46,16 +46,24 @@ def classify_referrer(
     host: str | None = None,
     local_domains: dict[str, str] | None = None,
 ) -> Column:
-    """F4 (Referrer.pm:61-116): hostname/URI -> label; NULL when the
-    hostname fails to parse (record skipped upstream).
+    """F4 (Referrer.pm:61-116) over a raw referrer: ``referrer_label``."""
+    proto, uri = url_protocol(referrer), url_uri(referrer)
+    return referrer_label(proto, url_hostname(referrer), uri, host, local_domains)
+
+
+def referrer_label(
+    proto: Column,
+    hostname: Column,
+    uri: Column,
+    host: str | None = None,
+    local_domains: dict[str, str] | None = None,
+) -> Column:
+    """F4 (Referrer.pm:61-116): a referrer's protocol, hostname and URI ->
+    label; NULL when the hostname fails to parse (record skipped upstream).
 
     ``host`` is the repository's own hostname; ``local_domains`` maps
     label -> hostname-regex for locally configured domains.
     """
-    proto = url_protocol(referrer)
-    hostname = url_hostname(referrer)
-    uri = url_uri(referrer)
-
     expr = (
         F.when(hostname == "localhost", F.lit("Internal (Abstract page)"))
         .when(proto == "info:oai", F.lit("Internal (OAI-PMH)"))
@@ -80,3 +88,16 @@ def classify_referrer(
         expr = expr.when(hostname.rlike(pattern), F.lit(label))
     # unknown => raw hostname; unparsable => NULL
     return expr.otherwise(F.when(hostname != "", hostname))
+
+
+def referrer_labelled(
+    proto: Column,
+    hostname: Column,
+    local_domains: dict[str, str] | None = None,
+) -> Column:
+    """True exactly where ``referrer_label`` is not NULL: every branch but
+    OAI-PMH and a local-domain pattern needs a non-empty hostname."""
+    keep = (hostname != "") | (proto == "info:oai")
+    for pattern in (local_domains or {}).values():
+        keep = keep | hostname.rlike(pattern)
+    return keep

@@ -87,7 +87,9 @@ def extract_search_terms(
     )
     q = F.coalesce(internal_q, engine_q)
 
-    words = df.withColumn("__q", q).filter(F.col("__q").isNotNull())
+    # explode(split(NULL)) yields no rows; a `__q IS NOT NULL` filter would
+    # copy the URL parse into generated code past the 64 KB method limit
+    words = df.withColumn("__q", q)
     exploded = words.withColumn("__raw", F.explode(F.split(F.col("__q"), r"\+")))
     return (
         exploded.withColumn("word", normalize_word(F.col("__raw"), stopwords))

@@ -49,22 +49,13 @@ def read_fact(spark: SparkSession, root: str, datatype: str) -> DataFrame:
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """``spark.read.parquet(path)``, or None when no table exists yet.
 
-    "No table yet" means the PATH_NOT_FOUND error CLASS (with a
-    message-substring fallback for builds predating getCondition), OR
-    UNABLE_TO_INFER_SCHEMA on a directory this helper can POSITIVELY
-    CONFIRM holds no visible data files — the footprint of an
-    interrupted first write that created the directory (maybe a
-    ``_SUCCESS``/``_temporary`` marker) but committed no part files;
-    treating that as missing lets the next batch recover instead of
-    failing the stream forever. The confirmation matters:
-    UNABLE_TO_INFER_SCHEMA also fires when real part files exist but
-    are invisible (renamed with a leading ``_``/``.`` by a botched
-    copy) or unreadable — returning None there would silently turn the
-    sink's incremental merge into an overwrite, so anything the local
-    check cannot confirm empty still RAISES (as does every other read
-    failure: corrupt footer, schema conflict — the defect class fixed
-    in both streaming sinks, which share this helper so their
-    semantics cannot drift)."""
+    "No table yet" means the PATH_NOT_FOUND error class (or that text, on
+    builds predating getCondition), or UNABLE_TO_INFER_SCHEMA on a
+    directory confirmed to hold no visible data files: an interrupted
+    first write, which the next batch may recover from. Anything else
+    RAISES: invisible or unreadable part files, a corrupt footer, a schema
+    conflict. Returning None there would turn a streaming merge (this
+    module's ``merge_days``, ``pipeline.streams``) into an overwrite."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -129,10 +120,8 @@ def replay_from_date(
     """S6 repair path: overwrite the partitions >= from_date that the
     update batch holds, by one dynamic partition overwrite. A partition
     >= from_date that the batch lacks is left as it is, NOT deleted as
-    the reference's DELETE would; ``fact_updates`` must therefore carry
-    every partition >= from_date the caller wants to keep. The stream
-    sink does: it merges all existing partitions >= its batch's first
-    day into the batch before replaying."""
+    the reference's DELETE would; one it holds keeps the batch's rows
+    alone (``merge_days`` first merges each day's existing rows in)."""
     path = os.path.join(root, f"fact_{datatype}")
     updates = _truncate_value(
         fact_updates.filter(F.col("datestamp") >= from_date)
@@ -145,3 +134,21 @@ def replay_from_date(
         .parquet(path)
     )
     return path
+
+
+def merge_days(fact: DataFrame, root: str, datatype: str, days: list[int]) -> str:
+    """Add ``fact``'s counts (on ``days`` only) to one datatype's gold
+    table: the table's rows on ``days`` are read partition-pruned, re-summed
+    with ``fact`` and replayed, so every other day keeps its files. A
+    missing table is a first write; a corrupt one raises."""
+    spark = fact.sparkSession
+    existing = read_parquet_if_exists(spark, os.path.join(root, f"fact_{datatype}"))
+    merged = fact
+    if existing is not None:
+        merged = (
+            existing.filter(F.col("datestamp").isin(*days))
+            .unionByName(fact)
+            .groupBy("eprintid", "datestamp", "value")
+            .agg(F.sum("count").alias("count"))
+        )
+    return replay_from_date(spark, merged, root, datatype, min(days))

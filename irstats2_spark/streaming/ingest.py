@@ -13,20 +13,21 @@ log files with a checkpoint in `irstats2_internal`, line dedup, and a lock
   ≡ S2's exact-line dedup against the recent archive.
 - `foreachBatch` upserts daily aggregates into the gold fact tables via
   dynamic partition overwrite — late events rewrite only their day's
-  partition.
+  partition; a day the batch does not touch keeps its files.
 
-Batch/stream difference, chosen: streamed facts get line dedup ONLY. The
-Robots (P8) and Repeat (P9) filters run in the nightly batch rebuild
-(`etl.pipeline.build_silver_events`), which replaces the streamed days.
-Until then a streamed day counts robot hits and repeat clicks; on a day
-with neither, stream and batch give the same downloads and views
-(tests/test_storage_streaming.py pins both halves).
+Batch/stream differences (tests/test_storage_streaming.py pins each):
+- chosen: streamed facts get line dedup ONLY. The Robots (P8) and Repeat
+  (P9) filters run in the nightly batch rebuild
+  (`etl.pipeline.build_silver_events`), which replaces the streamed days;
+  until then a streamed day counts robot hits and repeat clicks.
+- kept: the watermark drops whole LINES, not just duplicates. A unique
+  line older than one day before the previous micro-batch's newest event
+  is never streamed; the nightly batch counts it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from irstats2_spark.sources.access_log import parse_access_lines, with_event_columns
 
@@ -58,46 +59,20 @@ def start_fact_stream(
 ):
     """Continuously fold the stream into daily downloads/views facts.
 
-    foreachBatch runs the SAME batch processors per micro-batch and merges
-    by dynamic partition overwrite — identical code for batch and stream,
-    the Spark analog of the reference's single nightly ETL path.
+    foreachBatch runs the SAME batch processors per micro-batch: one
+    action collects the days the batch touches (an empty batch ends
+    there), then ``storage.merge_days`` adds each datatype's counts to
+    gold, rewriting those days' partitions only.
     """
     from irstats2_spark.etl import processors as P
-    from irstats2_spark.sources.storage import replay_from_date
+    from irstats2_spark.sources.storage import merge_days
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        days = [r[0] for r in batch_df.select("date_key").dropna().distinct().collect()]
+        if not days:
             return
-        spark = batch_df.sparkSession
-        for datatype, fact in (
-            ("downloads", P.downloads(batch_df)),
-            ("views", P.views(batch_df)),
-        ):
-            min_day = fact.agg(F.min("datestamp")).head()[0]
-            if min_day is None:
-                continue
-            # merge: union with existing partitions >= min_day, re-aggregate.
-            # Missing fact table == first batch; ANY OTHER read failure
-            # (corrupt/partial parquet, transient IO) must propagate — a
-            # swallowed error here would silently drop the merge and
-            # OVERWRITE existing partitions with this batch alone.
-            import os
-
-            from irstats2_spark.sources.storage import read_parquet_if_exists
-
-            existing = read_parquet_if_exists(
-                spark, os.path.join(output_root, f"fact_{datatype}")
-            )
-            if existing is not None:
-                merged = (
-                    existing.filter(F.col("datestamp") >= min_day)
-                    .unionByName(fact)
-                    .groupBy("eprintid", "datestamp", "value")
-                    .agg(F.sum("count").alias("count"))
-                )
-            else:
-                merged = fact  # first batch: nothing to merge
-            replay_from_date(spark, merged, output_root, datatype, min_day)
+        merge_days(P.downloads(batch_df), output_root, "downloads", days)
+        merge_days(P.views(batch_df), output_root, "views", days)
 
     writer = events.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

@@ -260,7 +260,8 @@ def test_countries_processor_locates_by_range(spark):
 
 def test_subject_closure_runs_one_spark_job(spark, tmp_path):
     """F9 over a 4-level chain (plus a 2-cycle, which must still end):
-    one job reads the subject table, whatever the tree depth."""
+    building the closure runs no job; using it, one job reads the
+    subject table, whatever the tree depth."""
     import uuid
 
     from irstats2_spark.etl.sets import subject_closure
@@ -276,12 +277,15 @@ def test_subject_closure_runs_one_spark_job(spark, tmp_path):
     sc.setJobGroup(group, group)
     try:
         closure = subject_closure(subjects)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []  # lazy
+        rows = closure.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert closure.columns == ["subjectid", "ancestor"]
-    assert sorted(tuple(r) for r in closure.collect()) == [
+    assert sorted(tuple(r) for r in rows) == [
         ("a", "a"),
         ("b", "a"), ("b", "b"),
         ("c", "a"), ("c", "b"), ("c", "c"),
@@ -289,6 +293,61 @@ def test_subject_closure_runs_one_spark_job(spark, tmp_path):
         ("x", "x"), ("x", "y"),
         ("y", "x"), ("y", "y"),
     ]
+
+
+def test_build_dimensions_runs_no_job_when_called(spark, tmp_path):
+    """The dimensions are lazy: building them, subject set included,
+    starts no Spark job before the caller uses them."""
+    import uuid
+
+    from irstats2_spark.etl.sets import SetConfig, build_dimensions
+
+    path = str(tmp_path / "subjects")
+    spark.createDataFrame(
+        [("root", None, False, "Root"), ("s1", "root", True, "One")],
+        "subjectid string, parent string, can_post boolean, name string",
+    ).write.parquet(path)
+    subjects = spark.read.parquet(path)
+    eprints = spark.createDataFrame(
+        [(1, ["d1"], ["s1"]), (2, ["d2"], ["s1"])],
+        "eprintid int, divisions array<string>, subjects array<string>",
+    )
+    sets = (
+        SetConfig(field_name="divisions", groupings=("subjects",)),
+        SetConfig(field_name="subjects", type="subject"),
+    )
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        dims = build_dimensions(eprints, sets, subjects=subjects)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    subject_rows = dims["sets"].filter(F.col("set_name") == "subjects").collect()
+    assert sorted((r.set_value, r.eprintid) for r in subject_rows) == [
+        ("s1", 1), ("s1", 2),
+    ]
+
+
+def test_referrer_and_search_terms_compile_without_codegen_fallback(spark, log_dir):
+    """Both URL-parsing facts run as generated code: with the interpreted
+    fallback switched off, a fused aggregate whose generated method
+    outgrows 64 KB fails instead of silently running slower."""
+    from irstats2_spark.etl import processors as P
+
+    silver = build_silver_events(read_access_logs(spark, log_dir + "/*"))
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        referrer = P.referrer(silver, host="myrepo.org").collect()
+        terms = P.search_terms(silver, base_url="myrepo.org").collect()
+    finally:
+        spark.conf.set(key, before)
+    assert {"Google", "Internal (Search)"} <= {r.value for r in referrer}
+    assert {"alpha", "epsilon"} <= {r.value for r in terms}
 
 
 def test_context_single_eprint_live_clamp(store):

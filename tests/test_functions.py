@@ -115,6 +115,26 @@ def test_classify_referrer(spark, ref, expected):
     assert got == expected
 
 
+def test_referrer_labelled_is_exactly_label_not_null(spark):
+    """The referrer fact's row filter keeps a row exactly when the label
+    is not NULL, including OAI-PMH and a local-domain pattern matching an
+    empty hostname."""
+    from irstats2_spark.functions.classify import referrer_label, referrer_labelled
+
+    refs = ["42", "info:oai:repo.org:1", "http://myrepo.org/123", "http://example.org/",
+            "http://Upper.org/", ":///x", "http://", "ftp:/ /x", "%%", "a:b"]
+    for domains in (None, {"Blank": r"^$"}, {"Local": r"\.ac\.uk$"}):
+        df = spark.createDataFrame([(r,) for r in refs], "ref string").select(
+            url_protocol(F.col("ref")).alias("p"),
+            url_hostname(F.col("ref")).alias("h"),
+            url_uri(F.col("ref")).alias("u"),
+        )
+        label = referrer_label(F.col("p"), F.col("h"), F.col("u"), "myrepo.org", domains)
+        keep = referrer_labelled(F.col("p"), F.col("h"), domains)
+        rows = df.select(label.isNotNull().alias("l"), F.coalesce(keep, F.lit(False)).alias("k"))
+        assert all(r.l == r.k for r in rows.collect()), domains
+
+
 # -- F6 normalize_word (SearchTerms.pm:174-198) -----------------------------
 
 @pytest.mark.parametrize(

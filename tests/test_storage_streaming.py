@@ -271,6 +271,110 @@ def test_stream_and_batch_facts_agree_on_a_clean_day(spark, tmp_path):
     assert streamed["downloads"] != batch["downloads"]
 
 
+def _access_line(ts: str, eprintid: int, docid: str = "", ip: str = "10.0.0.1") -> str:
+    return "\t".join(
+        [ts, ip, "Mozilla/5.0 Chrome/1", "",
+         "?fulltext=yes" if docid else "?abstract=yes", str(eprintid), docid]
+    )
+
+
+def _day_lines(day: int, hours, ip: str = "10.0.0.1") -> list[str]:
+    """One download and one abstract view per hour of 2024-01-<day>."""
+    return [
+        _access_line(f"2024-01-{day:02d}T{h:02d}:00:00Z", eprintid, docid, ip)
+        for h in hours
+        for eprintid, docid in ((1, "100"), (2, ""))
+    ]
+
+
+def _ingest(spark, logs, root):
+    from irstats2_spark.streaming.ingest import read_access_stream, start_fact_stream
+
+    q = start_fact_stream(
+        read_access_stream(spark, str(logs)), str(root / "gold"), str(root / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+def _day_counts(spark, root, datatype) -> dict:
+    rows = read_fact(spark, str(root / "gold"), datatype).groupBy("datestamp").agg(
+        F.sum("count").alias("n")
+    )
+    return {r.datestamp: r.n for r in rows.collect()}
+
+
+def test_fact_stream_batch_runs_six_jobs(spark, tmp_path):
+    """A one-day micro-batch after the first: one action collects the
+    days it touches, then per datatype one job reads the table's schema
+    and one writes the merged day (plus the stream's own jobs)."""
+    logs = tmp_path / "current"
+    logs.mkdir()
+    (logs / "d1.log").write_text("\n".join(_day_lines(1, range(8, 12))) + "\n")
+    _ingest(spark, logs, tmp_path)
+    (logs / "d2.log").write_text("\n".join(_day_lines(2, range(8, 12))) + "\n")
+    q = _ingest(spark, logs, tmp_path)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 6
+    assert _day_counts(spark, tmp_path, "downloads") == {20240101: 4, 20240102: 4}
+
+
+def test_fact_stream_rewrites_only_the_days_a_batch_touches(spark, tmp_path):
+    """A batch of day 6 plus late day-4 lines (inside the one-day
+    watermark) rewrites days 4 and 6; day 5 keeps its part files."""
+    logs = tmp_path / "current"
+    logs.mkdir()
+    first = _day_lines(4, range(10, 20)) + _day_lines(5, range(0, 18))
+    (logs / "a.log").write_text("\n".join(first) + "\n")
+    _ingest(spark, logs, tmp_path)
+
+    def day_files(datatype, day):
+        part = tmp_path / "gold" / f"fact_{datatype}" / f"datestamp={day}"
+        return sorted(p.name for p in part.iterdir())
+
+    before = {d: day_files(d, 20240105) for d in ("downloads", "views")}
+    assert all(before.values())
+    # the previous batch's newest event is 2024-01-05T17:00, so the
+    # watermark is 2024-01-04T17:00 and day-4 lines from 20:00 count
+    late = _day_lines(4, range(20, 23), ip="10.0.0.2") + _day_lines(6, range(0, 5))
+    (logs / "b.log").write_text("\n".join(late) + "\n")
+    _ingest(spark, logs, tmp_path)
+    assert {d: day_files(d, 20240105) for d in ("downloads", "views")} == before
+    for datatype in ("downloads", "views"):
+        assert _day_counts(spark, tmp_path, datatype) == {
+            20240104: 13, 20240105: 18, 20240106: 5,
+        }
+
+
+def test_fact_stream_drops_lines_older_than_its_watermark(spark, tmp_path):
+    """Not only duplicates: a unique line older than the watermark (one
+    day before the previous batch's newest event) is never counted by
+    the stream. The nightly batch over the same files counts it."""
+    logs = tmp_path / "current"
+    logs.mkdir()
+    (logs / "a.log").write_text(
+        "\n".join(_day_lines(2, range(8, 12)) + _day_lines(5, range(8, 12))) + "\n"
+    )
+    _ingest(spark, logs, tmp_path)
+    streamed = _day_counts(spark, tmp_path, "downloads")
+    assert streamed == {20240102: 4, 20240105: 4}
+
+    old = [_access_line("2024-01-02T20:00:00Z", 3, "300", ip="10.0.0.3"),
+           _access_line("2024-01-02T21:00:00Z", 4, "400", ip="10.0.0.4")]
+    (logs / "b.log").write_text("\n".join(_day_lines(6, range(8, 12)) + old) + "\n")
+    _ingest(spark, logs, tmp_path)
+    assert _day_counts(spark, tmp_path, "downloads") == {
+        20240102: 4, 20240105: 4, 20240106: 4,
+    }
+
+    late = {(3, 20240102, "downloads", 1), (4, 20240102, "downloads", 1)}
+    assert late <= set(_batch_cells(spark, logs)["downloads"])
+    streamed = read_fact(spark, str(tmp_path / "gold"), "downloads").select(*_CELL)
+    assert not late & {tuple(r) for r in streamed.collect()}
+
+
 def test_find_robots_ip_duplicates_three_probe_levels():
     """find_local_robots_ip_duplicates:32-48: a local prefix is a
     duplicate if the shipped list holds its /16, its /24, or the exact
@@ -297,337 +401,6 @@ def test_find_robots_ip_duplicates_three_probe_levels():
         )
         local = two_level + "123"
         assert find_robots_ip_duplicates([local]) == [(local, two_level)]
-
-
-def test_streaming_lm_quality_matches_batch_scores(spark, tmp_path):
-    """lm_quality_stream: per-row fold over broadcast model maps must be
-    bit-identical to the batch bigram-LM scorer on the same docs."""
-    import json
-
-    from irstats2_spark.pipeline.textstats import lm_nll_scores
-    from irstats2_spark.pipeline.streams import lm_quality_stream
-
-    ref = spark.createDataFrame(
-        [("the cat sat on the mat and the cat ran",)], "text string"
-    )
-    texts = [
-        "the cat sat on the mat",
-        "zx qv jj kk wq pp zz xx yy",
-        "one",
-    ]
-    rows = [
-        {"doc_id": i, "ts": f"2024-01-01T00:0{i}:00Z", "text": t}
-        for i, t in enumerate(texts)
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, ts string, text string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    # uniform unseen-bigram NLL here is ln(V)=ln(7)~1.946; the cut at
-    # 1.7 separates reference-like (~1.42) from all-unseen gibberish
-    out = lm_quality_stream(stream, ref, max_avg_nll=1.7)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lmq_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: (r.n_bigrams, r.nll_micro, r.avg_nll, r.quality_fail)
-        for r in spark.sql(
-            "SELECT doc_id, n_bigrams, nll_micro, avg_nll, quality_fail"
-            " FROM lmq_stream_out"
-        ).collect()
-    }
-    batch_docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    expect = {
-        r.doc_id: (r.n_bigrams, r.nll_micro, r.avg_nll)
-        for r in lm_nll_scores(batch_docs, ref).collect()
-    }
-    assert len(got) == 3
-    for i in range(3):
-        assert got[i][:3] == expect[i], i
-    assert got[0][3] is False        # reference-like: passes
-    assert got[1][3] is True         # gibberish: fails
-    assert got[2][3] is False        # unscorable: passes (cannot judge)
-
-
-def test_streaming_corpus_ingest_accumulates_and_dedups(spark, tmp_path):
-    """start_corpus_stream: two incremental runs — run 2 must skip docs
-    whose hashes run 1 already wrote, dedup within its own batch, gate
-    short docs, and grow corpus + snapshot together."""
-    import json
-
-    from irstats2_spark.pipeline.streams import start_corpus_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out = tmp_path / "corpus_root"
-    ck = tmp_path / "ck"
-
-    def write_batch(name, rows):
-        (src / name).write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-
-    def run():
-        docs = (
-            spark.readStream.schema("doc_id long, ts string, text string")
-            .json(str(src))
-            .withColumn("ts", F.to_timestamp("ts"))
-        )
-        q = start_corpus_stream(docs, str(out), str(ck), min_tokens=3)
-        q.awaitTermination(120)
-
-    long1 = "a genuinely long document body here"
-    long2 = "another long and different body text"
-    write_batch("b1.json", [
-        {"doc_id": 1, "ts": "2024-01-01T00:00:00Z", "text": long1},
-        {"doc_id": 2, "ts": "2024-01-01T00:01:00Z", "text": long1},  # batch dup
-        {"doc_id": 3, "ts": "2024-01-01T00:02:00Z", "text": "too short"},
-    ])
-    run()
-    corpus = spark.read.parquet(str(out / "corpus"))
-    assert sorted(r.doc_id for r in corpus.collect()) == [1]
-
-    write_batch("b2.json", [
-        {"doc_id": 4, "ts": "2024-01-02T00:00:00Z", "text": long1},  # historical dup
-        {"doc_id": 5, "ts": "2024-01-02T00:01:00Z", "text": long2},  # fresh
-    ])
-    run()
-    corpus = spark.read.parquet(str(out / "corpus"))
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 5]
-    hashes = spark.read.parquet(str(out / "seen_hashes"))
-    assert hashes.distinct().count() == 2
-
-
-def test_replicate_stream_matches_batch(spark, tmp_path):
-    """replicate_stream: fractional-epoch upsampling on a live stream
-    must emit exactly the batch operator's (doc_id, copy_idx) multiset —
-    the stream-static rates join + per-row explode is stateless, so the
-    twin is bit-identical, including rates past 1 (every doc at 2.3
-    appears 2 or 3 times in the STREAM output)."""
-    import json
-
-    from irstats2_spark.pipeline.sampling import replicate_by_rates
-    from irstats2_spark.pipeline.streams import replicate_stream
-
-    rows = [
-        {"doc_id": i, "ts": f"2024-01-01T00:00:{i:02d}Z",
-         "source": "small" if i < 10 else "big"}
-        for i in range(30)
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-
-    rates = spark.createDataFrame(
-        [("small", 2.3), ("big", 0.4)], "source string, rate double"
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, ts string, source string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = replicate_stream(stream, rates, "source", "doc_id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("replicate_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.doc_id, r.copy_idx)
-        for r in spark.sql(
-            "SELECT doc_id, copy_idx FROM replicate_stream_out"
-        ).collect()
-    )
-    batch_docs = spark.createDataFrame(
-        [(r["doc_id"], r["source"]) for r in rows], "doc_id long, source string"
-    )
-    want = sorted(
-        (r.doc_id, r.copy_idx)
-        for r in replicate_by_rates(
-            batch_docs, rates, "source", "doc_id"
-        ).collect()
-    )
-    assert got == want
-    # upsampling actually happened in the stream
-    assert len([1 for d, c in got if c >= 1]) >= 10
-
-
-def test_streaming_corpus_ingest_replay_is_idempotent(spark, tmp_path):
-    """Crash-replay safety: foreachBatch is at-least-once, so the sink
-    must be idempotent. Simulate a failure AFTER the corpus write but
-    BEFORE the hash write (the worst interleaving: the replayed batch
-    must not anti-join itself away against its own partial output, nor
-    append a second copy): delete the checkpoint commit marker + the
-    hash dir and restart — the replayed batch overwrites its own
-    ``batch_id=0`` dirs and the corpus still holds exactly one copy.
-    (Replay is simulated with a FRESH checkpoint over the same source
-    files — identical offsets => identical batch 0 — because Spark 4's
-    checkpoint concurrency guard refuses a commit log mutated behind
-    its back.)"""
-    import json
-    import shutil
-
-    from irstats2_spark.pipeline.streams import start_corpus_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out = tmp_path / "corpus_root"
-    ck = tmp_path / "ck"
-    ck2 = tmp_path / "ck_replay"
-
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"doc_id": 1, "ts": "2024-01-01T00:00:00Z",
-                 "text": "a genuinely long document body here"},
-                {"doc_id": 2, "ts": "2024-01-01T00:01:00Z",
-                 "text": "another long and different body text"},
-            ]
-        )
-        + "\n"
-    )
-
-    def run(checkpoint):
-        docs = (
-            spark.readStream.schema("doc_id long, ts string, text string")
-            .json(str(src))
-            .withColumn("ts", F.to_timestamp("ts"))
-        )
-        q = start_corpus_stream(docs, str(out), str(checkpoint), min_tokens=3)
-        q.awaitTermination(120)
-
-    run(ck)
-    corpus = spark.read.parquet(str(out / "corpus"))
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2]
-
-    # simulate the partial failure: batch 0 wrote corpus/ but "crashed"
-    # before the hash write — then batch 0 replays (fresh checkpoint,
-    # same source files => same rows, same batch_id 0)
-    shutil.rmtree(out / "seen_hashes")
-    run(ck2)
-    corpus = spark.read.parquet(str(out / "corpus"))
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2]  # no dups
-    hashes = spark.read.parquet(str(out / "seen_hashes"))
-    assert hashes.select("text_hash").distinct().count() == 2
-
-    # and a replay where BOTH writes landed before the crash (worst
-    # case for self-anti-join): everything already on disk, replay again
-    run(tmp_path / "ck_replay2")
-    corpus = spark.read.parquet(str(out / "corpus"))
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2]
-
-
-def test_write_corpus_shards_roundtrip_verifies(spark, tmp_path):
-    """write_corpus_shards: reading the shard files back and recomputing
-    the manifest must reproduce the written manifest exactly (the
-    consumer's download-verification protocol), and every doc lands in
-    its manifest shard."""
-    from irstats2_spark.pipeline.curate import shard_manifest
-    from irstats2_spark.pipeline.layout import write_corpus_shards
-
-    docs = spark.createDataFrame(
-        [(i, f"document body number {i}") for i in range(60)],
-        "doc_id long, text string",
-    )
-    written = {
-        r.shard: (r.n_docs, r.n_tokens, r.content_checksum)
-        for r in write_corpus_shards(docs, str(tmp_path), n_shards=4).collect()
-    }
-    back = spark.read.parquet(str(tmp_path / "shards"))
-    assert back.count() == 60
-    recomputed = {
-        r.shard: (r.n_docs, r.n_tokens, r.content_checksum)
-        for r in shard_manifest(
-            back.drop("shard"), n_shards=4
-        ).collect()
-    }
-    assert recomputed == written
-    # stored partition column agrees with the manifest assignment
-    from irstats2_spark.pipeline.sampling import hash_bucket
-
-    mismatch = back.filter(
-        F.col("shard") != hash_bucket(F.col("doc_id"), 4, "shard:").cast("int")
-    )
-    assert mismatch.count() == 0
-
-
-def test_simhash_doc_stream_matches_batch_incremental(spark, tmp_path):
-    """simhash_doc_stream: cross pairs flagged on the stream must equal
-    the batch incremental operator's (old, new, hamming) set — both run
-    the same signature map + banded join + exact Hamming verify, the
-    stream only adding the watermark pair-dedup."""
-    import json
-
-    from irstats2_spark.pipeline.dedup import (
-        simhash64,
-        simhash_hamming_incremental,
-    )
-    from irstats2_spark.pipeline.streams import simhash_doc_stream
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away to the hills")
-    old_rows = [
-        (1, base),
-        (2, base + " tonight"),
-        (3, "completely different text about gardening soil and seeds"),
-    ]
-    new_rows = [
-        {"doc_id": 10, "ts": "2024-01-01T00:00:00Z", "text": base},
-        {"doc_id": 11, "ts": "2024-01-01T00:01:00Z",
-         "text": base + " tonight maybe"},
-        {"doc_id": 12, "ts": "2024-01-01T00:02:00Z",
-         "text": "unrelated quarterly finance report with numbers"},
-    ]
-    old = spark.createDataFrame(old_rows, "doc_id long, text string")
-    old_sigs = simhash64(old)
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in new_rows) + "\n"
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, ts string, text string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = simhash_doc_stream(stream, old_sigs)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("simhash_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.old_id, r.new_id): r.hamming
-        for r in spark.sql(
-            "SELECT old_id, new_id, hamming FROM simhash_stream_out"
-        ).collect()
-    }
-    new_batch = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in new_rows], "doc_id long, text string"
-    )
-    want = {
-        (r.old_id, r.new_id): r.hamming
-        for r in simhash_hamming_incremental(new_batch, old_sigs).collect()
-    }
-    assert got == want
-    assert (1, 10) in got and got[(1, 10)] == 0  # exact dup crosses over
 
 
 def test_clean_chunks_stream_matches_batch_rewrite(spark, tmp_path):
