@@ -4,7 +4,7 @@ data-processing capabilities of EPrints IRStats2 (reference: eprints/irstats2).
 Architecture (SURVEY.md §7): medallion layout over Parquet —
 bronze (raw access events), silver (filtered events + conformed dimensions),
 gold (daily-grain fact tables) — plus a Context-driven query layer that
-compiles the reference's two SQL shapes into DataFrame plans, and a set of
+compiles the reference's SQL shapes into parameterized Spark SQL, and a set of
 large-scale training-data-pipeline operators (dedup, similarity search,
 text analysis, multimodal plumbing) beyond the reference's own surface.
 

@@ -1,8 +1,8 @@
 """The Context — the reference's entire query "language" (SURVEY §1.4;
 Context.pm:14-25 + per-view options Utils.pm:52-110).
 
-A Context plus the fields a view selects compiles to exactly one of two
-DataFrame shapes (see plans/builder.py). Validation mirrors Context.pm:438-549:
+A Context plus the fields a view selects compiles to one parameterized
+SQL statement of one of the reference's shapes (see plans/builder.py). Validation mirrors Context.pm:438-549:
 param sanitization, date normalization, registry checks.
 """
 
@@ -20,8 +20,11 @@ VALID_FACT_FIELDS = ("eprintid", "datestamp", "value", "count")
 
 
 def sanitize_param(v: str | None) -> str | None:
-    """P12: character strip (not SQL-injection defense — the engine never
-    string-builds SQL — but kept for behavioral parity)."""
+    """P12: character strip, kept for behavioral parity. It is not the
+    SQL-injection defense: ``plans/builder.compile_context`` never puts a
+    request value into its SQL text, it binds every one through
+    ``spark.sql(text, args=...)``, so a value that still carries SQL
+    after this strip is only compared as a value."""
     if v is None:
         return None
     return _SANITIZE_RE.sub("", str(v))

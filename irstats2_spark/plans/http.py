@@ -20,7 +20,7 @@ from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
-from irstats2_spark.plans.builder import StatsStore, compile_context, sum_all
+from irstats2_spark.plans.builder import StatsStore, compile_context
 from irstats2_spark.plans.context import Context
 from irstats2_spark.sources.export import records
 
@@ -189,7 +189,7 @@ def _render_view(
     if view == "Spark":
         return sparkline_rows(store, ctx, today=today)
     if view == "Counter":
-        df = sum_all(compile_context(store, ctx, today=today))
+        df = compile_context(store, ctx, today=today, total=True)
     elif view == "GeoChart":
         df = compile_context(store, replace(ctx, grouping="value"), today=today)
     else:  # Table, PieChart
@@ -307,32 +307,22 @@ def handle_fp_stats(
 ) -> tuple[int, str, str]:
     """The /cgi/stats/fp_stats front-page counters (fp_stats:17-43):
     full-text document count, all-time downloads, and last-year
-    downloads — each thousands-separated (F12, Utils.pm:340-369). Two
-    Spark jobs: the document count, and one collect of the all-time daily
-    downloads series, summed in Python for both totals.
+    downloads — each thousands-separated (F12, Utils.pm:340-369). One
+    Spark job: one statement collects the all-time daily downloads
+    series, summed in Python for both totals, and the document count as
+    one more row with a NULL datestamp.
 
     The documents counted are the rows of ``store.eprints`` with
     ``full_text_status`` in (public, restricted) when the column exists,
     else every row (the synthetic testdata carries no such column)."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
-    store = store.pinned()
-    arch = store.eprints
-    if arch is not None:
-        if "full_text_status" in arch.columns:
-            arch = arch.filter(
-                F.col("full_text_status").isin("public", "restricted")
-            )
-        n_docs = arch.count()
-    else:
-        n_docs = 0
-
-    days = compile_context(
-        store, Context(datatype="downloads", range="_ALL_"), ("datestamp",),
-        today=today,
+    rows = compile_context(
+        store.pinned(), Context(datatype="downloads", range="_ALL_"), ("datestamp",),
+        today=today, documents=True,
     ).collect()
+    days = [r for r in rows if r["datestamp"] is not None]
+    n_docs = sum(r["count"] for r in rows if r["datestamp"] is None)
     lo, hi = Context(range="1y").resolved_dates(today=today)
     dl_all = sum(r["count"] for r in days)
     dl_year = sum(r["count"] for r in days if lo <= r["datestamp"] <= hi)

@@ -130,20 +130,20 @@ def top_table(
     grouping join (top authors/divisions/...). ``data_min`` drops groups
     with a smaller count (Table.pm:134-135); the rest are ranked by count,
     highest first, ties by key, and cut to ``limit`` unless it is 'all'
-    (Data.pm:74-78, O1-O3), which plans as TakeOrderedAndProject.
-    ``limit`` and ``data_min`` may come in request form ('10', 'all')."""
+    (Data.pm:74-78, O1-O3), which plans as TakeOrderedAndProject, all in
+    the one compiled statement. ``limit`` and ``data_min`` may come in
+    request form ('10', 'all')."""
     if top == "eprint":
         ctx = replace(ctx, grouping="eprint")
     elif top == ctx.datatype:
         ctx = replace(ctx, grouping="value")
     else:
         ctx = replace(ctx, grouping=top)
-    out = compile_context(store, ctx, today=today)
-    if data_min is not None:
-        out = out.filter(F.col("count") >= int(data_min))
-    keys = [F.col(c).asc() for c in out.columns if c != "count"]
-    out = out.orderBy(F.col("count").desc(), *keys)
-    return out if limit == "all" else out.limit(int(limit))
+    return compile_context(
+        store, ctx, today=today, ranked=True,
+        limit=None if limit == "all" else int(limit),
+        data_min=None if data_min is None else int(data_min),
+    )
 
 
 def compare_years(
@@ -177,12 +177,9 @@ def key_figures(
 ) -> dict[str, int]:
     """View::KeyFigures (KeyFigures.pm:58-99,141-167): named grand totals
     plus ratio metrics round(100*a/b) with 0-guard."""
-    from irstats2_spark.plans.builder import sum_all
-
     values: dict[str, int] = {}
     for name, ctx in metrics.items():
-        row = sum_all(compile_context(store, ctx, today=today)).head()
-        values[name] = int(row["count"] or 0)
+        values[name] = compile_context(store, ctx, today=today, total=True).head()["count"]
     for name, (num, den) in (ratios or {}).items():
         d = values.get(den, 0)
         values[name] = int(round(100.0 * values.get(num, 0) / d)) if d else 0

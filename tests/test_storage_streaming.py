@@ -403,253 +403,6 @@ def test_find_robots_ip_duplicates_three_probe_levels():
         assert find_robots_ip_duplicates([local]) == [(local, two_level)]
 
 
-def test_clean_chunks_stream_matches_batch_rewrite(spark, tmp_path):
-    """clean_chunks_stream: stripping a known boilerplate set from a live
-    stream must equal (a) the row-local batch form on the same rows and
-    (b) the full mine-and-rewrite batch operator when the listed set IS
-    the corpus' own mined set — the mine-nightly/clean-on-arrival
-    contract. Also pins the zero-state claim: the rewrite runs append-
-    mode with no watermark."""
-    import json
-
-    from irstats2_spark.pipeline.textstats import (
-        corpus_frequent_chunks,
-        remove_corpus_frequent_chunks,
-        remove_listed_chunks,
-    )
-    from irstats2_spark.pipeline.streams import clean_chunks_stream
-
-    boiler = " ".join(f"b{i}" for i in range(4))
-    rows = [
-        {"doc_id": 1, "text": f"{boiler} one unique tail here"},
-        {"doc_id": 2, "text": f"{boiler} another different tail text"},
-        {"doc_id": 3, "text": f"{boiler} {boiler}"},
-        {"doc_id": 4, "text": "completely fresh standalone document body"},
-        {"doc_id": 5, "text": "   "},
-    ]
-    batch_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in rows], "doc_id int, text string"
-    )
-    hashes = [
-        r.chunk_hash
-        for r in corpus_frequent_chunks(batch_docs, chunk_tokens=4, min_docs=2)
-        .select("chunk_hash")
-        .collect()
-    ]
-    assert hashes  # the boilerplate chunk was mined
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    stream = spark.readStream.schema("doc_id int, text string").json(str(src))
-    out = clean_chunks_stream(stream, hashes, chunk_tokens=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("clean_chunks_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        map(tuple, spark.sql("SELECT * FROM clean_chunks_out").collect())
-    )
-    # (a) == row-local batch form
-    want = sorted(
-        map(tuple, remove_listed_chunks(batch_docs, hashes, chunk_tokens=4).collect())
-    )
-    assert got == want
-    # (b) == the full mine-and-rewrite operator on the same corpus
-    full = sorted(
-        map(
-            tuple,
-            remove_corpus_frequent_chunks(
-                batch_docs, chunk_tokens=4, min_docs=2
-            ).collect(),
-        )
-    )
-    assert got == full
-    # the stream really rewrote: doc 3 went all-boilerplate -> empty
-    by_id = {t[0]: t for t in got}
-    assert by_id[3][1:] == (2, 0, "")
-    assert by_id[5][1:] == (0, 0, "")
-
-
-def test_winnow_doc_stream_matches_batch_incremental(spark, tmp_path):
-    """winnow_doc_stream: MOSS matching of a live stream against the
-    fingerprint snapshot must emit exactly the batch incremental
-    operator's (old_id, new_id, n_shared) set — the row-local
-    array_intersect verify equals the batch groupBy count because both
-    sides are distinct fp sets. Also pins the winnowing guarantee
-    end-to-end in the stream: the shared 7-token run is flagged even
-    though it sits at different offsets."""
-    import json
-
-    from irstats2_spark.pipeline.dedup import winnow_incremental
-    from irstats2_spark.pipeline.textstats import winnow_fingerprints
-    from irstats2_spark.pipeline.streams import winnow_doc_stream
-
-    run = "s1 s2 s3 s4 s5 s6 s7"
-    old_rows = [
-        (1, f"u1 u2 u3 u4 u5 {run} u6 u7"),
-        (2, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
-    ]
-    new_rows = [
-        {"doc_id": 10, "ts": "2024-01-01T00:00:01Z",
-         "text": f"v1 {run} v2 v3 v4 v5"},  # shares the run with doc 1
-        {"doc_id": 11, "ts": "2024-01-01T00:00:02Z",
-         "text": "x1 x2 x3 x4 x5 x6 x7 x8"},  # shares nothing
-    ]
-    old_docs = spark.createDataFrame(old_rows, "doc_id int, text string")
-    snapshot = winnow_fingerprints(old_docs, k=4, window=4)
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in new_rows) + "\n"
-    )
-    stream = (
-        spark.readStream.schema("doc_id int, ts string, text string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = winnow_doc_stream(stream, snapshot, k=4, window=4, min_shared=1)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("winnow_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.old_id, r.new_id, r.n_shared)
-        for r in spark.sql(
-            "SELECT old_id, new_id, n_shared FROM winnow_stream_out"
-        ).collect()
-    )
-    new_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in new_rows], "doc_id int, text string"
-    )
-    want = sorted(
-        (r.old_id, r.new_id, r.n_shared)
-        for r in winnow_incremental(
-            new_docs, snapshot, k=4, window=4, min_shared=1
-        ).collect()
-    )
-    assert got == want
-    assert [(o, n) for o, n, _ in got] == [(1, 10)]
-
-
-def test_quality_gate_stream_matches_batch(spark, tmp_path):
-    """quality_gate_stream: the rule gate on a live stream emits exactly
-    the batch operator's per-doc verdict rows (stateless composite
-    expression — the twin IS the batch path), including a failing and a
-    passing doc."""
-    import json
-
-    from irstats2_spark.pipeline.textstats import gopher_quality_gate
-    from irstats2_spark.pipeline.streams import quality_gate_stream
-
-    rows = [
-        {"doc_id": 1, "text": "the and of to in is a " * 10},  # passes floor
-        {"doc_id": 2, "text": "x"},  # too short
-        {"doc_id": 3, "text": "the quick brown fox jumps over lazy dog " * 8},
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    stream = spark.readStream.schema("doc_id int, text string").json(str(src))
-    out = quality_gate_stream(stream, min_tokens=5)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("quality_gate_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.sql("SELECT * FROM quality_gate_out").collect()))
-    batch_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in rows], "doc_id int, text string"
-    )
-    want = sorted(
-        map(tuple, gopher_quality_gate(batch_docs, min_tokens=5).collect())
-    )
-    assert got == want
-    verdicts = {t[0]: t for t in got}
-    assert len(verdicts) == 3 and not any(v is None for v in verdicts[2])
-
-
-def test_edit_distance_doc_stream_matches_batch_incremental(spark, tmp_path):
-    """edit_distance_doc_stream: flagged cross pairs (with distances)
-    must equal edit_distance_incremental's output — same winnowing candidates,
-    same old-text hydration, same integer-exact norm cut; the stream
-    only adds the watermark pair-dedup."""
-    import json
-
-    from irstats2_spark.pipeline.dedup import edit_distance_incremental
-    from irstats2_spark.pipeline.textstats import winnow_fingerprints
-    from irstats2_spark.pipeline.streams import edit_distance_doc_stream
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away to the hills")
-    old_rows = [
-        (1, base),
-        (2, base + " tonight"),
-        (3, "completely different text about gardening soil and seeds"),
-    ]
-    new_rows = [
-        {"doc_id": 10, "ts": "2024-01-01T00:00:00Z", "text": base},
-        {"doc_id": 11, "ts": "2024-01-01T00:01:00Z",
-         "text": base + " tonight maybe"},
-        {"doc_id": 12, "ts": "2024-01-01T00:02:00Z",
-         "text": "unrelated quarterly finance report with numbers"},
-    ]
-    old = spark.createDataFrame(old_rows, "doc_id long, text string")
-    old_fps = winnow_fingerprints(old, k=4, window=4)
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in new_rows) + "\n"
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, ts string, text string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = edit_distance_doc_stream(stream, old_fps, old)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("editdist_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ck_ed"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.old_id, r.new_id): (r.n_shared, r.edit_distance, r.edit_norm)
-        for r in spark.sql(
-            "SELECT old_id, new_id, n_shared, edit_distance, edit_norm "
-            "FROM editdist_stream_out"
-        ).collect()
-    }
-    new_batch = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in new_rows],
-        "doc_id long, text string",
-    )
-    want = {
-        (r.old_id, r.new_id): (r.n_shared, r.edit_distance, r.edit_norm)
-        for r in edit_distance_incremental(
-            new_batch, old_fps, old
-        ).collect()
-    }
-    assert got == want
-    assert (1, 10) in got and got[(1, 10)][1] == 0  # exact copy
-    assert (3, 12) not in got
-
-
 def test_fact_stream_corrupt_existing_table_raises(spark, tmp_path):
     """A corrupt/unreadable EXISTING fact table must fail the stream, not
     be silently treated as "first batch" — the old catch-all would have
@@ -692,151 +445,3 @@ def test_fact_stream_corrupt_existing_table_raises(spark, tmp_path):
         q.awaitTermination(120)
     # the junk file must be untouched — no partial overwrite happened
     assert (fact_dir / "part-00000.parquet").read_bytes() == b"this is not parquet"
-
-
-def test_streaming_substring_match_probes_suffix_snapshot(spark, tmp_path):
-    """substring_match_stream: the streaming twin of the suffix-array
-    family — stream docs sharing an exact >= min_len-token run with the
-    stored suffix_windows snapshot are flagged; clean docs are not; and
-    n_shared_windows equals the batch formula (distinct shared
-    min_len-windows) computed over the same data."""
-    import json
-
-    from irstats2_spark.pipeline.suffix import suffix_windows
-    from irstats2_spark.pipeline.streams import substring_match_stream
-
-    passage = "w1 w2 w3 w4 w5 w6 w7"  # 7 tokens; min_len=5 -> 3 windows
-    old_docs = spark.createDataFrame(
-        [
-            (10, f"old intro {passage} old tail"),
-            (11, "historical corpus text with nothing shared at all"),
-        ],
-        "doc_id long, text string",
-    )
-    snap = suffix_windows(old_docs, max_span=12)
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    rows = [
-        # contains the full passage at a different offset
-        {"doc_id": 1, "ts": "2024-01-01T00:00:00Z",
-         "text": f"fresh lead {passage}"},
-        # clean
-        {"doc_id": 2, "ts": "2024-01-01T00:01:00Z",
-         "text": "a totally unrelated new document streaming through"},
-        # shares only the first 5 tokens of the passage (1 window)
-        {"doc_id": 3, "ts": "2024-01-01T00:02:00Z",
-         "text": "x y w1 w2 w3 w4 w5 z"},
-    ]
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-
-    docs = (
-        spark.readStream.schema("doc_id long, ts string, text string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = substring_match_stream(docs, snap, min_len=5, watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("substring_match_out")
-        .option("checkpointLocation", str(tmp_path / "ck_ssm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.old_id, r.new_id): r.n_shared_windows
-        for r in spark.sql("SELECT * FROM substring_match_out").collect()
-    }
-    # passage has 3 distinct 5-token windows; doc 3 shares exactly 1
-    assert got == {(10, 1): 3, (10, 3): 1}, got
-
-    # the misconfiguration guard: probing above the snapshot's build
-    # span would silently flag nothing — assert instead
-    with pytest.raises(AssertionError, match="build span"):
-        substring_match_stream(docs, snap, min_len=13, snapshot_span=12)
-
-
-def test_remove_spans_stream_matches_batch_incremental(spark, tmp_path):
-    """remove_spans_stream: docs cleaned on arrival against the stored
-    gram snapshot must match the nightly batch incremental on the same
-    data (the stream scopes to snapshot membership, so the pin uses a
-    batch with no within-batch duplicates); the min_len stamp guard
-    raises on mismatch."""
-    import json
-
-    from irstats2_spark.pipeline.suffix import (
-        remove_repeated_spans_incremental,
-        write_gram_snapshot,
-    )
-    from irstats2_spark.pipeline.streams import remove_spans_stream
-
-    passage = "p1 p2 p3 p4 p5 p6 p7"
-    old_docs = spark.createDataFrame(
-        [
-            (10, f"old intro {passage} old tail"),
-            (11, "historical corpus text with nothing shared at all"),
-        ],
-        "doc_id long, text string",
-    )
-    snap_path = str(tmp_path / "gram_snap")
-    write_gram_snapshot(old_docs, snap_path, min_len=5)
-    snap = spark.read.parquet(snap_path)
-
-    rows = [
-        {"doc_id": 1, "ts": "2024-01-01T00:00:00Z",
-         "text": f"fresh lead {passage} fresh tail"},
-        {"doc_id": 2, "ts": "2024-01-01T00:01:00Z",
-         "text": "a totally unrelated new document streaming through"},
-        {"doc_id": 3, "ts": "2024-01-01T00:02:00Z",
-         "text": "x y p1 p2 p3 p4 p5 z"},
-        {"doc_id": 4, "ts": "2024-01-01T00:03:00Z", "text": "tiny"},
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-
-    stream = (
-        spark.readStream.schema("doc_id long, ts string, text string")
-        .json(str(src))
-    )
-    out = remove_spans_stream(stream, snap, min_len=5)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("remove_spans_out")
-        .option("checkpointLocation", str(tmp_path / "ck_rss"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: (r.n_tokens, r.removed_tokens, r.text_clean)
-        for r in spark.sql("SELECT * FROM remove_spans_out").collect()
-    }
-    batch = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in rows], "doc_id long, text string"
-    )
-    want = {
-        r.doc_id: (r.n_tokens, r.removed_tokens, r.text_clean)
-        for r in remove_repeated_spans_incremental(
-            batch, snap, min_len=5
-        ).collect()
-    }
-    assert got == want, (got, want)
-    # the streamed copy of the shared passage is gone, prose survives
-    assert got[1] == (11, 7, "fresh lead fresh tail")
-    assert got[2][1] == 0 and got[4] == (1, 0, "tiny")
-
-    with pytest.raises(ValueError, match="min_len=5"):
-        remove_spans_stream(stream, snap, min_len=6)
-
-    # the smallness contract is a guard, not prose (r9 verdict #5): a
-    # snapshot past max_snapshot_grams raises toward the foreachBatch
-    # incremental path instead of silently building an over-budget
-    # broadcast row; None lifts it explicitly
-    with pytest.raises(ValueError, match="max_snapshot_grams=1"):
-        remove_spans_stream(stream, snap, min_len=5, max_snapshot_grams=1)
-    lifted = remove_spans_stream(
-        stream, snap, min_len=5, max_snapshot_grams=None
-    )
-    assert lifted.isStreaming

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 import re
+from dataclasses import replace
 
 import pytest
 
@@ -826,10 +827,10 @@ def test_pinned_gold_too_large_to_pin_keeps_the_parquet_plan(spark, gold_root, m
     assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(eprintid,3\)", plan), plan
 
 
-def test_fp_stats_runs_two_jobs_over_a_pinned_store(spark, gold_root):
-    """fp_stats counts the documents and collects the all-time day series
-    once; both download totals are summed from it in Python, and the
-    body equals the two separate grand totals."""
+def test_fp_stats_runs_one_job_over_a_pinned_store(spark, gold_root):
+    """fp_stats collects the all-time day series and the document count
+    in one statement; both download totals are summed from it in Python,
+    and the body equals the two separate grand totals."""
     import json
 
     from irstats2_spark.plans.builder import compile_context, sum_all
@@ -840,7 +841,7 @@ def test_fp_stats_runs_two_jobs_over_a_pinned_store(spark, gold_root):
     out = []
     assert _jobs_in_group(
         spark, lambda: out.append(handle_fp_stats(spark, store, today=today))
-    ) == 2
+    ) == 1
     status, ctype, body = out[0]
 
     def total(range_):
@@ -892,3 +893,100 @@ def test_pinned_snapshot_keeps_its_rows_and_a_reopened_store_sees_new_files(spar
     )
     assert total(old) == before
     assert total(_open_gold(spark, root)) == before + 1000
+
+
+# ---------------------------------------------------------------------------
+# One parameterized statement per request: binding, views, serving session
+# ---------------------------------------------------------------------------
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize("value", ["x) OR (1", 'a" OR "b', "b OR 1 --"])
+def test_request_values_are_bound_never_spliced(spark, gold_root, value):
+    """A set_value, datafilter or grouping that still carries SQL after
+    ``sanitize_param`` is compared as a value: each shape answers it with
+    the same empty result as a plain unknown value."""
+    from irstats2_spark.plans.builder import compile_context
+    from irstats2_spark.plans.context import sanitize_param
+
+    assert sanitize_param(value) == value
+    store = _open_gold(spark, gold_root).pinned()
+
+    def answer(ctx):
+        rows = compile_context(store, ctx, ("datestamp",), today=TODAY).collect()
+        total = compile_context(store, ctx, today=TODAY, total=True).collect()
+        return rows, total
+
+    eprint = Context(set_name="eprint", set_value="3", range="_ALL_")
+    member = Context(set_name="divisions", set_value="div1", range="_ALL_")
+    grouping = replace(member, grouping="authors")
+    for ctx, key in [
+        (eprint, "datafilter"),
+        (member, "set_value"),
+        (member, "datafilter"),
+        (replace(member, set_value=None), "set_name"),
+        (grouping, "grouping"),
+        (grouping, "set_value"),
+    ]:
+        assert answer(ctx)[0], (ctx, "the known value has rows")
+        unknown = answer(replace(ctx, **{key: "nope"}))
+        assert unknown[0] == [] and unknown[1][0]["count"] == 0
+        assert answer(replace(ctx, **{key: value})) == unknown, (ctx, key)
+
+
+def test_compiling_registers_no_view_and_runs_no_job(spark, gold_root):
+    """A pinned snapshot registers its views once, when it is pinned;
+    compiling every shape, twice, registers no new view and starts no
+    Spark job."""
+    from irstats2_spark.plans.builder import compile_context
+
+    store = _open_gold(spark, gold_root).pinned()
+    views = _temp_views(spark)
+    assert {n.strip("`") for n in store.views().names.values()} <= views
+    assert _jobs_in_group(
+        spark,
+        lambda: [compile_context(store, c, ("datestamp",), today=TODAY)
+                 for c in _SHAPES * 2],
+    ) == 0
+    assert _temp_views(spark) == views
+
+
+def test_views_are_dropped_with_their_store(spark, gold_root):
+    """A store's views go when the store is garbage-collected, so the
+    catalog keeps no snapshot's checkpoint blocks alive after it closes;
+    a statement compiled before then still runs."""
+    import gc
+
+    from irstats2_spark.plans.builder import compile_context
+
+    store = _open_gold(spark, gold_root)
+    pinned = store.pinned()
+    df = compile_context(store, _SHAPES[0], ("datestamp",), today=TODAY)
+    names = {
+        n.strip("`") for s in (store, pinned) for n in s.views().names.values()
+    }
+    assert len(names) == 8 and names <= _temp_views(spark)
+    del store, pinned
+    gc.collect()
+    assert not names & _temp_views(spark)
+    assert df.collect()
+
+
+def test_serving_leaves_the_nightly_session_conf_as_it_was(spark, gold_root):
+    """Serving a store's requests leaves the SQL conf of the session the
+    store was read in as it was."""
+    from irstats2_spark.plans.http import handle_fp_stats, handle_get
+
+    before = spark.conf.getAll
+    store = _open_gold(spark, gold_root)
+    for view in ("Counter", "Graph", "Table"):
+        assert handle_get(
+            spark, store, "/cgi/stats/report/divisions/div1", {"view": view},
+            today=TODAY,
+        )[0] == 200
+    assert handle_fp_stats(spark, store, today=TODAY)[0] == 200
+    assert spark.conf.getAll == before
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
