@@ -1,7 +1,8 @@
 """Search-term extraction + word normalization (SURVEY §2.8 F6, F14).
 
 Behavior of Processor/Access/SearchTerms.pm:14-198, as DataFrame column
-expressions (explode + regexp chains — no Python in the hot path):
+expressions (explode + regexp chains — no Python in the hot path), used
+by the one search-terms processor, ``etl.processors.search_terms``:
 
 - downloads only; referrer percent-decoded first;
 - internal search (host == base_url or localhost, uri matching
@@ -96,37 +97,3 @@ def extract_search_terms(
         .filter(F.col("word").isNotNull())
         .drop("__q", "__raw", "__host", "__uri")
     )
-
-
-def search_term_counts(
-    df: DataFrame,
-    referrer_col: str = "referring_entity_id",
-    base_url: str | None = None,
-    stopwords: list[str] | None = None,
-) -> DataFrame:
-    """Search-term frequency table: (word, count) over all events.
-
-    Heavy-hitter plan: referrers repeat (the same search-result URL is
-    clicked many times), so aggregate to DISTINCT referrer + count first
-    — a map-side-combining groupBy whose shuffle carries one row per
-    distinct referrer — and run the regex cascade of
-    ``extract_search_terms`` over the distinct set only. Word counts are
-    then the referrer counts summed per exploded word. The per-event
-    regex work drops by the referrer repetition factor; when referrers
-    are mostly unique the plan degrades to the naive one plus one
-    map-side combine, never worse by more than that.
-
-    The cache() on the distinct-referrer set is a codegen fusion fence,
-    not a reuse optimization: fused into one whole-stage region, the
-    referrer aggregate + url-parse + term cascade generate a
-    hashAgg_doAggregateWithKeys method janino cannot compile
-    (InternalCompilerException), and Spark then re-attempts the compile
-    and falls back to interpreted execution on EVERY task batch (~25x
-    slower here). The InMemoryRelation splits the region into two
-    compilable spans; the cached set is the heavy-hitter output —
-    O(distinct referrers), the small end of the plan by design."""
-    ref_counts = (
-        df.groupBy(F.col(referrer_col)).agg(F.count(F.lit(1)).alias("__n")).cache()
-    )
-    words = extract_search_terms(ref_counts, referrer_col, base_url, stopwords)
-    return words.groupBy("word").agg(F.sum("__n").alias("count"))

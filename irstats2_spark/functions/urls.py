@@ -55,66 +55,6 @@ def get_param(uri: Column, param: str) -> Column:
     return F.when(uri.rlike(pat), F.regexp_extract(uri, pat, 1))
 
 
-# Tracking parameters every web-corpus canonicalizer strips (anchored:
-# the whole param name must match, values irrelevant).
-_TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid)(=|$)"
-
-
-def canonicalize_url(url: Column) -> Column:
-    """Canonical URL form for web-corpus dedup (beyond the reference's
-    parser): two page fetches that differ only in scheme/host case,
-    default port, fragment, tracking parameters, query-parameter order,
-    or trailing slashes are the SAME document, and URL-keyed dedup must
-    see one key for them.
-
-    Rules (each engine-portable — the DuckDB oracle mirrors all of them):
-    lowercase scheme (default http when absent) and host; drop the
-    fragment; strip :80/:443 when they are the scheme default; trim
-    trailing slashes off the path ('' -> '/'); drop utm_*/fbclid/gclid/
-    msclkid params; sort surviving params byte-wise and rejoin.
-
-    Pure string/array expressions — fuses into the scan, so
-    canonicalization is free relative to the dedup's own shuffle.
-    """
-    u = F.regexp_replace(F.trim(url), r"#.*$", "")
-    scheme_raw = F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)
-    scheme = F.when(scheme_raw == "", F.lit("http")).otherwise(F.lower(scheme_raw))
-    rest = F.when(scheme_raw == "", u).otherwise(
-        F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    )
-    hostport = F.lower(F.regexp_extract(rest, r"^([^/?]*)", 1))
-    host = (
-        F.when(
-            (scheme == "http") & hostport.endswith(":80"),
-            F.regexp_replace(hostport, ":80$", ""),
-        )
-        .when(
-            (scheme == "https") & hostport.endswith(":443"),
-            F.regexp_replace(hostport, ":443$", ""),
-        )
-        .otherwise(hostport)
-    )
-    tail = F.substr(rest, F.length(hostport) + 1)
-    path = F.regexp_extract(tail, r"^([^?]*)", 1)
-    query = F.when(
-        F.length(tail) > F.length(path), F.substr(tail, F.length(path) + 2)
-    ).otherwise(F.lit(""))
-    path_c = F.regexp_replace(path, r"/+$", "")
-    path_c = F.when(path_c == "", F.lit("/")).otherwise(path_c)
-    params = F.filter(
-        F.split(query, "&"),
-        lambda p: (F.length(p) > 0) & ~p.rlike(_TRACKING_PARAM_RE),
-    )
-    qs = F.array_join(F.sort_array(params), "&")
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        path_c,
-        F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)),
-    )
-
-
 def percent_decode(col: Column) -> Column:
     """F2: %XX unescape (Referrer.pm:49-50). ``url_decode`` also translates
     '+' to space, which the reference does NOT do — protect '+' first."""

@@ -3,7 +3,8 @@
 These are the engine's primitive shapes — the reference compiles every
 Context into one of them (Handler.pm:219-649): single-table grouped sum,
 one-dim-join grouped sum, date predicates, order/limit/offset, top-N,
-min/max bounds, ratios, and window-based series post-processing.
+min/max bounds, ratios, and series post-processing (the serving Graph
+view, ``plans.views.graph_rows``).
 
 Scale notes (100 TB posture):
 - fact scans group on low-cardinality keys => map-side partial aggregation,
@@ -11,17 +12,20 @@ Scale notes (100 TB posture):
 - dimension joins broadcast (nation/region/part/customer are tiny vs fact);
 - top-N is expressed as orderBy+limit so Spark plans TakeOrderedAndProject
   (no full sort, no full shuffle of sorted data);
-- window series ops run AFTER aggregation to day grain, so the windowed
-  input is |days|, not |events|.
+- series ops run AFTER aggregation to day grain, on the |days| rows the
+  Graph view collects, not on |events|.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irstats2_spark.catalog import register
 from irstats2_spark.operators.agg import exact_sums, fx
+from irstats2_spark.plans.builder import StatsStore
+from irstats2_spark.plans.context import Context
+from irstats2_spark.plans.views import graph_series
 from irstats2_spark.sources.testdata import load_table
 
 # Money/measure sums go through operators.agg.exact_sums (fixed-point
@@ -272,9 +276,28 @@ def t1_month_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_store(events: DataFrame) -> StatsStore:
+    """A one-fact store of per-day event counts, so the series rows below
+    run the serving Graph view (``views.graph_rows``): eprintid 0, the
+    int yyyyMMdd datestamp, one constant value, the count per day."""
+    daily = events.groupBy(
+        F.date_format("ts", "yyyyMMdd").cast("int").alias("datestamp")
+    ).agg(F.count(F.lit(1)).alias("count"))
+    fact = daily.select(
+        F.lit(0).alias("eprintid"), "datestamp", F.lit("events").alias("value"), "count"
+    )
+    return StatsStore(facts={"events": fact})
+
+
+def _day() -> Column:
+    """The series' int yyyyMMdd ``datestamp`` as the yyyy-MM-dd ``day``."""
+    d = F.to_date(F.col("datestamp").cast("string"), "yyyyMMdd")
+    return F.date_format(d, "yyyy-MM-dd").alias("day")
+
+
 # ---------------------------------------------------------------------------
 # T2 — date densification / gap fill (Utils.pm:135-215 + Graph.pm:101-161):
-# complete calendar sequence left-joined onto data, zeros for gaps.
+# the serving Graph view zero-fills every day of the window.
 # ---------------------------------------------------------------------------
 @register(
     "t2_densify",
@@ -293,23 +316,17 @@ def t1_month_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="T2 Utils.pm:135-215 — calendar densification with zero fill",
 )
 def t2_densify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.timeseries import densify_days
-
     ev = load_table(spark, "events", sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("c"))
+    store = _daily_store(ev.filter(F.col("event_type") == "purchase"))
+    series = graph_series(
+        spark, store, Context(datatype="events", from_date="20240101", to_date="20240130")
     )
-    dense = densify_days(spark, daily, "d", "c", "2024-01-01", "2024-01-30")
-    return dense.select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"), F.col("c").alias("count")
-    )
+    return series.select(_day(), "count")
 
 
 # ---------------------------------------------------------------------------
 # A6/A7 — running average + cumulative sum over the densified series
-# (Graph.pm:94-96,152-187). Window runs on day grain (post-aggregation).
+# (Graph.pm:94-96,152-187), added by the serving Graph view at day grain.
 # ---------------------------------------------------------------------------
 @register(
     "a6_a7_cumulative_running_avg",
@@ -328,17 +345,12 @@ def t2_densify(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="A6/A7 Graph.pm:94-187 — cumulative + int running average windows",
 )
 def a6_a7_cumulative_running_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.operators.timeseries import with_cumulative_and_average
-
-    ev = load_table(spark, "events", sf_dir)
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(F.count(F.lit(1)).alias("c"))
-    out = with_cumulative_and_average(daily, "d", "c")
-    return out.select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"),
-        F.col("c").alias("count"),
-        "cumulative",
-        "running_avg",
+    store = _daily_store(load_table(spark, "events", sf_dir))
+    series = graph_series(
+        spark, store, Context(datatype="events", range="_ALL_"),
+        cumulative=True, show_average=True,
     )
+    return series.select(_day(), "count", "cumulative", "running_avg")
 
 
 # ---------------------------------------------------------------------------

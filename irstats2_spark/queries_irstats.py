@@ -264,7 +264,7 @@ def referrer_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# F6 search-term extraction through the real explode/normalize path.
+# F6 search-term extraction through the nightly search_terms processor.
 # ---------------------------------------------------------------------------
 @register(
     "search_term_extraction",
@@ -299,19 +299,24 @@ def referrer_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="F6 SearchTerms.pm:76-198 — engine param routing + normalization",
 )
 def search_term_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.functions.text import search_term_counts
-
     ref = (
         F.when(F.col("user_id") % 3 == 0, "http://www.google.com/search?q=Spark+engine+the+x")
         .when(F.col("user_id") % 3 == 1, 'http://search.yahoo.com/search?p=Analytics+"quoted"')
         .otherwise("http://myrepo.org/cgi/search/simple?q=scale+测试")
     )
+    # the adapter drops user_id, which the referrer is built from
     ev = (
         load_table(spark, "events", sf_dir)
         .filter(F.col("event_type") == "click")
-        .withColumn("ref", ref)
+        .select(
+            (F.col("user_id") % 100).cast("int").alias("referent_id"),
+            ref.alias("referring_entity_id"),
+            F.lit(True).alias("is_download"),
+            F.date_format("ts", "yyyyMMdd").cast("int").alias("date_key"),
+        )
     )
-    return search_term_counts(ev, "ref", base_url="myrepo.org")
+    terms = P.search_terms(ev, base_url="myrepo.org")
+    return terms.groupBy(F.col("value").alias("word")).agg(F.sum("count").alias("count"))
 
 
 # ---------------------------------------------------------------------------

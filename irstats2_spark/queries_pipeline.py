@@ -2113,7 +2113,7 @@ def embed_text_stub_query(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(doc_id) AS keeper_id
     FROM built GROUP BY 1
     """,
-    doc="URL-keyed dedup for web corpora (functions/urls.canonicalize_url): "
+    doc="URL-keyed dedup for web corpora (pipeline/dedup.canonicalize_url): "
     "scheme/host case, default ports, fragments, tracking params "
     "(utm_*/fbclid/gclid/msclkid), param order, and trailing slashes all "
     "normalize away, so page variants collapse to one key — map-side "
@@ -2121,7 +2121,7 @@ def embed_text_stub_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every rule in SQL over the same synthesized variants",
 )
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from irstats2_spark.functions.urls import canonicalize_url
+    from irstats2_spark.pipeline.dedup import canonicalize_url
 
     docs = load_table(spark, "documents", sf_dir)
     d = docs.doc_id

@@ -42,8 +42,17 @@ def write_fact(fact: DataFrame, root: str, datatype: str) -> str:
     return path
 
 
+# A gold fact table as read back: ``write_fact``'s columns, the
+# ``datestamp`` partition column last.
+FACT_SCHEMA = "eprintid INT, value STRING, count BIGINT, datestamp INT"
+
+
 def read_fact(spark: SparkSession, root: str, datatype: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(root, f"fact_{datatype}"))
+    """One datatype's fact table, read with ``FACT_SCHEMA``: inferring the
+    schema would run a Spark job over the parquet footers on every open.
+    A missing table still raises PATH_NOT_FOUND."""
+    path = os.path.join(root, f"fact_{datatype}")
+    return spark.read.schema(FACT_SCHEMA).parquet(path)
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:

@@ -1656,7 +1656,7 @@ def test_canonicalize_url_rules(spark):
     """Every canonicalization rule on one fixture each: case, default
     ports, fragments, tracking params, param order, trailing slashes,
     scheme default, and non-default ports kept."""
-    from irstats2_spark.functions.urls import canonicalize_url
+    from irstats2_spark.pipeline.dedup import canonicalize_url
 
     cases = [
         ("HTTPS://WWW.Ex.COM:443/A/B/?b=2&utm_source=x&a=1#f",

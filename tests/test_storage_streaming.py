@@ -73,6 +73,33 @@ def test_write_and_replay(spark, tmp_path):
     assert rows[(2, 20240103)] == 1
 
 
+def test_read_fact_runs_no_job_and_keeps_the_written_shape(spark, tmp_path):
+    """Opening a fact table reads its fixed schema: no Spark job infers
+    one from the parquet footers, and the columns and dtypes are those
+    written, partition column last. A missing table still raises."""
+    import uuid
+
+    from pyspark.errors import AnalysisException
+
+    root = str(tmp_path)
+    write_fact(_fact(spark, [(1, 20240101, "downloads", 5)]), root, "downloads")
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = read_fact(spark, root, "downloads")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert got.dtypes == [
+        ("eprintid", "int"), ("value", "string"), ("count", "bigint"), ("datestamp", "int")
+    ]
+    assert [tuple(r) for r in got.collect()] == [(1, "downloads", 5, 20240101)]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_fact(spark, root, "views")
+
+
 def test_full_overwrite_after_replay_drops_stale_days(spark, tmp_path):
     """A replay overwrites its day partitions dynamically on its own
     writer; it leaves the session setting alone, so a later full
